@@ -62,6 +62,47 @@ def _now_iso() -> str:
     return datetime.now(timezone.utc).isoformat()
 
 
+def _record_version(state: TableState | None, name: str, version: int,
+                    df: DataFrame, row_count, description: str,
+                    max_row_id) -> TableState:
+    """Record a just-written ``version`` as ``name``'s current one, in
+    ``state`` (None for a new table) — the bookkeeping both backends'
+    ``write_version`` share. ``row_count`` / ``max_row_id`` may be
+    thunks reading ``Dataset.observe`` metrics: they resolve only AFTER
+    the backend's write action has fired the observation (register rides
+    them on the write job instead of paying separate scan passes)."""
+    row_count = int(row_count() if callable(row_count) else row_count)
+    if callable(max_row_id):
+        max_row_id = max_row_id()
+    now = _now_iso()
+    if state is None:
+        state = TableState(name=name, description=description, version=version,
+                           registered_at=now, updated_at=now)
+    state.version = version
+    state.updated_at = now
+    state.versions[version] = VersionRecord(
+        version=version, row_count=row_count, columns=df.columns,
+        created_at=now, description=description,
+        max_row_id=None if max_row_id is None else int(max_row_id),
+    )
+    return state
+
+
+def _replace_record(state: TableState, version: int, df: DataFrame,
+                    row_count: int) -> None:
+    """Re-record a version whose contents were rewritten in place: data
+    and row count change, version number and created_at stay. Rewrites
+    only REMOVE/REPLACE rows, so the old ``max_row_id`` stays a valid
+    (possibly loose) upper bound — looseness is safe."""
+    rec = state.versions[version]
+    state.versions[version] = VersionRecord(
+        version=version, row_count=row_count, columns=df.columns,
+        created_at=rec.created_at, description=rec.description,
+        max_row_id=rec.max_row_id,
+    )
+    state.updated_at = _now_iso()
+
+
 class MemoryVersionStore:
     """Version store holding DataFrame references in-process."""
 
@@ -85,7 +126,6 @@ class MemoryVersionStore:
     # -- data -------------------------------------------------------------
     def write_version(self, name: str, version: int, df: DataFrame, row_count,
                       description: str = "", max_row_id=None) -> None:
-        now = _now_iso()
         # Freeze the version's contents, like the parquet backend's write
         # does: __row_id__ comes from monotonically_increasing_id() and
         # would otherwise be recomputed per action — if the input plan's
@@ -93,24 +133,9 @@ class MemoryVersionStore:
         # tie-break ids could differ between reads of the same version,
         # breaking the "first input row wins" contract.
         self._data.setdefault(name, {})[version] = df.localCheckpoint(eager=True)
-        # row_count / max_row_id may be thunks reading Dataset.observe
-        # metrics — they resolve only AFTER the action above has fired
-        # the observation (register rides them on the write job instead
-        # of paying separate scan passes)
-        row_count = int(row_count() if callable(row_count) else row_count)
-        if callable(max_row_id):
-            max_row_id = max_row_id()
-        state = self._meta.get(name)
-        if state is None:
-            state = TableState(name=name, description=description, version=version,
-                               registered_at=now, updated_at=now)
-            self._meta[name] = state
-        state.version = version
-        state.updated_at = now
-        state.versions[version] = VersionRecord(
-            version=version, row_count=row_count, columns=df.columns,
-            created_at=now, description=description,
-            max_row_id=None if max_row_id is None else int(max_row_id),
+        self._meta[name] = _record_version(
+            self._meta.get(name), name, version, df, row_count, description,
+            max_row_id,
         )
 
     def read_version(self, name: str, version: int) -> DataFrame:
@@ -120,16 +145,8 @@ class MemoryVersionStore:
                         row_count: int) -> None:
         """In-place replace a version's contents (GDPR erasure path) —
         version number and created_at stay, data and row_count change."""
-        rec = self._meta[name].versions[version]
         self._data[name][version] = df.localCheckpoint(eager=True)
-        # rewrites only REMOVE/REPLACE rows, so the old bound stays a
-        # valid (possibly loose) upper bound — looseness is safe
-        self._meta[name].versions[version] = VersionRecord(
-            version=version, row_count=row_count, columns=df.columns,
-            created_at=rec.created_at, description=rec.description,
-            max_row_id=rec.max_row_id,
-        )
-        self._meta[name].updated_at = _now_iso()
+        _replace_record(self._meta[name], version, df, row_count)
 
     def drop_version(self, name: str, version: int) -> None:
         self._data[name].pop(version, None)
@@ -229,36 +246,26 @@ class ParquetVersionStore:
     def _version_path(self, name: str, version: int) -> Path:
         return self.root / name / f"v={version}"
 
-    def write_version(self, name: str, version: int, df: DataFrame, row_count,
-                      description: str = "", max_row_id=None) -> None:
+    def _write_parquet(self, df: DataFrame, path: Path) -> None:
+        """The storage layout every version write shares: optional
+        ``sortWithinPartitions`` and ``partitionBy`` on the columns the
+        frame actually has."""
         out = df
-        if self.sort_within_partitions:
-            cols = [c for c in self.sort_within_partitions if c in df.columns]
-            if cols:
-                out = out.sortWithinPartitions(*cols)
+        cols = [c for c in self.sort_within_partitions or () if c in df.columns]
+        if cols:
+            out = out.sortWithinPartitions(*cols)
         writer = out.write.mode("overwrite")
         if self.partition_by and self.partition_by in df.columns:
             writer = writer.partitionBy(self.partition_by)
-        writer.parquet(str(self._version_path(name, version)))
-        # thunks resolve after the write action (observe-metric stats)
-        row_count = int(row_count() if callable(row_count) else row_count)
-        if callable(max_row_id):
-            max_row_id = max_row_id()
+        writer.parquet(str(path))
 
-        now = _now_iso()
-        if self.exists(name):
-            state = self._load_meta(name)
-        else:
-            state = TableState(name=name, description=description, version=version,
-                               registered_at=now, updated_at=now)
-        state.version = version
-        state.updated_at = now
-        state.versions[version] = VersionRecord(
-            version=version, row_count=row_count, columns=df.columns,
-            created_at=now, description=description,
-            max_row_id=None if max_row_id is None else int(max_row_id),
-        )
-        self._save_meta(state)
+    def write_version(self, name: str, version: int, df: DataFrame, row_count,
+                      description: str = "", max_row_id=None) -> None:
+        self._write_parquet(df, self._version_path(name, version))
+        self._save_meta(_record_version(
+            self._load_meta(name) if self.exists(name) else None,
+            name, version, df, row_count, description, max_row_id,
+        ))
 
     def read_version(self, name: str, version: int) -> DataFrame:
         return self.spark.read.parquet(str(self._version_path(name, version)))
@@ -274,27 +281,11 @@ class ParquetVersionStore:
         row_count change."""
         final = self._version_path(name, version)
         tmp = final.with_name(final.name + ".__rewrite__")
-        out = df
-        if self.sort_within_partitions:
-            cols = [c for c in self.sort_within_partitions if c in df.columns]
-            if cols:
-                out = out.sortWithinPartitions(*cols)
-        writer = out.write.mode("overwrite")
-        if self.partition_by and self.partition_by in df.columns:
-            writer = writer.partitionBy(self.partition_by)
-        writer.parquet(str(tmp))
+        self._write_parquet(df, tmp)
         shutil.rmtree(final, ignore_errors=True)
         tmp.rename(final)
         state = self._load_meta(name)
-        rec = state.versions[version]
-        # rewrites only REMOVE/REPLACE rows, so the old bound stays a
-        # valid (possibly loose) upper bound — looseness is safe
-        state.versions[version] = VersionRecord(
-            version=version, row_count=row_count, columns=df.columns,
-            created_at=rec.created_at, description=rec.description,
-            max_row_id=rec.max_row_id,
-        )
-        state.updated_at = _now_iso()
+        _replace_record(state, version, df, row_count)
         self._save_meta(state)
 
     def drop_version(self, name: str, version: int) -> None:

@@ -224,11 +224,7 @@ class FeatureStore:
         return [
             n
             for n in self._backend.table_names()
-            if not n.endswith(self._ONLINE_SUFFIX)
-            and not n.endswith(self._DATASET_SUFFIX)
-            and not n.endswith(self._VINDEX_DATA_SUFFIX)
-            and not n.endswith(self._VINDEX_MODEL_SUFFIX)
-            and not n.endswith(self._DINDEX_DATA_SUFFIX)
+            if not n.endswith(self._HIDDEN_SUFFIXES)
         ]
 
     def list_tables(self) -> list[FeatureTableInfo]:
@@ -276,51 +272,23 @@ class FeatureStore:
                 )
             # the cascade drops EXACTLY what _spec_references reported —
             # one rule, no drift between the message and the action
-            dropped_tables = []
             for kind, n in refs:
                 if kind == "derived view":
                     self._derived.pop(n, None)
                 elif kind == "feature service":
                     self._services.pop(n, None)
-                elif kind == "window view":
-                    self._window_views.pop(n, None)
-                elif kind == "vector index":
-                    self._vector_indexes.pop(n, None)
-                    for suffix in (
-                        self._VINDEX_DATA_SUFFIX,
-                        self._VINDEX_MODEL_SUFFIX,
-                    ):
-                        vname = n + suffix
-                        if self._backend.exists(vname):
-                            self._backend.drop_table(vname)
-                            dropped_tables.append(vname)
-                elif kind == "probe":
-                    self._probes.pop(n, None)
-                elif kind == "dedup index":
-                    self._dedup_indexes.pop(n, None)
-                    dn = n + self._DINDEX_DATA_SUFFIX
-                    if self._backend.exists(dn):
-                        self._backend.drop_table(dn)
-                        dropped_tables.append(dn)
-                else:  # rollup
-                    self._rollups.pop(n, None)
-                    rname = n + self._ROLLUP_SUFFIX
-                    if self._backend.exists(rname):
-                        self._backend.drop_table(rname)
-                        dropped_tables.append(rname)
-        else:
-            dropped_tables = []
+                else:
+                    getattr(self, self._SOURCED_SPECS[kind][0]).pop(n, None)
+                    self._drop_state_tables(kind, n)
         self._backend.drop_table(name)
-        dropped_tables.append(name)
         online = name + self._ONLINE_SUFFIX
         if self._backend.exists(online):
             self._backend.drop_table(online)
-        dropped_tables.append(online)
         # a later re-creation restarts each dropped table (incl. the
-        # online view and cascaded rollup state) at version 1, possibly
-        # with a different key shape — stale (table, version) entries
-        # must go for EVERY dropped table, not just the base name
-        gone = set(dropped_tables)
+        # online view; cascaded state tables purge their own) at version
+        # 1, possibly with a different key shape — stale (table,
+        # version) entries must go for EVERY dropped table
+        gone = {name, online}
         self._key_cache = {
             k: v for k, v in self._key_cache.items() if k[0] not in gone
         }
@@ -1071,18 +1039,13 @@ class FeatureStore:
         recording that fact costs one registry save and no data scan."""
         self._invalidate_online_meta(name)
         dirty = False
-        for spec in self._rollups.values():
-            if spec["src"] == name and not spec.get("rewritten"):
-                spec["rewritten"] = True
-                dirty = True
-        for spec in self._vector_indexes.values():
-            if spec["src"] == name and not spec.get("rewritten"):
-                spec["rewritten"] = True
-                dirty = True
-        for spec in self._dedup_indexes.values():
-            if spec["src"] == name and not spec.get("rewritten"):
-                spec["rewritten"] = True
-                dirty = True
+        for attr, _, suffixes in self._SOURCED_SPECS.values():
+            if not suffixes:  # no derived state to invalidate
+                continue
+            for spec in getattr(self, attr).values():
+                if spec["src"] == name and not spec.get("rewritten"):
+                    spec["rewritten"] = True
+                    dirty = True
         if dirty:
             self._save_registry()
 
@@ -1583,10 +1546,339 @@ class FeatureStore:
         return True
 
     # ------------------------------------------------------------------ #
-    # incremental rollup maintenance (materialized aggregate views)
+    # derived state: ONE lifecycle for rollups, vector indexes, dedup
+    # indexes (and probes, where a step applies)
     # ------------------------------------------------------------------ #
     _ROLLUP_SUFFIX = "__rollup"
+    _VINDEX_DATA_SUFFIX = "__vindex"
+    _VINDEX_MODEL_SUFFIX = "__vindex_model"
+    _DINDEX_DATA_SUFFIX = "__dedup"
+    # backend tables that are implementation details, not catalog
+    # entries (rollup state stays listed: it is a queryable table)
+    _HIDDEN_SUFFIXES = (
+        _ONLINE_SUFFIX, _DATASET_SUFFIX, _VINDEX_DATA_SUFFIX,
+        _VINDEX_MODEL_SUFFIX, _DINDEX_DATA_SUFFIX,
+    )
+    # Registry specs that read ONE source table, in the order delete()
+    # reports them: kind -> (spec dict attribute, spec key naming the
+    # source, backend state-table suffixes with the data table first).
+    # A kind WITH state tables is derived state: it covers exactly the
+    # source snapshot its spec records (src_version / src_rows /
+    # watermark), so a history rewrite flags it ``rewritten`` and every
+    # step below — pin, publish, fold, compact, stale, drop — is the
+    # same code for each. The method names follow the kind
+    # (create_vector_index, refresh_dedup_index, ...).
+    _SOURCED_SPECS = {
+        "rollup": ("_rollups", "src", (_ROLLUP_SUFFIX,)),
+        "window view": ("_window_views", "source", ()),
+        "vector index": (
+            "_vector_indexes", "src",
+            (_VINDEX_DATA_SUFFIX, _VINDEX_MODEL_SUFFIX),
+        ),
+        "dedup index": ("_dedup_indexes", "src", (_DINDEX_DATA_SUFFIX,)),
+        "probe": ("_probes", "src", ()),
+    }
 
+    def _derived_spec(self, kind: str, name: str) -> dict:
+        spec = getattr(self, self._SOURCED_SPECS[kind][0]).get(name)
+        if spec is None:
+            raise FeatureStoreError(f"Unknown {kind}: '{name}'")
+        return spec
+
+    def _derived_data_table(self, kind: str, name: str) -> str:
+        return name + self._SOURCED_SPECS[kind][2][0]
+
+    @staticmethod
+    def _rewritten_error(kind: str, name: str, spec: dict) -> FeatureStoreError:
+        return FeatureStoreError(
+            f"{kind.capitalize()} '{name}': source '{spec['src']}' history "
+            f"was rewritten since the last build; rebuild with "
+            f"create_{kind.replace(' ', '_')}()."
+        )
+
+    def _derived_lag(
+        self, kind: str, name: str
+    ) -> tuple[dict, FeatureStoreError | None]:
+        """(spec, why it no longer covers its source — or None). The
+        staleness gate, metadata only (no data scan): a history rewrite,
+        or any version bump or row-count drift of the source since the
+        last build/refresh (append or re-register alike). The rewrite
+        flag comes first: a count-preserving rewrite can leave version
+        accounting looking current only through the flag."""
+        spec = self._derived_spec(kind, name)
+        if spec.get("rewritten"):
+            return spec, self._rewritten_error(kind, name, spec)
+        src_meta = self._backend.meta(spec["src"])
+        cur_rows = src_meta.versions[src_meta.version].row_count
+        if src_meta.version != spec["src_version"] or cur_rows != spec["src_rows"]:
+            m = kind.replace(" ", "_")
+            return spec, FeatureStoreError(
+                f"{kind.capitalize()} '{name}' is STALE: source "
+                f"'{spec['src']}' is at version {src_meta.version} with "
+                f"{cur_rows} rows, but the index covers version "
+                f"{spec['src_version']} with {spec['src_rows']} rows. "
+                f"Run refresh_{m}('{name}') after appends, or "
+                f"create_{m}() after a re-register."
+            )
+        return spec, None
+
+    def _serving_spec(self, kind: str, name: str) -> dict:
+        """The serving gate: an index that no longer covers its source
+        REFUSES — a half-covering index would silently miss neighbors
+        or under-report duplicates."""
+        spec, lag = self._derived_lag(kind, name)
+        if lag is not None:
+            raise lag
+        return spec
+
+    def _pin_source(self, name: str) -> tuple[int, int, int, DataFrame]:
+        """Observe-then-read snapshot pin for every derived-state build
+        and refresh: capture the source's version, row count and row-id
+        watermark FIRST, then read exactly that version. append() never
+        touches the registry generation, so the CAS probe cannot see a
+        concurrent append — with publish-time FRESH watermark/meta
+        reads, an append landing mid-build was silently absorbed (the
+        spec recorded post-append accounting against pre-append state,
+        the staleness check passed, and the appended rows sat below the
+        watermark forever — never folded). Pinning makes the spec LAG
+        the source instead: serving refuses stale, the next refresh
+        folds the missed delta. Returns (version, row_count,
+        max_row_id, pinned DataFrame)."""
+        self._require_table(name)
+        st = self._backend.meta(name)
+        ver = int(st.version)
+        rec = st.versions[ver]
+        rows = int(rec.row_count)
+        m = getattr(rec, "max_row_id", None)
+        df = self._backend.read_version(name, ver)
+        if m is None:  # legacy version records: scan the PINNED version
+            m = df.agg(F.max(ROW_ID_COL)).collect()[0][0] or 0
+        return ver, rows, int(m), df
+
+    def _write_state(
+        self, table: str, df: DataFrame, description: str
+    ) -> tuple[int, int]:
+        """Write ``df`` as the NEXT version of state table ``table``
+        (never overwriting the version the published spec pins); the
+        row count rides the write, so the encode runs once. Returns
+        (version, rows)."""
+        df, n_rows = self._observed_count(df)
+        ver = (
+            self._backend.meta(table).version + 1
+            if self._backend.exists(table) else 1
+        )
+        self._backend.write_version(table, ver, df, n_rows, description)
+        return ver, n_rows()
+
+    @staticmethod
+    def _pin_fields(kind: str, src_version: int, frags: list[int]) -> dict:
+        """Spec fields pinning the state version(s) a publish covers.
+        Rollup specs pin one ``state_version`` (their registry layout
+        predates source-version pins); index specs pin the fragment
+        chain plus the source version it covers."""
+        if kind == "rollup":
+            return {"state_version": frags[-1]}
+        return {
+            "src_version": src_version,
+            "data_version": frags[-1],
+            "data_versions": list(frags),
+        }
+
+    def _publish_derived(
+        self,
+        kind: str,
+        name: str,
+        spec: dict | None,
+        keep: dict[str, list[int]] | None = None,
+    ) -> None:
+        """PUBLISH-THEN-PRUNE: CAS-publish ``spec`` as ``name``'s spec
+        (None removes it), then drop every version of each state table in
+        ``keep`` that the new spec does not pin. A refused publish
+        restores the previous in-memory spec and raises before any
+        prune, so the old spec + old state stay fully consistent: the
+        just-written versions are unreferenced orphans (reclaimed by the
+        next successful publish), never a spec/state mismatch or a
+        double-folded delta."""
+        specs = getattr(self, self._SOURCED_SPECS[kind][0])
+        prev = specs.get(name)
+        if spec is None:
+            specs.pop(name, None)
+        else:
+            specs[name] = spec
+        try:
+            self._save_registry()
+        except BaseException:
+            if prev is None:
+                specs.pop(name, None)
+            else:
+                specs[name] = prev
+            raise
+        for table, versions in (keep or {}).items():
+            self._prune_state_versions(table, versions)
+
+    def _prune_state_versions(self, name: str, keep: Iterable[int]) -> None:
+        """Drop every state-table version except ``keep`` (the one(s)
+        the just-published spec pins). Runs strictly AFTER
+        _save_registry succeeds; failures here leave harmless orphan
+        versions."""
+        keep_set = set(keep)
+        for v in self._backend.versions(name):
+            if v not in keep_set:
+                self._backend.drop_version(name, v)
+        self._key_cache = {
+            k: v for k, v in self._key_cache.items() if k[0] != name
+        }
+
+    def _drop_state_tables(self, kind: str, name: str) -> None:
+        """Drop ``name``'s state tables and their key-cache entries — a
+        re-created same-named spec restarts its state at version 1, so
+        no stale (table, version) key shape may survive."""
+        gone = {name + suffix for suffix in self._SOURCED_SPECS[kind][2]}
+        for table in gone:
+            if self._backend.exists(table):
+                self._backend.drop_table(table)
+        self._key_cache = {
+            k: v for k, v in self._key_cache.items() if k[0] not in gone
+        }
+
+    def _drop_derived(self, kind: str, name: str) -> bool:
+        """Release a spec AND its state tables; False if absent (the
+        ``delete`` contract). The spec removal CAS-publishes FIRST and
+        the state drops after: dropping tables under a refused save
+        would leave the on-disk spec dangling."""
+        if name not in getattr(self, self._SOURCED_SPECS[kind][0]):
+            return False
+        self._publish_derived(kind, name, None)
+        self._drop_state_tables(kind, name)
+        return True
+
+    def _pinned_state_versions(self, spec: dict, dname: str) -> list[int]:
+        """The state-table version(s) a spec pins: the append-mode
+        fragment chain (``data_versions``), a single pin
+        (``data_version``, or a rollup's ``state_version``), or latest
+        for legacy registries that predate pinning."""
+        if spec.get("data_versions"):
+            return [int(v) for v in spec["data_versions"]]
+        pin = spec.get("data_version") or spec.get("state_version")
+        if pin:
+            return [int(pin)]
+        return [self._backend.versions(dname)[-1]]
+
+    def _derived_state(self, kind: str, name: str) -> DataFrame:
+        """The data state table at the version(s) the SPEC pins — never a
+        just-written-but-unpublished orphan version. A refreshed index
+        is a FRAGMENT CHAIN (base + one delta fragment per refresh):
+        the read is a union of the pinned fragments, each scan still
+        pruned by the serving predicate; compaction folds the chain
+        back to one version."""
+        spec = self._derived_spec(kind, name)
+        dname = self._derived_data_table(kind, name)
+        out = None
+        for v in self._pinned_state_versions(spec, dname):
+            d = self._backend.read_version(dname, v)
+            out = d if out is None else out.unionByName(d)
+        return out
+
+    def _index_info(self, kind: str, name: str) -> dict[str, Any]:
+        """A copy of an index spec plus its fragment-chain length."""
+        spec = self._derived_spec(kind, name)
+        return {
+            **spec,
+            "params": dict(spec["params"]),
+            "n_fragments": len(
+                self._pinned_state_versions(
+                    spec, self._derived_data_table(kind, name)
+                )
+            ),
+        }
+
+    def _fold_derived(self, kind: str, name: str, encode, merge=None) -> int:
+        """The refresh step every derived state shares: fold rows
+        APPENDED to the source since the last (re)build, O(delta).
+
+        Guards, in order: the ``rewritten`` flag (a count-preserving
+        rewrite satisfies row accounting vacuously — fresh row ids can
+        land at-or-below the watermark — see _invalidate_on_rewrite);
+        the fail-fast CAS probe, BEFORE any state write (state folded
+        under a stale registry view would re-fold the same delta after
+        reopen — sums, unlike the online argmax, are not idempotent);
+        the snapshot pin; and the append-only row accounting — every
+        source row is either base (counted at the last sync) or delta,
+        so a re-register (rewritten history, fresh row ids) breaks the
+        equation and must rebuild.
+
+        ``encode`` maps the delta rows to state rows. Indexes append
+        the encoded delta as a new FRAGMENT and the spec pins the
+        extended chain — refresh I/O is O(delta) end to end. Rollups
+        pass ``merge(state, encoded delta)``, written as one new
+        version. An empty delta writes nothing and republishes the
+        accounting. Returns the source's row count."""
+        spec = self._derived_spec(kind, name)
+        if spec.get("rewritten"):
+            raise self._rewritten_error(kind, name, spec)
+        m = kind.replace(" ", "_")
+        self._assert_registry_current(f"refresh_{m}('{name}')")
+        src_version, cur_rows, watermark, raw = self._pin_source(spec["src"])
+        delta = raw.filter(F.col(ROW_ID_COL) > spec["watermark"])
+        delta_rows = delta.count()
+        if spec["src_rows"] + delta_rows != cur_rows:
+            raise FeatureStoreError(
+                f"{kind.capitalize()} '{name}': source '{spec['src']}' was "
+                f"re-registered; rebuild with create_{m}()."
+            )
+        dname = self._derived_data_table(kind, name)
+        frags = self._pinned_state_versions(spec, dname)
+        if delta_rows:
+            state = encode(delta)
+            if merge is not None:
+                state = merge(self._derived_state(kind, name), state)
+                frags = []
+            ver, _ = self._write_state(
+                dname, state,
+                f"refresh ({delta_rows} delta rows) of {kind} '{name}'",
+            )
+            frags = frags + [ver]
+        self._publish_derived(
+            kind, name,
+            {
+                **spec,
+                "watermark": watermark,  # the PINNED snapshot's bound
+                "src_rows": cur_rows,
+                **self._pin_fields(kind, src_version, frags),
+            },
+            {dname: frags},
+        )
+        return cur_rows
+
+    def _compact_derived(self, kind: str, name: str, layout=None) -> int:
+        """Fold an index's refresh FRAGMENT CHAIN back into one state
+        version — the OPTIMIZE-style maintenance job that pairs with
+        append-mode refresh. Serving results are IDENTICAL before and
+        after: physical layout only, so no source re-read and no
+        watermark change. ``layout`` optionally clusters the rewrite.
+        Publish-then-prune as everywhere. Returns the number of
+        fragments folded (1 = already compact, still re-pinned)."""
+        spec = self._derived_spec(kind, name)
+        self._assert_registry_current(
+            f"compact_{kind.replace(' ', '_')}('{name}')"
+        )
+        dname = self._derived_data_table(kind, name)
+        frags = self._pinned_state_versions(spec, dname)
+        merged = self._derived_state(kind, name)
+        ver, _ = self._write_state(
+            dname, merged if layout is None else layout(merged),
+            f"compaction of {len(frags)} fragment(s) of {kind} '{name}'",
+        )
+        self._publish_derived(
+            kind, name,
+            {**spec, "data_version": ver, "data_versions": [ver]},
+            {dname: [ver]},
+        )
+        return len(frags)
+
+    # ------------------------------------------------------------------ #
+    # incremental rollup maintenance (materialized aggregate views)
+    # ------------------------------------------------------------------ #
     def create_rollup(
         self,
         name: str,
@@ -1613,142 +1905,55 @@ class FeatureStore:
         O(delta) + O(group cardinality), the same incremental-view
         contract a warehouse's materialized view gives (append-only;
         a full re-register of the source invalidates the rollup and
-        raises on the next refresh)."""
+        raises on the next refresh). The aggregate covers the snapshot
+        pinned at the start of the build: an append landing mid-build
+        is folded by the next refresh, never lost."""
         self._require_table(name)
-        # fail fast if the publish would be refused (round-11: rollups
-        # share the vector indexes' publish-then-prune contract — a
-        # refused save must never leave folded state the on-disk
-        # watermark doesn't cover, or the next refresh double-counts)
         self._assert_registry_current(f"create_rollup('{rollup}')")
-        src = self._current(name)
-        state = self._rollup_state(src, group_cols, sum_cols, distinct_cols)
-        # count rides the write (one pass — the aggregate used to run
-        # twice: once for count, once for the write; r12 optimization)
-        state, n_rows = self._observed_count(state)
+        _, src_rows, watermark, src = self._pin_source(name)
         rname = rollup + self._ROLLUP_SUFFIX
-        sver = (
-            self._backend.meta(rname).version + 1
-            if self._backend.exists(rname) else 1
+        sver, row_count = self._write_state(
+            rname,
+            self._rollup_state(src, group_cols, sum_cols, distinct_cols),
+            f"rollup of '{name}'",
         )
-        self._backend.write_version(
-            rname, sver, state, n_rows, f"rollup of '{name}'"
+        self._publish_derived(
+            "rollup", rollup,
+            {
+                "src": name,
+                "group_cols": tuple(group_cols),
+                "sum_cols": tuple(sum_cols),
+                "distinct_cols": tuple(distinct_cols),
+                "watermark": watermark,
+                "src_rows": src_rows,
+                "state_version": sver,
+            },
+            {rname: [sver]},
         )
-        row_count = n_rows()
-        # metadata watermark (observed at publish) — no history scan
-        watermark = self._max_row_id(name)
-        meta = self._backend.meta(name)
-        prev_spec = self._rollups.get(rollup)
-        self._rollups[rollup] = {
-            "src": name,
-            "group_cols": tuple(group_cols),
-            "sum_cols": tuple(sum_cols),
-            "distinct_cols": tuple(distinct_cols),
-            "watermark": int(watermark),
-            "src_rows": meta.versions[meta.version].row_count,
-            "state_version": sver,
-        }
-        try:
-            self._save_registry()
-        except BaseException:
-            if prev_spec is None:
-                self._rollups.pop(rollup, None)
-            else:
-                self._rollups[rollup] = prev_spec
-            raise
-        self._prune_state_versions(rname, sver)
         return row_count
 
     def refresh_rollup(self, rollup: str) -> int:
         """Fold rows appended to the source since the last (re)build into
         the rollup state without touching already-aggregated history;
         returns the refreshed row count. No-op when nothing was appended."""
-        spec = self._rollups.get(rollup)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown rollup: '{rollup}'")
-        if spec.get("rewritten"):
-            # rewrite flag beats row accounting: a count-preserving
-            # rewrite (merge/upsert/erase+append) satisfies the
-            # base+delta equation vacuously — see _invalidate_on_rewrite
-            raise FeatureStoreError(
-                f"Rollup '{rollup}': source '{spec['src']}' history was "
-                "rewritten since the last build; rebuild with "
-                "create_rollup()."
-            )
-        # fail fast BEFORE folding state under a stale registry view
-        # (round-11: the vector-index double-fold hazard applies to
-        # rollup SUMS verbatim — and sums, unlike the online argmax,
-        # are NOT idempotent under a re-fold)
-        self._assert_registry_current(f"refresh_rollup('{rollup}')")
-        src_meta = self._backend.meta(spec["src"])
-        src = self._current(spec["src"])
-        delta = src.filter(F.col(ROW_ID_COL) > spec["watermark"])
-        # Append-only guard by row accounting: every row must be either
-        # base (counted at last sync) or delta. A re-register rewrites
-        # history (fresh row ids), breaks the equation, and must rebuild —
-        # merging would double- or under-count.
-        delta_rows = delta.count()
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        if spec["src_rows"] + delta_rows != cur_rows:
-            raise FeatureStoreError(
-                f"Rollup '{rollup}': source '{spec['src']}' was re-registered; "
-                "rebuild with create_rollup()."
-            )
+        spec = self._derived_spec("rollup", rollup)
+        group_cols, sum_cols = spec["group_cols"], spec["sum_cols"]
+        distinct_cols = spec.get("distinct_cols", ())
+        self._fold_derived(
+            "rollup", rollup,
+            lambda delta: self._rollup_state(
+                delta, group_cols, sum_cols, distinct_cols
+            ),
+            merge=lambda prev, partial: self._merge_rollup(
+                prev, partial, group_cols, sum_cols, distinct_cols
+            ),
+        )
         rname = rollup + self._ROLLUP_SUFFIX
-        prev = self._rollup_state_df(rollup)
-        partial = self._rollup_state(
-            delta,
-            spec["group_cols"],
-            spec["sum_cols"],
-            spec.get("distinct_cols", ()),
-        )
-        merged = self._merge_rollup(
-            prev,
-            partial,
-            spec["group_cols"],
-            spec["sum_cols"],
-            spec.get("distinct_cols", ()),
-        )
-        # count rides the write — the merge used to run twice (r12)
-        merged, n_rows = self._observed_count(merged)
-        # publish-then-prune: the spec pins the new state version; a
-        # refused publish keeps serving (and next-refreshing from) the
-        # OLD version — the folded merge is an orphan, never a
-        # double-counted delta
-        sver = self._backend.meta(rname).version + 1
-        self._backend.write_version(
-            rname, sver, merged, n_rows,
-            f"incremental refresh of rollup '{rollup}'",
-        )
-        row_count = n_rows()
-        prev_fields = {
-            k: spec.get(k)
-            for k in ("watermark", "src_rows", "state_version")
-        }
-        # metadata watermark (observed at publish) — no history scan
-        spec["watermark"] = int(self._max_row_id(spec["src"]))
-        spec["src_rows"] = cur_rows
-        spec["state_version"] = sver
-        try:
-            self._save_registry()
-        except BaseException:
-            spec.update(prev_fields)
-            raise
-        self._prune_state_versions(rname, sver)
-        return row_count
-
-    def _rollup_state_df(self, rollup: str) -> DataFrame:
-        """The rollup state at the version the SPEC pins (legacy
-        registries without the pin fall back to latest) — never a
-        just-written-but-unpublished orphan version."""
-        spec = self._rollups[rollup]
-        rname = rollup + self._ROLLUP_SUFFIX
-        ver = spec.get("state_version") or self._backend.versions(rname)[-1]
-        return self._backend.read_version(rname, ver)
+        ver = self._pinned_state_versions(self._rollups[rollup], rname)[0]
+        return self._backend.meta(rname).versions[ver].row_count
 
     def get_rollup(self, rollup: str) -> DataFrame:
-        if rollup not in self._rollups:
-            raise FeatureStoreError(f"Unknown rollup: '{rollup}'")
-        return self._rollup_state_df(rollup)
+        return self._derived_state("rollup", rollup)
 
     def list_rollups(self) -> list[str]:
         return sorted(self._rollups)
@@ -1756,27 +1961,8 @@ class FeatureStore:
     def drop_rollup(self, rollup: str) -> bool:
         """Release a rollup spec AND its materialized state table.
         Returns False if absent — never raises for a missing rollup (the
-        ``delete`` contract). Publish-then-prune: the spec removal
-        CAS-publishes FIRST (restored on refusal), the state table drops
-        after — never a dangling on-disk spec."""
-        spec = self._rollups.pop(rollup, None)
-        if spec is None:
-            return False
-        try:
-            self._save_registry()
-        except BaseException:
-            self._rollups[rollup] = spec
-            raise
-        rname = rollup + self._ROLLUP_SUFFIX
-        if self._backend.exists(rname):
-            self._backend.drop_table(rname)
-        # mirror delete(cascade=True)'s invalidation: a re-created
-        # same-named rollup restarts its state table, so a stale
-        # (rname, version) key-shape entry must not survive
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != rname
-        }
-        return True
+        ``delete`` contract); see _drop_derived for the ordering."""
+        return self._drop_derived("rollup", rollup)
 
     @staticmethod
     def _rollup_state(
@@ -1824,8 +2010,6 @@ class FeatureStore:
     # ------------------------------------------------------------------ #
     # persisted vector indexes (versioned ANN: build once, serve many)
     # ------------------------------------------------------------------ #
-    _VINDEX_DATA_SUFFIX = "__vindex"
-    _VINDEX_MODEL_SUFFIX = "__vindex_model"
     _VINDEX_METHODS = ("ivf", "pq", "lsh", "ivfpq", "sq")
     # internal columns of the encoded state table + knn output columns;
     # composite natural keys must not shadow them (round-11 ADVICE)
@@ -2079,116 +2263,39 @@ class FeatureStore:
                 "plane_id INT, plane ARRAY<DOUBLE>",
             )
             data = lsh_bucketize_with_planes(src, planes)
-        # the count rides the write as an observed metric (the dedup
-        # index's one-job publish): the encode is the expensive map-only
-        # pass, it must run ONCE — a separate data.count() evaluated the
-        # whole encode a second time (r12 optimization round, guide §1.2)
-        data, n_rows = self._observed_count(data)
         mname = index + self._VINDEX_MODEL_SUFFIX
         dname = index + self._VINDEX_DATA_SUFFIX
-        # PUBLISH-THEN-PRUNE (round-11 ADVICE): write the new state as
-        # fresh VERSIONS, CAS-publish the spec that PINS those versions,
-        # and only then drop superseded versions — a refused publish
-        # leaves the old spec + old state fully consistent (the new
-        # versions are unreferenced orphans, reclaimed by the next
-        # successful build), never a spec/state mismatch or a
-        # double-folded delta.
-        mver = (
-            self._backend.meta(mname).version + 1
-            if self._backend.exists(mname) else 1
+        mver, _ = self._write_state(
+            mname, model, f"vector index model of '{table}'"
         )
-        dver = (
-            self._backend.meta(dname).version + 1
-            if self._backend.exists(dname) else 1
+        dver, row_count = self._write_state(
+            dname, data, f"vector index data of '{table}'"
         )
-        model, n_model = self._observed_count(model)
-        self._backend.write_version(
-            mname, mver, model, n_model,
-            f"vector index model of '{table}'",
+        self._publish_derived(
+            "vector index", index,
+            {
+                "src": table,
+                "vec_col": vec_col,
+                "method": method,
+                "params": spec_params,
+                "dim": dim,
+                "key_cols": list(key_cols) if key_cols else None,
+                "watermark": src_watermark,
+                "src_rows": src_rows,
+                "model_version": mver,
+                **self._pin_fields("vector index", src_version, [dver]),
+                # build-time occupancy histogram over the method's
+                # discrete key (cell / bucket / first code): O(n_cells)
+                # ints — the frozen-model drift anchor
+                # vector_index_drift compares against. Read back the
+                # WRITTEN version so the encode doesn't run twice.
+                "occupancy": self._vindex_occupancy(
+                    method, self._backend.read_version(dname, dver)
+                ),
+            },
+            {mname: [mver], dname: [dver]},
         )
-        self._backend.write_version(
-            dname, dver, data, n_rows, f"vector index data of '{table}'"
-        )
-        row_count = n_rows()
-        # build-time occupancy histogram over the method's discrete key
-        # (cell / bucket / first code): O(n_cells) ints in the spec — the
-        # frozen-model drift anchor vector_index_drift compares against
-        # (round-12; r11 verdict next-round #2). Read back the WRITTEN
-        # version so the encode doesn't run twice.
-        occupancy = self._vindex_occupancy(
-            method, self._backend.read_version(dname, dver)
-        )
-        prev_spec = self._vector_indexes.get(index)
-        self._vector_indexes[index] = {
-            "src": table,
-            "vec_col": vec_col,
-            "method": method,
-            "params": spec_params,
-            "dim": dim,
-            "key_cols": list(key_cols) if key_cols else None,
-            # accounting from the PINNED snapshot, never a publish-time
-            # fresh read (round-12; r11 ADVICE medium): a mid-build
-            # append leaves the spec lagging -> knn refuses stale and
-            # refresh folds the delta, instead of silent absorption
-            "watermark": src_watermark,
-            "src_rows": src_rows,
-            "src_version": src_version,
-            "model_version": mver,
-            "data_version": dver,
-            "data_versions": [dver],
-            "occupancy": occupancy,
-        }
-        try:
-            self._save_registry()
-        except BaseException:
-            if prev_spec is None:
-                self._vector_indexes.pop(index, None)
-            else:
-                self._vector_indexes[index] = prev_spec
-            raise
-        self._prune_state_versions(mname, mver)
-        self._prune_state_versions(dname, dver)
         return row_count
-
-    def _pin_source(self, name: str) -> tuple[int, int, int, DataFrame]:
-        """Observe-then-read snapshot pin for index builds/refreshes
-        (round-12; r11 ADVICE medium): capture the source's version,
-        row count and row-id watermark FIRST, then read exactly that
-        version. append() never touches the registry generation, so the
-        CAS probe cannot see a concurrent append — with publish-time
-        FRESH watermark/meta reads, an append landing mid-build was
-        silently absorbed (spec recorded post-append accounting against
-        pre-append encoded data, knn's staleness check passed, and the
-        appended rows were below the watermark forever — never folded).
-        Pinning makes the spec LAG the source instead: knn refuses
-        stale, the next refresh folds the missed delta. Returns
-        (version, row_count, max_row_id, pinned DataFrame)."""
-        self._require_table(name)
-        st = self._backend.meta(name)
-        ver = int(st.version)
-        rec = st.versions[ver]
-        rows = int(rec.row_count)
-        m = getattr(rec, "max_row_id", None)
-        df = self._backend.read_version(name, ver)
-        if m is None:  # legacy version records: scan the PINNED version
-            m = df.agg(F.max(ROW_ID_COL)).collect()[0][0] or 0
-        return ver, rows, int(m), df
-
-    def _prune_state_versions(
-        self, name: str, keep: int | Iterable[int]
-    ) -> None:
-        """Drop every state-table version except ``keep`` (the one(s)
-        the just-published spec pins — a single version, or the
-        fragment chain of an append-mode index state). Runs strictly
-        AFTER _save_registry succeeds; failures here leave harmless
-        orphan versions."""
-        keep_set = {keep} if isinstance(keep, int) else set(keep)
-        for v in self._backend.versions(name):
-            if v not in keep_set:
-                self._backend.drop_version(name, v)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != name
-        }
 
     def refresh_vector_index(self, index: str) -> int:
         """Fold rows APPENDED to the source since the last (re)build into
@@ -2199,83 +2306,13 @@ class FeatureStore:
         ids) breaks the base+delta equation and REFUSES — a frozen model
         must not silently pretend to cover rewritten vectors. Returns
         the refreshed total indexed row count."""
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
-        if spec.get("rewritten"):
-            # rewrite flag beats row accounting: a count-preserving
-            # rewrite satisfies base+delta vacuously (fresh ids can land
-            # at-or-below the watermark) — see _invalidate_on_rewrite
-            raise FeatureStoreError(
-                f"Vector index '{index}': source '{spec['src']}' history "
-                "was rewritten since the last build; rebuild with "
-                "create_vector_index()."
-            )
-        # fail fast BEFORE the delta encode + state write if the publish
-        # would be refused (round-11 ADVICE: state mutated under a stale
-        # registry view re-folds the same delta after reopen)
-        self._assert_registry_current(f"refresh_vector_index('{index}')")
-        # pin version/rows/watermark BEFORE the delta read (round-12;
-        # r11 ADVICE medium): the publish below records EXACTLY what
-        # this fold covers — a concurrent append lands above the pinned
-        # watermark and stays visible to knn's staleness check + the
-        # next refresh, never silently absorbed
-        src_version, cur_rows, new_watermark, raw = self._pin_source(
-            spec["src"]
+        spec = self._derived_spec("vector index", index)
+        return self._fold_derived(
+            "vector index", index,
+            lambda delta: self._vindex_encode_rows(
+                index, spec, delta, f"refresh_vector_index('{index}')"
+            ),
         )
-        delta = raw.filter(F.col(ROW_ID_COL) > spec["watermark"])
-        delta_rows = delta.count()
-        if spec["src_rows"] + delta_rows != cur_rows:
-            raise FeatureStoreError(
-                f"Vector index '{index}': source '{spec['src']}' was "
-                "re-registered; rebuild with create_vector_index()."
-            )
-        dname = index + self._VINDEX_DATA_SUFFIX
-        frags = self._pinned_state_versions(spec, dname)
-        if delta_rows:
-            src = delta.select(
-                F.col(ENTITY_COL).alias("vec_id"),
-                F.col(spec["vec_col"]).cast("array<double>").alias(
-                    "embedding"
-                ),
-            )
-            src = self._vindex_guard_dim(
-                src, spec["dim"], f"refresh_vector_index('{index}')"
-            )
-            enc = self._vindex_encode_frozen(index, spec, src)
-            # APPEND-MODE state write (round-12): the fold writes ONLY
-            # the encoded delta as a new fragment and the spec pins the
-            # extended chain — refresh I/O is O(delta) end to end (the
-            # SCALE-100TB.md:vidx3 promise made executable; previously
-            # the full base∪delta state was rewritten each fold).
-            # publish-then-prune still holds: a refused publish keeps
-            # serving the OLD chain and the fragment is an orphan,
-            # never a double-folded delta.
-            dver = self._backend.meta(dname).version + 1
-            self._backend.write_version(
-                dname, dver, enc, delta_rows,
-                f"delta fragment ({delta_rows} rows) of vector index "
-                f"'{index}'",
-            )
-            frags = frags + [dver]
-        row_count = cur_rows
-        prev_fields = {
-            k: spec.get(k)
-            for k in ("watermark", "src_rows", "src_version",
-                      "data_version", "data_versions")
-        }
-        spec["watermark"] = new_watermark  # the PINNED snapshot's bound
-        spec["src_rows"] = cur_rows
-        spec["src_version"] = src_version
-        spec["data_version"] = frags[-1]
-        spec["data_versions"] = frags
-        try:
-            self._save_registry()
-        except BaseException:
-            spec.update(prev_fields)
-            raise
-        self._prune_state_versions(dname, frags)
-        return row_count
 
     def reencode_vector_index(self, index: str) -> int:
         """Recover from a SOURCE HISTORY REWRITE without refitting: re-
@@ -2291,93 +2328,45 @@ class FeatureStore:
         distribution itself moved. Clears the ``rewritten`` flag and
         resets the watermark accounting so refresh/knn resume. Returns
         the re-encoded row count."""
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
+        spec = self._derived_spec("vector index", index)
         self._assert_registry_current(f"reencode_vector_index('{index}')")
-        # observe-then-read pin, as in create/refresh (round-12)
-        src_version, cur_rows, new_watermark, raw = self._pin_source(
-            spec["src"]
-        )
-        src = raw.select(
-            F.col(ENTITY_COL).alias("vec_id"),
-            F.col(spec["vec_col"]).cast("array<double>").alias("embedding"),
-        )
-        src = self._vindex_guard_dim(
-            src, spec["dim"], f"reencode_vector_index('{index}')"
-        )
-        enc = self._vindex_encode_frozen(index, spec, src)
+        src_version, cur_rows, watermark, raw = self._pin_source(spec["src"])
         dname = index + self._VINDEX_DATA_SUFFIX
-        dver = self._backend.meta(dname).version + 1
-        self._backend.write_version(
-            dname, dver, enc, cur_rows,
+        dver, _ = self._write_state(
+            dname,
+            self._vindex_encode_rows(
+                index, spec, raw, f"reencode_vector_index('{index}')"
+            ),
             f"frozen-model re-encode of vector index '{index}'",
         )
-        prev_fields = {
-            k: spec.get(k)
-            for k in ("watermark", "src_rows", "src_version",
-                      "data_version", "data_versions", "rewritten")
-        }
-        spec["watermark"] = new_watermark  # the PINNED snapshot's bound
-        spec["src_rows"] = cur_rows
-        spec["src_version"] = src_version
-        spec["data_version"] = dver
-        spec["data_versions"] = [dver]
-        spec["rewritten"] = False
-        try:
-            self._save_registry()
-        except BaseException:
-            spec.update(prev_fields)
-            raise
-        self._prune_state_versions(dname, dver)
+        self._publish_derived(
+            "vector index", index,
+            {
+                **spec,
+                "watermark": watermark,
+                "src_rows": cur_rows,
+                **self._pin_fields("vector index", src_version, [dver]),
+                "rewritten": False,
+            },
+            {dname: [dver]},
+        )
         return cur_rows
 
     def compact_vector_index(self, index: str) -> int:
-        """Fold the refresh FRAGMENT CHAIN back into one state version —
-        the OPTIMIZE-style maintenance job that pairs with append-mode
-        refresh (round-12): each O(delta) fold appends a fragment, so
-        after many nightly refreshes the serving read is a union of
-        small scans; compaction rewrites the union ONCE, clustered by
-        the method's probe key (repartition on cell/bucket/lead code →
-        a probed knn touches few files), and re-pins the spec to the
-        single compacted version. Serving results are IDENTICAL before
-        and after (pytest-pinned) — this is physical-layout
-        maintenance, never a semantic mutation, so it needs no source
-        re-read, no model touch, and no watermark change. Amortized
-        cost at 100 TB: fragments accumulate O(delta) each; compaction
-        pays one state-table rewrite on whatever cadence the operator
-        chooses (weekly, or when ``n_fragments`` from
-        get_vector_index_info crosses a threshold). publish-then-prune
-        as everywhere: a refused publish keeps serving the old chain
-        and the compacted write is an orphan. Returns the number of
-        fragments folded (1 = already compact, still re-pinned)."""
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
-        self._assert_registry_current(f"compact_vector_index('{index}')")
-        dname = index + self._VINDEX_DATA_SUFFIX
-        frags = self._pinned_state_versions(spec, dname)
-        merged = self._vindex_data(index).repartition(
-            self._vindex_hist_key(spec["method"])
+        """Fold the refresh FRAGMENT CHAIN back into one state version,
+        clustered by the method's probe key (repartition on cell/bucket/
+        lead code → a probed knn touches few files), and re-pin the spec
+        to it — see _compact_derived. After many nightly refreshes the
+        serving read is a union of small scans; compaction rewrites the
+        union ONCE, on whatever cadence the operator chooses (weekly, or
+        when ``n_fragments`` from get_vector_index_info crosses a
+        threshold). Returns the number of fragments folded."""
+        key = self._vindex_hist_key(
+            self._derived_spec("vector index", index)["method"]
         )
-        dver = self._backend.meta(dname).version + 1
-        self._backend.write_version(
-            dname, dver, merged, spec["src_rows"],
-            f"compaction of {len(frags)} fragment(s) of vector index "
-            f"'{index}'",
+        return self._compact_derived(
+            "vector index", index, lambda df: df.repartition(key)
         )
-        prev_fields = {
-            k: spec.get(k) for k in ("data_version", "data_versions")
-        }
-        spec["data_version"] = dver
-        spec["data_versions"] = [dver]
-        try:
-            self._save_registry()
-        except BaseException:
-            spec.update(prev_fields)
-            raise
-        self._prune_state_versions(dname, dver)
-        return len(frags)
 
     def knn(
         self,
@@ -2426,36 +2415,14 @@ class FeatureStore:
             pq_adc_rank,
         )
 
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
-        if spec.get("rewritten"):
-            raise FeatureStoreError(
-                f"Vector index '{index}': source '{spec['src']}' history "
-                "was rewritten since the last build; rebuild with "
-                "create_vector_index()."
-            )
-        src_meta = self._backend.meta(spec["src"])
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        if (
-            src_meta.version != spec["src_version"]
-            or cur_rows != spec["src_rows"]
-        ):
-            raise FeatureStoreError(
-                f"Vector index '{index}' is STALE: source "
-                f"'{spec['src']}' is at version {src_meta.version} with "
-                f"{cur_rows} rows, but the index covers version "
-                f"{spec['src_version']} with {spec['src_rows']} rows. "
-                f"Run refresh_vector_index('{index}') after appends, or "
-                f"create_vector_index() after a re-register."
-            )
+        spec = self._serving_spec("vector index", index)
         qv = [float(x) for x in query_vec]
         if len(qv) != spec["dim"]:
             raise FeatureValidationError(
                 f"knn('{index}'): query vector has {len(qv)} dims, index "
                 f"has {spec['dim']}."
             )
-        data = self._vindex_data(index)
+        data = self._derived_state("vector index", index)
         key_cols = spec.get("key_cols")
         if key_cols:
             # composite-key index: expose the natural key columns so
@@ -2628,32 +2595,8 @@ class FeatureStore:
         from .operators.pit import top_k_per_group
         from .operators.similarity import cosine_similarity
 
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
-        # same staleness/rewrite gate as knn — reuse it via a probe call
-        # would double the metadata reads; inline the identical checks
-        if spec.get("rewritten"):
-            raise FeatureStoreError(
-                f"Vector index '{index}': source '{spec['src']}' history "
-                "was rewritten since the last build; rebuild with "
-                "create_vector_index()."
-            )
-        src_meta = self._backend.meta(spec["src"])
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        if (
-            src_meta.version != spec["src_version"]
-            or cur_rows != spec["src_rows"]
-        ):
-            raise FeatureStoreError(
-                f"Vector index '{index}' is STALE: source "
-                f"'{spec['src']}' is at version {src_meta.version} with "
-                f"{cur_rows} rows, but the index covers version "
-                f"{spec['src_version']} with {spec['src_rows']} rows. "
-                f"Run refresh_vector_index('{index}') after appends, or "
-                f"create_vector_index() after a re-register."
-            )
-        data = self._vindex_data(index)
+        spec = self._serving_spec("vector index", index)
+        data = self._derived_state("vector index", index)
         key_cols = spec.get("key_cols")
         clash = {query_id_col, query_vec_col} & (
             set(data.columns) | set(key_cols or ())
@@ -2852,9 +2795,7 @@ class FeatureStore:
         at 100 TB the cost is exactly the serving join (the probe key
         prunes the encoded scan), so semantic dedup of a nightly batch
         prices like any other retrieval job."""
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
+        spec = self._derived_spec("vector index", index)
         if spec["method"] not in ("ivf", "lsh") and refine is None:
             raise FeatureValidationError(
                 f"dedup_embedding_batch('{index}'): method "
@@ -2877,31 +2818,30 @@ class FeatureStore:
         rewrite). Metadata-only, no data scan; the probe streaming
         auto-refresh (refresh='auto' in stream_index_enrich) runs per
         micro-batch."""
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
-        if spec.get("rewritten"):
-            return True
-        src_meta = self._backend.meta(spec["src"])
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        return (
-            src_meta.version != spec["src_version"]
-            or cur_rows != spec["src_rows"]
-        )
+        return self._derived_lag("vector index", index)[1] is not None
 
-    def _vindex_encode_frozen(
-        self, index: str, spec: dict, src: DataFrame
+    def _vindex_encode_rows(
+        self, index: str, spec: dict, rows: DataFrame, context: str
     ) -> DataFrame:
-        """Encode (vec_id, embedding) rows against the STORED model —
-        the shared map-only dispatch behind refresh / reencode / the
-        drift probe's pending-delta arm. No fit, no state write; the
-        model rides as literals (k x dim scale, driver-resident)."""
+        """Encode source rows against the STORED model — the shared
+        map-only dispatch behind refresh / reencode / the drift probe's
+        pending-delta arm. No fit, no state write; the model rides as
+        literals (k x dim scale, driver-resident)."""
         from .operators.similarity import (
             ivf_encode_int,
             lsh_bucketize_with_planes,
             pq_encode,
         )
 
+        src = self._vindex_guard_dim(
+            rows.select(
+                F.col(ENTITY_COL).alias("vec_id"),
+                F.col(spec["vec_col"]).cast("array<double>").alias(
+                    "embedding"
+                ),
+            ),
+            spec["dim"], context,
+        )
         pp = spec["params"]
         if spec["method"] == "ivf":
             return ivf_encode_int(
@@ -2985,9 +2925,7 @@ class FeatureStore:
         operators/drift.py so an external oracle replays the algebra."""
         from .operators.drift import EPS
 
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
+        spec = self._derived_spec("vector index", index)
         occ = spec.get("occupancy")
         if not occ:
             raise FeatureStoreError(
@@ -2997,20 +2935,16 @@ class FeatureStore:
                 f"vector_index_drift."
             )
         key = self._vindex_hist_key(spec["method"])
-        cur_keys = self._vindex_data(index).select(key.alias("cell"))
+        cur_keys = self._derived_state("vector index", index).select(
+            key.alias("cell")
+        )
         if include_pending and not spec.get("rewritten"):
-            raw = self._current(spec["src"])
-            delta = raw.filter(F.col(ROW_ID_COL) > spec["watermark"])
-            src = delta.select(
-                F.col(ENTITY_COL).alias("vec_id"),
-                F.col(spec["vec_col"]).cast("array<double>").alias(
-                    "embedding"
-                ),
+            delta = self._current(spec["src"]).filter(
+                F.col(ROW_ID_COL) > spec["watermark"]
             )
-            src = self._vindex_guard_dim(
-                src, spec["dim"], f"vector_index_drift('{index}')"
+            enc = self._vindex_encode_rows(
+                index, spec, delta, f"vector_index_drift('{index}')"
             )
-            enc = self._vindex_encode_frozen(index, spec, src)
             cur_keys = cur_keys.unionByName(enc.select(key.alias("cell")))
         cur = cur_keys.groupBy("cell").agg(
             F.count("*").alias("__n_cur__")
@@ -3066,18 +3000,7 @@ class FeatureStore:
         }
 
     def get_vector_index_info(self, index: str) -> dict[str, Any]:
-        spec = self._vector_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown vector index: '{index}'")
-        return {
-            **spec,
-            "params": dict(spec["params"]),
-            "n_fragments": len(
-                self._pinned_state_versions(
-                    spec, index + self._VINDEX_DATA_SUFFIX
-                )
-            ),
-        }
+        return self._index_info("vector index", index)
 
     def list_vector_indexes(self) -> list[str]:
         return sorted(self._vector_indexes)
@@ -3085,29 +3008,8 @@ class FeatureStore:
     def drop_vector_index(self, index: str) -> bool:
         """Release the spec AND both state tables. Returns False if
         absent — never raises for a missing index (the ``delete``
-        contract). Publish-then-prune ordering: the spec removal
-        CAS-publishes FIRST, state tables drop after — a refused publish
-        restores the in-memory spec and touches no state (the inverse
-        hazard of create: dropping tables under a refused save would
-        leave the on-disk spec dangling)."""
-        spec = self._vector_indexes.pop(index, None)
-        if spec is None:
-            return False
-        try:
-            self._save_registry()
-        except BaseException:
-            self._vector_indexes[index] = spec
-            raise
-        gone = set()
-        for suffix in (self._VINDEX_DATA_SUFFIX, self._VINDEX_MODEL_SUFFIX):
-            n = index + suffix
-            if self._backend.exists(n):
-                self._backend.drop_table(n)
-            gone.add(n)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] not in gone
-        }
-        return True
+        contract); see _drop_derived for the ordering."""
+        return self._drop_derived("vector index", index)
 
     @staticmethod
     def _vindex_guard_dim(
@@ -3138,38 +3040,6 @@ class FeatureStore:
                     )
                 )
             ),
-        )
-
-    def _pinned_state_versions(self, spec: dict, dname: str) -> list[int]:
-        """The state-table version(s) a spec pins: the append-mode
-        fragment chain (``data_versions``, round-12), the single
-        round-11 pin (``data_version``), or latest for legacy
-        registries that predate pinning."""
-        if spec.get("data_versions"):
-            return [int(v) for v in spec["data_versions"]]
-        if spec.get("data_version"):
-            return [int(spec["data_version"])]
-        return [self._backend.versions(dname)[-1]]
-
-    def _read_state_fragments(self, spec: dict, dname: str) -> DataFrame:
-        out = None
-        for v in self._pinned_state_versions(spec, dname):
-            d = self._backend.read_version(dname, v)
-            out = d if out is None else out.unionByName(d)
-        return out
-
-    def _vindex_data(self, index: str) -> DataFrame:
-        """The encoded state table at the version(s) the SPEC pins —
-        never a just-written-but-unpublished orphan version. Since
-        round-12 a refreshed index is a FRAGMENT CHAIN (base + one
-        delta fragment per refresh, the append-mode shape
-        SCALE-100TB.md demands at scale): the read is a union of the
-        pinned fragments, each scan still pruned by the probe
-        predicate; ``compact_vector_index`` folds the chain back to
-        one."""
-        spec = self._vector_indexes[index]
-        return self._read_state_fragments(
-            spec, index + self._VINDEX_DATA_SUFFIX
         )
 
     def _vindex_model_rows(self, index: str):
@@ -3222,8 +3092,6 @@ class FeatureStore:
     # ------------------------------------------------------------------ #
     # persisted dedup-signature indexes (sign once, dedup every increment)
     # ------------------------------------------------------------------ #
-    _DINDEX_DATA_SUFFIX = "__dedup"
-
     _DINDEX_METHODS = ("minhash", "simhash")
 
     def create_dedup_index(
@@ -3310,48 +3178,32 @@ class FeatureStore:
             }
         self._assert_registry_current(f"create_dedup_index('{index}')")
         src_version, src_rows, src_watermark, raw = self._pin_source(table)
-        signed = self._dedup_sign(
-            raw.select(
-                F.col(ENTITY_COL).alias("doc_id"), F.col(content_col)
-            ),
-            content_col,
-            method,
-            params,
-        )
-        # the count rides the write as an observed metric: signing is
-        # the expensive pass, it must run ONCE
-        signed, n_rows = self._observed_count(signed)
         dname = index + self._DINDEX_DATA_SUFFIX
-        dver = (
-            self._backend.meta(dname).version + 1
-            if self._backend.exists(dname) else 1
-        )
-        self._backend.write_version(
-            dname, dver, signed, n_rows,
+        dver, row_count = self._write_state(
+            dname,
+            self._dedup_sign(
+                raw.select(
+                    F.col(ENTITY_COL).alias("doc_id"), F.col(content_col)
+                ),
+                content_col,
+                method,
+                params,
+            ),
             f"dedup signature index of '{table}'",
         )
-        row_count = n_rows()
-        prev_spec = self._dedup_indexes.get(index)
-        self._dedup_indexes[index] = {
-            "src": table,
-            "content_col": content_col,
-            "method": method,
-            "params": params,
-            "watermark": src_watermark,
-            "src_rows": src_rows,
-            "src_version": src_version,
-            "data_version": dver,
-            "data_versions": [dver],
-        }
-        try:
-            self._save_registry()
-        except BaseException:
-            if prev_spec is None:
-                self._dedup_indexes.pop(index, None)
-            else:
-                self._dedup_indexes[index] = prev_spec
-            raise
-        self._prune_state_versions(dname, dver)
+        self._publish_derived(
+            "dedup index", index,
+            {
+                "src": table,
+                "content_col": content_col,
+                "method": method,
+                "params": params,
+                "watermark": src_watermark,
+                "src_rows": src_rows,
+                **self._pin_fields("dedup index", src_version, [dver]),
+            },
+            {dname: [dver]},
+        )
         return row_count
 
     def _dedup_sign(
@@ -3395,72 +3247,19 @@ class FeatureStore:
         re-read (the x27 cost model fixed: each nightly increment costs
         the batch, not the corpus). The seeded hash family is frozen by
         construction, so incremental == sign-everything bit-for-bit
-        (pinned in pytest). Same guards as refresh_vector_index:
-        rewrite flag refusal, row-accounting equation, snapshot-pinned
-        watermark, publish-then-prune. Returns total stored rows."""
-        spec = self._dedup_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown dedup index: '{index}'")
-        if spec.get("rewritten"):
-            raise FeatureStoreError(
-                f"Dedup index '{index}': source '{spec['src']}' history "
-                "was rewritten since the last build; rebuild with "
-                "create_dedup_index()."
-            )
-        self._assert_registry_current(f"refresh_dedup_index('{index}')")
-        src_version, cur_rows, new_watermark, raw = self._pin_source(
-            spec["src"]
-        )
-        delta = raw.filter(F.col(ROW_ID_COL) > spec["watermark"])
-        delta_rows = delta.count()
-        if spec["src_rows"] + delta_rows != cur_rows:
-            raise FeatureStoreError(
-                f"Dedup index '{index}': source '{spec['src']}' was "
-                "re-registered; rebuild with create_dedup_index()."
-            )
-        dname = index + self._DINDEX_DATA_SUFFIX
-        frags = self._pinned_state_versions(spec, dname)
-        if delta_rows:
-            enc = self._dedup_sign(
-                delta.select(
-                    F.col(ENTITY_COL).alias("doc_id"),
-                    F.col(spec["content_col"]),
-                ),
-                spec["content_col"],
+        (pinned in pytest). Same guards as refresh_vector_index (see
+        _fold_derived). Returns total stored rows."""
+        spec = self._derived_spec("dedup index", index)
+        ccol = spec["content_col"]
+        return self._fold_derived(
+            "dedup index", index,
+            lambda delta: self._dedup_sign(
+                delta.select(F.col(ENTITY_COL).alias("doc_id"), F.col(ccol)),
+                ccol,
                 spec.get("method", "minhash"),
                 spec["params"],
-            )
-            # APPEND-MODE state write (round-12, as refresh_vector_index):
-            # only the delta's signatures land as a new fragment — the
-            # stored corpus signatures are never re-read OR re-written;
-            # count rides the write (one pass; the O(delta) sign must
-            # not run twice)
-            enc, n_rows = self._observed_count(enc)
-            dver = self._backend.meta(dname).version + 1
-            self._backend.write_version(
-                dname, dver, enc, n_rows,
-                f"delta fragment of dedup index '{index}'",
-            )
-            n_rows()
-            frags = frags + [dver]
-        row_count = cur_rows
-        prev_fields = {
-            k: spec.get(k)
-            for k in ("watermark", "src_rows", "src_version",
-                      "data_version", "data_versions")
-        }
-        spec["watermark"] = new_watermark  # the PINNED snapshot's bound
-        spec["src_rows"] = cur_rows
-        spec["src_version"] = src_version
-        spec["data_version"] = frags[-1]
-        spec["data_versions"] = frags
-        try:
-            self._save_registry()
-        except BaseException:
-            spec.update(prev_fields)
-            raise
-        self._prune_state_versions(dname, frags)
-        return row_count
+            ),
+        )
 
     def compact_dedup_index(self, index: str) -> int:
         """Fold the dedup index's refresh fragment chain into one
@@ -3469,33 +3268,8 @@ class FeatureStore:
         signatures, so there is no probe key to cluster by; the win is
         one scan instead of a fragment union, and file counts bounded
         by the write's parallelism rather than the refresh cadence).
-        Serving-invariant, publish-then-prune, no watermark change.
         Returns the number of fragments folded."""
-        spec = self._dedup_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown dedup index: '{index}'")
-        self._assert_registry_current(f"compact_dedup_index('{index}')")
-        dname = index + self._DINDEX_DATA_SUFFIX
-        frags = self._pinned_state_versions(spec, dname)
-        merged = self._dindex_data(index)
-        dver = self._backend.meta(dname).version + 1
-        self._backend.write_version(
-            dname, dver, merged, spec["src_rows"],
-            f"compaction of {len(frags)} fragment(s) of dedup index "
-            f"'{index}'",
-        )
-        prev_fields = {
-            k: spec.get(k) for k in ("data_version", "data_versions")
-        }
-        spec["data_version"] = dver
-        spec["data_versions"] = [dver]
-        try:
-            self._save_registry()
-        except BaseException:
-            spec.update(prev_fields)
-            raise
-        self._prune_state_versions(dname, dver)
-        return len(frags)
+        return self._compact_derived("dedup index", index)
 
     def dedup_batch(
         self,
@@ -3541,12 +3315,12 @@ class FeatureStore:
         changed since the last build/refresh, dedup_batch raises — a
         half-covering signature store would silently under-report
         duplicates. Metadata-only check."""
-        spec = self._dedup_spec_for_serving(index)
+        spec = self._serving_spec("dedup index", index)
         new, signed_new, cand, ver = self._dedup_pairs(
             index, spec, new_docs, id_col, content_col, threshold,
             max_bucket_size,
         )
-        stored = self._dindex_data(index)
+        stored = self._derived_state("dedup index", index)
         # exact arm: the shuffle carries 16-byte hashes, never bodies
         exacts = (
             signed_new.select(id_col, "hh")
@@ -3585,35 +3359,6 @@ class FeatureStore:
             )
         )
 
-    def _dedup_spec_for_serving(self, index: str) -> dict:
-        """Shared serving refusals (dedup_batch / dedup_matches): the
-        rewrite flag and the version/row-count staleness check — a
-        half-covering signature store must refuse, not under-report."""
-        spec = self._dedup_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown dedup index: '{index}'")
-        if spec.get("rewritten"):
-            raise FeatureStoreError(
-                f"Dedup index '{index}': source '{spec['src']}' history "
-                "was rewritten since the last build; rebuild with "
-                "create_dedup_index()."
-            )
-        src_meta = self._backend.meta(spec["src"])
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        if (
-            src_meta.version != spec["src_version"]
-            or cur_rows != spec["src_rows"]
-        ):
-            raise FeatureStoreError(
-                f"Dedup index '{index}' is STALE: source '{spec['src']}' "
-                f"is at version {src_meta.version} with {cur_rows} rows, "
-                f"but the index covers version {spec['src_version']} "
-                f"with {spec['src_rows']} rows. Run "
-                f"refresh_dedup_index('{index}') after appends, or "
-                f"create_dedup_index() after a re-register."
-            )
-        return spec
-
     def _dedup_pairs(
         self,
         index: str,
@@ -3647,7 +3392,7 @@ class FeatureStore:
         # plan — an explicit localCheckpoint here measured SLOWER
         # (materialization cost without saved work), so none is taken.
         signed_new = self._dedup_sign(new, ccol, method, p)
-        stored = self._dindex_data(index)
+        stored = self._derived_state("dedup index", index)
         # fuzzy arm: batch buckets vs STORED buckets (new x old only)
         if method == "simhash":
             nb = simhash_band_buckets(
@@ -3830,7 +3575,7 @@ class FeatureStore:
         the explosion the cap exists to avoid) — the per-doc exact
         FLAG in dedup_batch covers those, at O(batch) rows. Same
         staleness/rewrite refusals and plan shape as dedup_batch."""
-        spec = self._dedup_spec_for_serving(index)
+        spec = self._serving_spec("dedup index", index)
         _, signed_new, _, ver = self._dedup_pairs(
             index, spec, new_docs, id_col, content_col, threshold,
             max_bucket_size,
@@ -3854,75 +3599,25 @@ class FeatureStore:
         """True when the source changed since the last build/refresh —
         exactly the condition under which ``dedup_batch`` refuses.
         Metadata-only, no data scan."""
-        spec = self._dedup_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown dedup index: '{index}'")
-        if spec.get("rewritten"):
-            return True
-        src_meta = self._backend.meta(spec["src"])
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        return (
-            src_meta.version != spec["src_version"]
-            or cur_rows != spec["src_rows"]
-        )
+        return self._derived_lag("dedup index", index)[1] is not None
 
     def get_dedup_index_info(self, index: str) -> dict[str, Any]:
-        spec = self._dedup_indexes.get(index)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown dedup index: '{index}'")
-        return {
-            **spec,
-            "params": dict(spec["params"]),
-            "n_fragments": len(
-                self._pinned_state_versions(
-                    spec, index + self._DINDEX_DATA_SUFFIX
-                )
-            ),
-        }
+        return self._index_info("dedup index", index)
 
     def list_dedup_indexes(self) -> list[str]:
         return sorted(self._dedup_indexes)
 
     def drop_dedup_index(self, index: str) -> bool:
         """Release the spec AND the signature table; False if absent
-        (the ``delete`` contract). Spec removal CAS-publishes FIRST,
-        state drops after — same ordering rationale as
-        drop_vector_index."""
-        spec = self._dedup_indexes.pop(index, None)
-        if spec is None:
-            return False
-        try:
-            self._save_registry()
-        except BaseException:
-            self._dedup_indexes[index] = spec
-            raise
-        dname = index + self._DINDEX_DATA_SUFFIX
-        if self._backend.exists(dname):
-            self._backend.drop_table(dname)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != dname
-        }
-        return True
+        (the ``delete`` contract); see _drop_derived for the ordering."""
+        return self._drop_derived("dedup index", index)
 
     def get_dedup_signatures(self, index: str) -> DataFrame:
         """The stored signature table (doc_id, hh, minhash) at the
-        version the spec pins — the audit surface (a recall eval or an
-        external engine replays the portable family against it) and
+        version(s) the spec pins — the audit surface (a recall eval or
+        an external engine replays the portable family against it) and
         the input any custom blocking scheme can band map-only."""
-        if index not in self._dedup_indexes:
-            raise FeatureStoreError(f"Unknown dedup index: '{index}'")
-        return self._dindex_data(index)
-
-    def _dindex_data(self, index: str) -> DataFrame:
-        """The signature table at the version(s) the SPEC pins — never
-        a just-written-but-unpublished orphan version. Round-12: a
-        refreshed index is a base + delta-fragment chain (band buckets
-        derive map-only from each fragment identically);
-        ``compact_dedup_index`` folds it back to one version."""
-        spec = self._dedup_indexes[index]
-        return self._read_state_fragments(
-            spec, index + self._DINDEX_DATA_SUFFIX
-        )
+        return self._derived_state("dedup index", index)
 
     # ------------------------------------------------------------------ #
     # trained linear probes (round-12): the corpus-filter model as a
@@ -3991,8 +3686,7 @@ class FeatureStore:
             ).collect()[0]
         finally:
             feat.unpersist()
-        prev = self._probes.get(name)
-        self._probes[name] = {
+        self._publish_derived("probe", name, {
             "src": table,
             "feature_exprs": dict(feature_exprs),
             "label_expr": label_expr,
@@ -4003,15 +3697,7 @@ class FeatureStore:
             "src_rows": int(src_rows),
             "src_version": int(src_version),
             "train_accuracy_ppm": int(acc_row["a"]),
-        }
-        try:
-            self._save_registry()
-        except BaseException:
-            if prev is None:
-                self._probes.pop(name, None)
-            else:
-                self._probes[name] = prev
-            raise
+        })
         return dict(self._probes[name])
 
     def score_with_probe(self, name: str, df: DataFrame) -> DataFrame:
@@ -4022,9 +3708,7 @@ class FeatureStore:
         feature columns, ``p`` (fixed-point score) and ``pred``."""
         from .operators.classifier import probe_score
 
-        spec = self._probes.get(name)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown probe: '{name}'")
+        spec = self._derived_spec("probe", name)
         cols = list(spec["feature_exprs"])
         clash = sorted(set(cols) & set(df.columns))
         if clash:
@@ -4049,15 +3733,7 @@ class FeatureStore:
         never refuses on it: a probe scores rows one at a time and
         claims nothing about corpus coverage (contrast the index tier,
         where staleness means silently missing neighbors)."""
-        spec = self._probes.get(name)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown probe: '{name}'")
-        src_meta = self._backend.meta(spec["src"])
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        return (
-            src_meta.version != spec["src_version"]
-            or cur_rows != spec["src_rows"]
-        )
+        return self._derived_lag("probe", name)[1] is not None
 
     def probe_report(
         self,
@@ -4078,9 +3754,7 @@ class FeatureStore:
         Integer end to end — replayable exactly."""
         from .operators.classifier import probe_score
 
-        spec = self._probes.get(name)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown probe: '{name}'")
+        spec = self._derived_spec("probe", name)
         if n_thresholds < 1:
             raise FeatureValidationError(
                 f"probe_report('{name}'): n_thresholds must be >= 1"
@@ -4131,9 +3805,7 @@ class FeatureStore:
         )
 
     def get_probe_info(self, name: str) -> dict[str, Any]:
-        spec = self._probes.get(name)
-        if spec is None:
-            raise FeatureStoreError(f"Unknown probe: '{name}'")
+        spec = self._derived_spec("probe", name)
         return {**spec, "feature_exprs": dict(spec["feature_exprs"])}
 
     def list_probes(self) -> list[str]:
@@ -4142,15 +3814,7 @@ class FeatureStore:
     def drop_probe(self, name: str) -> bool:
         """Release the spec; False if absent (the ``delete`` contract).
         No state tables to drop — the model lives in the registry."""
-        spec = self._probes.pop(name, None)
-        if spec is None:
-            return False
-        try:
-            self._save_registry()
-        except BaseException:
-            self._probes[name] = spec
-            raise
-        return True
+        return self._drop_derived("probe", name)
 
     def _prepare_dataframe(self, df: DataFrame) -> DataFrame:
         ts_type = dict(df.dtypes)[TIMESTAMP_COL]
@@ -5966,31 +5630,12 @@ class FeatureStore:
             for n, s in sorted(self._services.items())
             if table in s["selections"] or dv & set(s["selections"])
         ]
-        refs += [
-            ("rollup", n)
-            for n, s in sorted(self._rollups.items())
-            if s["src"] == table
-        ]
-        refs += [
-            ("window view", n)
-            for n, s in sorted(self._window_views.items())
-            if s["source"] == table
-        ]
-        refs += [
-            ("vector index", n)
-            for n, s in sorted(self._vector_indexes.items())
-            if s["src"] == table
-        ]
-        refs += [
-            ("dedup index", n)
-            for n, s in sorted(self._dedup_indexes.items())
-            if s["src"] == table
-        ]
-        refs += [
-            ("probe", n)
-            for n, s in sorted(self._probes.items())
-            if s["src"] == table
-        ]
+        for kind, (attr, src_key, _) in self._SOURCED_SPECS.items():
+            refs += [
+                (kind, n)
+                for n, s in sorted(getattr(self, attr).items())
+                if s[src_key] == table
+            ]
         return refs
 
     def create_view(self, name: str, view_name: str | None = None) -> str:

@@ -1051,14 +1051,43 @@ class TestDedupIndexPlans:
     def test_batch_joins_are_equi_never_cartesian(self, dd):
         """dedup_batch: exact arm = LeftSemi on the 16-byte hash; fuzzy
         arm = equi join on (band, bucket); verify joins are candidate-
-        bounded equi joins. No cartesian product anywhere."""
+        bounded equi joins. No cartesian product anywhere.
+
+        The candidate pairs are localCheckpointed, so the (band, bucket)
+        join is not in the final plan: it is planned by the checkpoint's
+        own SQL execution, registered (lazily, no job yet) while
+        dedup_batch builds its plan. Both plans are checked."""
+        import re
+
         fs, new = dd
+        spark = new.sparkSession
+        status = spark._jsparkSession.sharedState().statusStore()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+
+        def execution_plans(after_id):
+            bus.waitUntilEmpty()
+            execs = status.executionsList()
+            return [
+                e.physicalPlanDescription()
+                for e in (execs.apply(i) for i in range(execs.size()))
+                if e.executionId() > after_id
+            ]
+
+        bus.waitUntilEmpty()
+        execs = status.executionsList()
+        last_id = max(
+            (execs.apply(i).executionId() for i in range(execs.size())),
+            default=-1,
+        )
         out = fs.dedup_batch("dd", new, id_col="doc_id")
-        plan = executed_plan(out)
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "LeftSemi" in plan  # the exact arm
-        assert "bucket" in plan  # the banded probe key
+        plans = execution_plans(last_id) + [executed_plan(out)]
+        for plan in plans:
+            assert "CartesianProduct" not in plan
+            assert "BroadcastNestedLoopJoin" not in plan
+        assert "LeftSemi" in plans[-1]  # the exact arm
+        # the fuzzy arm: an equi join keyed on exactly (band, bucket)
+        band_join = re.compile(r"Left keys \[2\]: \[band#\d+, bucket#\d+\]")
+        assert any(band_join.search(p) for p in plans[:-1]), plans
 
     def test_stored_banding_is_map_only(self, dd):
         """Buckets re-derive from the persisted signatures at O(bands)

@@ -103,7 +103,7 @@ class TestMidBuildAppendPin:
         # ...and the refresh folds the mid-build rows (nothing lost)
         total = b.refresh_vector_index("ann")
         assert total == feats.count()
-        assert b._vindex_data("ann").count() == total
+        assert b._derived_state("vector index", "ann").count() == total
         assert b.knn("ann", qvec, k=3).count() == 3
 
     def test_refresh_pins_pre_append_accounting(self, spark, feats, tmp_path):
@@ -130,7 +130,7 @@ class TestMidBuildAppendPin:
         assert b.vector_index_stale("ann")  # the mid-refresh %3=2 rows
         total = b.refresh_vector_index("ann")
         assert total == feats.count()
-        assert b._vindex_data("ann").count() == total
+        assert b._derived_state("vector index", "ann").count() == total
 
 
 class TestVectorIndexDrift:

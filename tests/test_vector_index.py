@@ -902,7 +902,7 @@ class TestPublishThenPrune:
         reopened = FeatureStore(spark, storage_path=str(tmp_path / "s"))
         total = reopened.refresh_vector_index("ann")
         assert total == feats.count()
-        data = reopened._vindex_data("ann")
+        data = reopened._derived_state("vector index", "ann")
         assert data.count() == total  # no double-folded delta
         assert data.groupBy("vec_id").count().filter("count > 1").count() == 0
         assert reopened.knn("ann", qvec, k=5).count() == 5

@@ -110,7 +110,7 @@ def cells_probe(args: list[str]) -> None:
 
         probes = ivf_probe_cells_int(fs._vindex_ivf_model("ann"), qvec, 2)
         probed = (
-            fs._vindex_data("ann")
+            fs._derived_state("vector index", "ann")
             .filter(F.col("cell").isin(probes))
             .count()
         )

@@ -127,7 +127,7 @@ def batch_probe(spark, skewed, uniform, qvec) -> None:
 
             probes = probe_cells(fs._vindex_ivf_model("ann"), qvec, 2)
             pairs = (
-                fs._vindex_data("ann")
+                fs._derived_state("vector index", "ann")
                 .filter(F.col("cell").isin(probes))
                 .count()
                 * 100
