@@ -16,17 +16,32 @@ storage concern behind a small interface with two implementations:
   and map version -> snapshot (``versionAsOf``). Writes optionally
   ``partitionBy`` a derived date column and ``sortWithinPartitions
   (entity, ts)`` for scan locality / pruning at scale.
+
+Publishing a version records, beside its data, what every later call
+would otherwise have to scan for: its row count, its ``max_row_id`` and
+its Spark schema (``StructType`` JSON, which round-trips UDTs, struct keys
+and field metadata). The schema is the one a read of the version returns;
+the table keeps one, and a version record carries its own only when it
+differs (a widening append, a re-register with other columns). Reads pass
+it to ``spark.read.schema(...)``, so a read plans with zero Spark jobs and
+never infers. Only legacy metadata, written before schemas were recorded,
+falls back to a schema-inferring read; the first publish to such a table
+infers each retained version's schema once and records it. The meta file
+is compact JSON that leaves out what the schema already says: a record's
+column names, version number and default-valued fields, and a schema's
+default nullability and empty field metadata.
 """
 
 from __future__ import annotations
 
 import json
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 @dataclass
@@ -46,6 +61,9 @@ class VersionRecord:
     # full-history max() scan; a stale-but-larger bound is always safe
     # (row ids only need to stay strictly increasing).
     max_row_id: int | None = None
+    # StructType JSON of this version, only when it differs from the
+    # table's schema (None: the table's).
+    schema: dict | None = None
 
 
 @dataclass
@@ -56,6 +74,17 @@ class TableState:
     registered_at: str
     updated_at: str
     versions: dict[int, VersionRecord] = field(default_factory=dict)
+    # StructType JSON of the versions that record none of their own;
+    # None only in legacy metadata (reads then infer).
+    schema: dict | None = None
+
+
+def version_schema(state: TableState, version: int) -> StructType | None:
+    """The recorded schema a read of ``version`` returns, or None for a
+    legacy version recorded without one."""
+    rec = state.versions[version]
+    raw = rec.schema if rec.schema is not None else state.schema
+    return None if raw is None else StructType.fromJson(raw)
 
 
 def _now_iso() -> str:
@@ -63,21 +92,29 @@ def _now_iso() -> str:
 
 
 def _record_version(state: TableState | None, name: str, version: int,
-                    df: DataFrame, row_count, description: str,
+                    df: DataFrame, schema: dict, row_count, description: str,
                     max_row_id) -> TableState:
     """Record a just-written ``version`` as ``name``'s current one, in
     ``state`` (None for a new table) — the bookkeeping both backends'
-    ``write_version`` share. ``row_count`` / ``max_row_id`` may be
-    thunks reading ``Dataset.observe`` metrics: they resolve only AFTER
-    the backend's write action has fired the observation (register rides
-    them on the write job instead of paying separate scan passes)."""
+    ``write_version`` share. ``schema`` is the StructType JSON a read of
+    the version returns; when it differs from the table's, the older
+    records that relied on the table's schema keep theirs first.
+    ``row_count`` / ``max_row_id`` may be thunks reading
+    ``Dataset.observe`` metrics: they resolve only AFTER the backend's
+    write action has fired the observation (register rides them on the
+    write job instead of paying separate scan passes)."""
     row_count = int(row_count() if callable(row_count) else row_count)
     if callable(max_row_id):
         max_row_id = max_row_id()
     now = _now_iso()
     if state is None:
         state = TableState(name=name, description=description, version=version,
-                           registered_at=now, updated_at=now)
+                           registered_at=now, updated_at=now, schema=schema)
+    if state.schema != schema:
+        for rec in state.versions.values():
+            if rec.schema is None:
+                rec.schema = state.schema
+        state.schema = schema
     state.version = version
     state.updated_at = now
     state.versions[version] = VersionRecord(
@@ -89,18 +126,89 @@ def _record_version(state: TableState | None, name: str, version: int,
 
 
 def _replace_record(state: TableState, version: int, df: DataFrame,
-                    row_count: int) -> None:
-    """Re-record a version whose contents were rewritten in place: data
-    and row count change, version number and created_at stay. Rewrites
-    only REMOVE/REPLACE rows, so the old ``max_row_id`` stays a valid
-    (possibly loose) upper bound — looseness is safe."""
+                    schema: dict, row_count: int) -> None:
+    """Re-record a version whose contents were rewritten in place: data,
+    schema and row count change, version number and created_at stay.
+    Rewrites only REMOVE/REPLACE rows, so the old ``max_row_id`` stays a
+    valid (possibly loose) upper bound — looseness is safe."""
     rec = state.versions[version]
     state.versions[version] = VersionRecord(
         version=version, row_count=row_count, columns=df.columns,
         created_at=rec.created_at, description=rec.description,
         max_row_id=rec.max_row_id,
+        schema=None if schema == state.schema else schema,
     )
     state.updated_at = _now_iso()
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and map value nullable — the
+    form a Parquet read returns, whatever the written nullability."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+# Values every node of a recorded schema would repeat (file reads are
+# nullable throughout); the meta file stores such a key only where a
+# schema says otherwise.
+_SCHEMA_DEFAULTS = {"nullable": True, "containsNull": True,
+                    "valueContainsNull": True, "metadata": {}}
+
+
+def _pack_schema(node):
+    """StructType JSON without the keys that hold their _SCHEMA_DEFAULTS
+    value. Field metadata is user data: kept whole, never descended."""
+    if isinstance(node, list):
+        return [_pack_schema(x) for x in node]
+    if not isinstance(node, dict):
+        return node
+    return {k: v if k == "metadata" else _pack_schema(v)
+            for k, v in node.items()
+            if not (k in _SCHEMA_DEFAULTS and v == _SCHEMA_DEFAULTS[k])}
+
+
+def _unpack_schema(node):
+    """Inverse of _pack_schema: every field, array and map node gets back
+    the default-valued keys it was stored without."""
+    if isinstance(node, list):
+        return [_unpack_schema(x) for x in node]
+    if not isinstance(node, dict):
+        return node
+    out = {k: v if k == "metadata" else _unpack_schema(v)
+           for k, v in node.items()}
+    if "name" in out:
+        keys = ("nullable", "metadata")
+    else:
+        keys = {"array": ("containsNull",),
+                "map": ("valueContainsNull",)}.get(out.get("type"), ())
+    for k in keys:
+        out.setdefault(k, {} if k == "metadata" else True)
+    return out
+
+
+def _pack_record(state: TableState, rec: VersionRecord) -> dict:
+    """A version record as the meta file stores it: without its version
+    (the key it is stored under), its default-valued fields, and its
+    columns when they are its schema's field names in order."""
+    schema = rec.schema if rec.schema is not None else state.schema
+    out = {}
+    for f in fields(VersionRecord):
+        x = getattr(rec, f.name)
+        if f.name == "version" or x == f.default or (
+            f.name == "columns" and schema is not None
+            and x == [c["name"] for c in schema["fields"]]
+        ):
+            continue
+        out[f.name] = _pack_schema(x) if f.name == "schema" else x
+    return out
 
 
 class MemoryVersionStore:
@@ -132,10 +240,11 @@ class MemoryVersionStore:
         # row order is nondeterministic (e.g. downstream of a shuffle),
         # tie-break ids could differ between reads of the same version,
         # breaking the "first input row wins" contract.
-        self._data.setdefault(name, {})[version] = df.localCheckpoint(eager=True)
+        frozen = df.localCheckpoint(eager=True)
+        self._data.setdefault(name, {})[version] = frozen
         self._meta[name] = _record_version(
-            self._meta.get(name), name, version, df, row_count, description,
-            max_row_id,
+            self._meta.get(name), name, version, df,
+            frozen.schema.jsonValue(), row_count, description, max_row_id,
         )
 
     def read_version(self, name: str, version: int) -> DataFrame:
@@ -145,8 +254,10 @@ class MemoryVersionStore:
                         row_count: int) -> None:
         """In-place replace a version's contents (GDPR erasure path) —
         version number and created_at stay, data and row_count change."""
-        self._data[name][version] = df.localCheckpoint(eager=True)
-        _replace_record(self._meta[name], version, df, row_count)
+        frozen = df.localCheckpoint(eager=True)
+        self._data[name][version] = frozen
+        _replace_record(self._meta[name], version, df,
+                        frozen.schema.jsonValue(), row_count)
 
     def drop_version(self, name: str, version: int) -> None:
         self._data[name].pop(version, None)
@@ -189,9 +300,15 @@ class ParquetVersionStore:
 
     def _load_meta(self, name: str) -> TableState:
         raw = json.loads(self._meta_path(name).read_text())
-        versions = {
-            int(k): VersionRecord(**v) for k, v in raw.pop("versions").items()
-        }
+        raw["schema"] = _unpack_schema(raw.get("schema"))
+        versions = {}
+        for k, v in raw.pop("versions").items():
+            rec = VersionRecord(**{"version": int(k), "columns": None, **v})
+            rec.schema = _unpack_schema(rec.schema)
+            if rec.columns is None:
+                schema = rec.schema if rec.schema is not None else raw["schema"]
+                rec.columns = [c["name"] for c in schema["fields"]]
+            versions[rec.version] = rec
         return TableState(versions=versions, **raw)
 
     def _save_meta(self, state: TableState) -> None:
@@ -204,8 +321,10 @@ class ParquetVersionStore:
             "registered_at": state.registered_at,
             "updated_at": state.updated_at,
             "versions": {
-                str(v): vars(rec) for v, rec in state.versions.items()
+                str(v): _pack_record(state, rec)
+                for v, rec in state.versions.items()
             },
+            "schema": _pack_schema(state.schema),
         }
         # the meta save IS the version-visibility commit point — it gets
         # the same crash-atomic replace as the registry/snapshot files
@@ -218,7 +337,7 @@ class ParquetVersionStore:
         )
         try:
             with os.fdopen(fd, "w") as f:
-                f.write(json.dumps(raw, indent=2))
+                f.write(json.dumps(raw, separators=(",", ":")))
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(tmp, str(path))
@@ -259,16 +378,36 @@ class ParquetVersionStore:
             writer = writer.partitionBy(self.partition_by)
         writer.parquet(str(path))
 
+    def _read_schema(self, df: DataFrame) -> dict:
+        """StructType JSON of what reading ``df``'s Parquet write returns:
+        every field nullable, the partition column (which keeps its
+        written type) last."""
+        fields = sorted(df.schema.fields, key=lambda f: f.name == self.partition_by)
+        return _as_nullable(StructType(fields)).jsonValue()
+
     def write_version(self, name: str, version: int, df: DataFrame, row_count,
                       description: str = "", max_row_id=None) -> None:
         self._write_parquet(df, self._version_path(name, version))
+        state = self._load_meta(name) if self.exists(name) else None
+        if state is not None and state.schema is None:
+            # legacy metadata: infer each retained version's schema once,
+            # so the table's new schema does not stand in for theirs
+            for rec in state.versions.values():
+                if rec.schema is None:
+                    rec.schema = self.spark.read.parquet(
+                        str(self._version_path(name, rec.version))
+                    ).schema.jsonValue()
         self._save_meta(_record_version(
-            self._load_meta(name) if self.exists(name) else None,
-            name, version, df, row_count, description, max_row_id,
+            state, name, version, df, self._read_schema(df), row_count,
+            description, max_row_id,
         ))
 
     def read_version(self, name: str, version: int) -> DataFrame:
-        return self.spark.read.parquet(str(self._version_path(name, version)))
+        reader = self.spark.read
+        schema = version_schema(self._load_meta(name), version)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(str(self._version_path(name, version)))
 
     def rewrite_version(self, name: str, version: int, df: DataFrame,
                         row_count: int) -> None:
@@ -285,7 +424,7 @@ class ParquetVersionStore:
         shutil.rmtree(final, ignore_errors=True)
         tmp.rename(final)
         state = self._load_meta(name)
-        _replace_record(state, version, df, row_count)
+        _replace_record(state, version, df, self._read_schema(df), row_count)
         self._save_meta(state)
 
     def drop_version(self, name: str, version: int) -> None:

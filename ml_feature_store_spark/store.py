@@ -33,6 +33,7 @@ from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .errors import FeatureStoreError, FeatureTableNotFoundError, FeatureValidationError
 from .operators.asof import asof_join, asof_join_nearest
@@ -45,7 +46,12 @@ from .operators.pit import (
     project,
     temporal_filter,
 )
-from .sources.registry import MemoryVersionStore, ParquetVersionStore
+from .sources.registry import (
+    MemoryVersionStore,
+    ParquetVersionStore,
+    TableState,
+    version_schema,
+)
 
 REQUIRED_COLUMNS = frozenset({ENTITY_COL, TIMESTAMP_COL})
 DEFAULT_MAX_VERSIONS = 10
@@ -160,13 +166,6 @@ class FeatureStore:
                 partition_by=partition_by,
                 sort_within_partitions=sort_within_partitions,
             )
-        # (table, version) -> natural key columns (or None for scalar
-        # keys). A version's schema is immutable, so sniffing the struct
-        # key from the backend ONCE per version is safe — without the
-        # cache every get_table_info/_validate_columns call would pay a
-        # backend version read (a Parquet footer fetch) just to discover
-        # the key (round-8 ADVICE fix). Invalidated per-table on delete().
-        self._key_cache: dict[tuple[str, int], tuple[str, ...] | None] = {}
         # cross-table snapshot manifests: persisted beside the Parquet
         # backend (survive the process) or in-process for the memory one
         self._snapshots: dict[str, SnapshotManifest] = self._load_snapshots()
@@ -237,7 +236,7 @@ class FeatureStore:
         feature_cols = tuple(
             c for c in rec.columns if c not in REQUIRED_COLUMNS and c not in HIDDEN_COLS
         )
-        key_cols = self._entity_key_cols_of(name, state.version)
+        key_cols = self._entity_key_cols_of(name, state)
         return FeatureTableInfo(
             name=state.name,
             columns=feature_cols,
@@ -257,8 +256,7 @@ class FeatureStore:
         every referencing spec): the registry's eager-validation contract
         would otherwise dangle silently until the 3 a.m. build. Pass
         ``cascade=True`` to drop the referencing specs together with the
-        table. The table's TTL default and key cache are released either
-        way."""
+        table. The table's TTL default is released either way."""
         if not self._backend.exists(name):
             return False
         refs = self._spec_references(name)
@@ -284,14 +282,6 @@ class FeatureStore:
         online = name + self._ONLINE_SUFFIX
         if self._backend.exists(online):
             self._backend.drop_table(online)
-        # a later re-creation restarts each dropped table (incl. the
-        # online view; cascaded state tables purge their own) at version
-        # 1, possibly with a different key shape — stale (table,
-        # version) entries must go for EVERY dropped table
-        gone = {name, online}
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] not in gone
-        }
         dropped_ttl = self._ttl.pop(name, None) is not None
         dropped_online = self._online_meta.pop(name, None) is not None
         if dropped_ttl or dropped_online or refs:
@@ -448,16 +438,9 @@ class FeatureStore:
         )
         if row_count() == 0:  # cached observation — no extra job
             self._backend.rollback_version(name, new_version)
-            self._key_cache.pop((name, new_version), None)
             raise FeatureValidationError(
                 f"DataFrame is empty (register('{name}'))"
             )
-        # seed the key-shape cache from the frame we just wrote — the
-        # version's schema is known here, so get_table_info never pays
-        # the backend schema-sniff read (parquet footer job) for it
-        self._key_cache.setdefault(
-            (name, new_version), self._entity_key_cols(prepared)
-        )
         self._prune_history(name)
         # a re-register rewrites history with fresh row ids — the
         # incremental fold equations no longer hold for ANY dependent
@@ -557,9 +540,6 @@ class FeatureStore:
         self._backend.write_version(
             name, new_version, merged, row_count, description,
             max_row_id=new_max,
-        )
-        self._key_cache.setdefault(
-            (name, new_version), self._entity_key_cols(merged)
         )
         self._prune_history(name)
         if widened:
@@ -662,7 +642,6 @@ class FeatureStore:
         )
         if row_count() == 0:
             self._backend.rollback_version(name, new_version)
-            self._key_cache.pop((name, new_version), None)
             raise FeatureValidationError(
                 f"expire_features('{name}'): cutoff {cutoff} would drop every "
                 f"row — refusing to write an empty version."
@@ -1539,9 +1518,6 @@ class FeatureStore:
         dname = name + self._DATASET_SUFFIX
         if self._backend.exists(dname):
             self._backend.drop_table(dname)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != dname
-        }
         self._save_registry()
         return True
 
@@ -1725,21 +1701,13 @@ class FeatureStore:
         for v in self._backend.versions(name):
             if v not in keep_set:
                 self._backend.drop_version(name, v)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != name
-        }
 
     def _drop_state_tables(self, kind: str, name: str) -> None:
-        """Drop ``name``'s state tables and their key-cache entries — a
-        re-created same-named spec restarts its state at version 1, so
-        no stale (table, version) key shape may survive."""
-        gone = {name + suffix for suffix in self._SOURCED_SPECS[kind][2]}
-        for table in gone:
-            if self._backend.exists(table):
-                self._backend.drop_table(table)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] not in gone
-        }
+        """Drop ``name``'s state tables — a re-created same-named spec
+        restarts its state at version 1."""
+        for suffix in self._SOURCED_SPECS[kind][2]:
+            if self._backend.exists(name + suffix):
+                self._backend.drop_table(name + suffix)
 
     def _drop_derived(self, kind: str, name: str) -> bool:
         """Release a spec AND its state tables; False if absent (the
@@ -3444,17 +3412,21 @@ class FeatureStore:
             .repartition(n_par, id_col, "__old_id__")
             .localCheckpoint(eager=False)
         )
-        # verify: exact shingle Jaccard, candidate-bounded on both sides.
-        # Per-DOC frames are computed ONCE and materialized: each feeds
-        # both the digest prune and the exact arm, and without the
-        # checkpoint the plan re-evaluated the corpus-scan-join subtree
-        # per consumer (r13 plan audit). Shingle sets and their 64-bit
-        # digests are per-doc map-side work, bounded by |batch| and
-        # |candidate old docs| — never per pair.
+        # verify: exact shingle Jaccard, candidate-bounded on both sides
+        # (left-semi joins on the candidate ids, whose size estimate is
+        # the doc side's own). Per-DOC frames are computed ONCE and
+        # materialized: each feeds both the digest prune and the exact
+        # arm, and without the checkpoint the plan re-evaluated the
+        # corpus-scan-join subtree per consumer (r13 plan audit).
+        # Shingle sets and their 64-bit digests are per-doc map-side
+        # work, bounded by |candidate new docs| and |candidate old docs|
+        # — never per pair.
         dig = lambda c: F.array_distinct(  # noqa: E731
             F.transform(c, lambda s: F.xxhash64(s))
         )
-        ndoc = new.select(
+        ndoc = new.join(
+            cand.select(id_col), id_col, "left_semi"
+        ).select(
             F.col(id_col),
             F.array_distinct(
                 shingles(F.col(ccol), p["shingle_k"])
@@ -3467,7 +3439,7 @@ class FeatureStore:
             F.col(spec["content_col"]).alias("__old_txt__"),
         )
         odoc = old_src.join(
-            cand.select("__old_id__").distinct(), "__old_id__"
+            cand.select("__old_id__"), "__old_id__", "left_semi"
         ).select(
             "__old_id__",
             F.md5(F.lower(F.trim("__old_txt__"))).alias("__hh_o__"),
@@ -3496,23 +3468,24 @@ class FeatureStore:
         # both digest arrays are distinct): the INTERSECT array is
         # near-empty for dissimilar pairs, where an array_union would
         # allocate an O(|A|+|B|) array per pair (measured 3x slower).
-        # Both doc frames join onto the partitioned pair table as
-        # explicit BROADCASTS — the planner's default was a sort-merge
-        # join that re-shuffled every pair WITH its digest arrays
-        # attached (the §8 antipattern; measured in the r13 plan audit).
-        # At cluster scale the broadcast sides stay bounded: |batch| and
-        # |old docs with a candidate|, both far below the pair count.
+        # Each doc frame joins onto the partitioned pair table as an
+        # explicit BROADCAST when its size estimate is within the
+        # session's autoBroadcastJoinThreshold — the planner's default
+        # was a sort-merge join that re-shuffled every pair WITH its
+        # digest arrays attached (the §8 antipattern; measured in the
+        # r13 plan audit). A side above the threshold keeps the
+        # planner's shuffle join: an unbounded broadcast would have to
+        # fit in the driver and every executor.
+        bn, bo = self._broadcast_if_small(ndoc), self._broadcast_if_small(odoc)
         du = (
             F.size("__dn__")
             + F.size("__do__")
             - F.size(F.array_intersect("__dn__", "__do__"))
         )
         pre = (
-            cand.join(
-                F.broadcast(ndoc.select(id_col, "__na__", "__dn__")), id_col
-            )
+            cand.join(bn(ndoc.select(id_col, "__na__", "__dn__")), id_col)
             .join(
-                F.broadcast(odoc.select("__old_id__", "__no__", "__do__")),
+                bo(odoc.select("__old_id__", "__no__", "__do__")),
                 "__old_id__",
             )
             .withColumn("__du__", du)
@@ -3529,11 +3502,9 @@ class FeatureStore:
         # optimization). Integer-identical sizes -> bit-identical __j__.
         inter = F.size(F.array_intersect("__sh_n__", "__sh_o__"))
         ver = (
-            pre.join(F.broadcast(ndoc.select(id_col, "__sh_n__")), id_col)
+            pre.join(bn(ndoc.select(id_col, "__sh_n__")), id_col)
             .join(
-                F.broadcast(
-                    odoc.select("__old_id__", "__hh_o__", "__sh_o__")
-                ),
+                bo(odoc.select("__old_id__", "__hh_o__", "__sh_o__")),
                 "__old_id__",
             )
             .withColumn("__i__", inter)
@@ -3547,6 +3518,17 @@ class FeatureStore:
             .filter(F.col("__j__") >= threshold)
         )
         return new, signed_new, cand, ver
+
+    @staticmethod
+    def _broadcast_if_small(df: DataFrame):
+        """``F.broadcast`` when ``df``'s plan-size estimate is within the
+        session's ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables
+        it), else the identity — the planner's shuffle join."""
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if 0 <= size <= conf.autoBroadcastJoinThreshold():
+            return F.broadcast
+        return lambda side: side
 
     def dedup_matches(
         self,
@@ -4992,7 +4974,7 @@ class FeatureStore:
         if first in self._derived:
             first = self._derived[first]["sources"][0]
         key_cols = self._entity_key_cols_of(
-            first, self._backend.meta(first).version
+            first, self._backend.meta(first)
         ) if self._backend.exists(first) else None
         return list(key_cols) if key_cols else [ENTITY_COL]
 
@@ -5960,34 +5942,34 @@ class FeatureStore:
     # push down (nested schema pruning is on by default in Spark 4).
 
     @staticmethod
-    def _entity_key_cols(df: DataFrame) -> tuple[str, ...] | None:
-        """Natural key columns of a composite-key frame (struct-typed
-        ``entity_id``), or None for the classic scalar key. Auxiliary
-        state tables (rollup state: group columns + merge counters, no
-        entity key at all) also return None — before this guard,
-        ``list_tables()``/``get_table_info`` CRASHED on any catalog
-        containing a rollup (round-9 fix, pinned in
+    def _entity_key_cols(
+        df: DataFrame | StructType,
+    ) -> tuple[str, ...] | None:
+        """Natural key columns of a composite-key frame or schema
+        (struct-typed ``entity_id``), or None for the classic scalar key.
+        Auxiliary state tables (rollup state: group columns + merge
+        counters, no entity key at all) also return None — before this
+        guard, ``list_tables()``/``get_table_info`` CRASHED on any
+        catalog containing a rollup (round-9 fix, pinned in
         tests/test_round9_store.py)."""
-        from pyspark.sql.types import StructType
-
-        if ENTITY_COL not in df.columns:
+        schema = df if isinstance(df, StructType) else df.schema
+        if ENTITY_COL not in schema.fieldNames():
             return None
-        dt = df.schema[ENTITY_COL].dataType
+        dt = schema[ENTITY_COL].dataType
         return tuple(dt.fieldNames()) if isinstance(dt, StructType) else None
 
     def _entity_key_cols_of(
-        self, name: str, version: int
+        self, name: str, state: TableState
     ) -> tuple[str, ...] | None:
-        """Key columns of a STORED version, cached per (table, version):
-        a version's schema is immutable, so the struct-key sniff pays its
-        backend read (Parquet footer fetch) once, not on every
-        get_table_info/_validate_columns call."""
-        k = (name, version)
-        if k not in self._key_cache:
-            self._key_cache[k] = self._entity_key_cols(
-                self._backend.read_version(name, version)
-            )
-        return self._key_cache[k]
+        """Key columns of ``name``'s current version, from the schema its
+        metadata records (``state`` is the table's loaded metadata) — no
+        backend read, and nothing cached that another process's drop and
+        re-register could leave stale. Legacy metadata without a recorded
+        schema falls back to the backend's schema-inferring read."""
+        schema = version_schema(state, state.version)
+        if schema is None:
+            schema = self._backend.read_version(name, state.version).schema
+        return self._entity_key_cols(schema)
 
     @staticmethod
     def _compose_entity_key(

@@ -167,6 +167,39 @@ class TestBuildAndBatch:
         # old ids really are stored corpus ids (never batch ids)
         assert all(p.old_id % 4 != 0 for p in pairs)
 
+    def test_doc_sides_above_broadcast_threshold_shuffle(self, spark, docs):
+        """The verify joins broadcast a doc side only when its size
+        estimate is within spark.sql.autoBroadcastJoinThreshold: with the
+        threshold lowered below the batch, neither side is broadcast (a
+        shuffle join instead) and the verified pairs are unchanged."""
+        fs = FeatureStore(spark)
+        fs.register("corpus", docs.filter("entity_id % 4 != 0"))
+        fs.create_dedup_index("dd", "corpus")
+        new = docs.filter("entity_id % 4 = 0").select(
+            F.col("entity_id").alias("doc_id"), "text"
+        ).unionByName(
+            docs.filter("entity_id % 4 = 1").limit(5).select(
+                (F.col("entity_id") + 1_000_000).alias("doc_id"), "text"
+            )
+        )
+
+        def run():
+            out = fs.dedup_matches("dd", new, id_col="doc_id")
+            rows = sorted(tuple(r) for r in out.collect())
+            return rows, out._jdf.queryExecution().executedPlan().toString()
+
+        want, plan = run()
+        assert want and "BroadcastExchange" in plan
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        default = spark.conf.get(key)
+        spark.conf.set(key, "1")
+        try:
+            got, plan = run()
+        finally:
+            spark.conf.set(key, default)
+        assert got == want
+        assert "BroadcastExchange" not in plan, plan
+
     def test_unknown_index_and_param_validation(self, spark, docs):
         fs = FeatureStore(spark)
         fs.register("corpus", docs.limit(50))

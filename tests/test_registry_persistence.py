@@ -351,16 +351,15 @@ class TestAdviceGuards:
         with pytest.raises(FeatureValidationError, match="in order"):
             fs.merge_entities("t", bad)
 
-    def test_get_table_info_uses_key_cache(self, spark):
-        """The struct-key sniff reads the backend once per (table,
-        version), not per call (round-8 ADVICE fix)."""
+    def test_get_table_info_reads_no_version(self, spark):
+        """The struct-key sniff reads the schema the version metadata
+        records, never the backend's data (round-8 ADVICE fix)."""
         fs = FeatureStore(spark)
         df = spark.createDataFrame(
             [("u1", "m1", ts("2024-01-01"), 5)],
             ["user_id", "merchant_id", "timestamp", "x"],
         )
         fs.register("t", df, entity_cols=["user_id", "merchant_id"])
-        fs.get_table_info("t")
         calls = {"n": 0}
         orig = fs._backend.read_version
 
@@ -372,7 +371,7 @@ class TestAdviceGuards:
         info = fs.get_table_info("t")
         assert info.entity_columns == ("user_id", "merchant_id")
         fs._validate_columns("t", ["x"])
-        assert calls["n"] == 0  # cached — no backend read for the sniff
+        assert calls["n"] == 0  # recorded schema — no backend read
         fs._backend.read_version = orig
 
 

@@ -1,6 +1,6 @@
 """Round-9 store hardening: crash-atomic registry/snapshot writes, the
-NO_TTL per-call opt-out sentinel, drop_rollup key-cache invalidation,
-and the one-job register (row count observed on the write action)."""
+NO_TTL per-call opt-out sentinel, drop_rollup + re-create, and the
+one-job register (row count observed on the write action)."""
 
 from __future__ import annotations
 
@@ -135,8 +135,8 @@ class TestNoTtlSentinel:
             store.register("v", self._df(spark), ttl_seconds=float("nan"))
 
 
-class TestDropRollupKeyCache:
-    def test_drop_rollup_purges_state_table_key_cache(self, spark, store):
+class TestDropRollup:
+    def test_drop_and_recreate_rollup(self, spark, store):
         rows = [("e1", ts("2024-01-01"), "a", 1.0), ("e2", ts("2024-01-02"), "b", 2.0)]
         df = spark.createDataFrame(
             rows, ["entity_id", "timestamp", "grp", "val"]
@@ -147,18 +147,16 @@ class TestDropRollupKeyCache:
         # list_tables must tolerate the keyless rollup state table in the
         # catalog (it CRASHED before the round-9 _entity_key_cols guard)
         assert rname in [i.name for i in store.list_tables()]
-        # populate the per-(table, version) key cache for the state table
-        store.get_table_info(rname)
-        assert any(k[0] == rname for k in store._key_cache)
+        assert store.get_table_info(rname).entity_columns == ("entity_id",)
         store.drop_rollup("r")
-        assert not any(k[0] == rname for k in store._key_cache), (
-            "a stale key-shape entry survived drop_rollup; a re-created "
-            "same-named rollup would serve it at version 1"
-        )
-        # re-create cleanly: the state table restarts at version 1 with
-        # a fresh cache entry
+        assert not store._backend.exists(rname)
+        # re-create cleanly: the state table restarts at version 1 and
+        # the rollup serves the source's groups
         store.create_rollup("src", "r", ["grp"], ["val"])
         assert store.get_table_info(rname).version == 1
+        assert sorted(r.grp for r in store.get_rollup("r").collect()) == [
+            "a", "b"
+        ]
 
 
 class TestExportOnline:
@@ -369,15 +367,19 @@ class TestOneJobRegister:
         assert len(jobs) == 1
         assert info.row_count == 5
 
-    def test_empty_register_rolls_back_unpublished(self, spark, store):
+    def test_empty_register_rolls_back_unpublished(
+        self, spark, store, feature_df
+    ):
         df = spark.createDataFrame(
             [], "entity_id string, timestamp timestamp, f double"
         )
         with pytest.raises(FeatureValidationError, match="empty"):
             store.register("ghost", df)
-        # the rollback leaves NO trace: no table, no version, no cache
+        # the rollback leaves NO trace: no table, no version, and a
+        # later register of the name starts at version 1
         assert "ghost" not in store.table_names
-        assert not any(k[0] == "ghost" for k in store._key_cache)
+        assert not store._backend.exists("ghost")
+        assert store.register("ghost", feature_df).version == 1
 
     def test_empty_reregister_keeps_previous_version(
         self, spark, store, feature_df
