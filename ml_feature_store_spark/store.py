@@ -29,6 +29,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from functools import reduce
 from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -126,9 +127,10 @@ class FeatureStore:
     ----------
     spark : SparkSession
     storage_path : optional path; when given, versions are persisted as
-        Parquet under ``storage_path/<table>/v=<n>/`` and survive the
-        session. When omitted, versions are in-memory DataFrame refs
-        (reference behavior).
+        Parquet fragment directories under ``storage_path/<table>/`` (an
+        append adds one holding its batch) and survive the session. When
+        omitted, versions are in-memory DataFrame refs (reference
+        behavior).
     max_versions : total versions retained per table (current + history);
         must be >= 1 (reference store.py:107-110).
     partition_by / sort_within_partitions : storage layout knobs passed to
@@ -472,19 +474,20 @@ class FeatureStore:
         the tie-break order (the same outcome pandas' stable sort of the
         concatenated frame would give, reference store.py:483-485): the
         new batch's hidden ``__row_id__`` is offset past the stored
-        maximum. At scale this is the right write path: the old version's
-        files are re-referenced by a union plan, not rewritten row-by-row,
-        and the new batch is the only data shuffled in.
+        maximum. The new version lists the current version's fragments
+        plus one holding the batch (see ``sources/registry.py``): the
+        write costs the batch, not the history. A batch whose values
+        would widen an existing column's type is the exception — the
+        union is then written whole, as one new fragment.
 
         ``allow_new_columns=True`` permits SCHEMA WIDENING: the incoming
         batch may carry feature columns the table does not have yet;
-        existing history null-backfills them in the new version (a
-        typed-NULL projection over re-referenced files — no rewrite),
-        while earlier versions keep their narrower schema for time
-        travel. Widening is the only evolution allowed — an incoming
-        batch MISSING existing columns is still refused (silently
-        null-filling history-shaped columns for new rows is a pipeline
-        bug, not evolution; re-register to shrink). A widening append
+        existing history reads them as nulls in the new version (older
+        fragments are not rewritten), while earlier versions keep their
+        narrower schema for time travel. Widening is the only evolution
+        allowed — an incoming batch MISSING existing columns is still
+        refused (silently null-filling history-shaped columns for new
+        rows is a pipeline bug, not evolution; re-register to shrink). A widening append
         invalidates the incremental-online watermark: the materialized
         snapshot's schema no longer matches history, so the next
         materialize_online(incremental=True) falls back to one full
@@ -518,13 +521,11 @@ class FeatureStore:
                 f"incoming has {sorted(incoming)}.{hint}"
             )
         prepared = self._prepare_dataframe(df.select(*visible, *widened))
-        if widened:
-            # null-backfill history for the new columns, typed from the
-            # incoming batch — a projection over re-referenced files
-            for c in widened:
-                current = current.withColumn(
-                    c, F.lit(None).cast(prepared.schema[c].dataType)
-                )
+        for c in widened:
+            # typed like the incoming batch: only to type the union below
+            current = current.withColumn(
+                c, F.lit(None).cast(prepared.schema[c].dataType)
+            )
         # from version metadata (observed at the last publish) — no
         # full-history max() scan; loose-after-rewrite is fine, ids only
         # need to keep increasing
@@ -532,14 +533,27 @@ class FeatureStore:
         prepared = prepared.withColumn(
             ROW_ID_COL, F.col(ROW_ID_COL) + F.lit(int(max_id) + 1)
         )
+        # the union is analysed, never run: when it keeps every stored
+        # column and its type, the batch (cast to the union's types) is
+        # the only thing written; otherwise the union is, whole
         merged = current.select(*prepared.columns).unionByName(prepared)
-        # same one-job contract as register: the union is evaluated once,
-        # by the write, with count + new max row id observed on the way
+        stored = {f.name: f.dataType.simpleString() for f in current.schema}
+        parent = self._backend.meta(name).version
+        extends: tuple[int, ...] = ()
+        if set(stored) <= set(merged.columns) and all(
+            stored[f.name] == f.dataType.simpleString() for f in merged.schema
+        ):
+            merged = prepared.select(*[
+                F.col(f.name).cast(f.dataType).alias(f.name, metadata=f.metadata)
+                for f in merged.schema
+            ])
+            extends = (parent,)
+        # same one-job contract as register: the write evaluates the
+        # batch once, with count + new max row id observed on the way
         merged, row_count, new_max = self._observed_stats(merged)
-        new_version = self._backend.meta(name).version + 1
         self._backend.write_version(
-            name, new_version, merged, row_count, description,
-            max_row_id=new_max,
+            name, parent + 1, merged, row_count, description,
+            max_row_id=new_max, extends=extends,
         )
         self._prune_history(name)
         if widened:
@@ -661,11 +675,13 @@ class FeatureStore:
         that accumulates millions of them becomes listing- and
         open()-bound long before it is IO-bound — periodic compaction is
         what keeps scan parallelism governed by ``maxPartitionBytes``
-        instead of file count (what OPTIMIZE does on Delta/Iceberg;
-        here it is ``repartition`` + ``rewrite_version``'s
-        scratch-write-and-swap, so readers never see a half-compacted
-        version). In-memory backends compact to a no-op on file counts
-        (reported as None) but still validate the version.
+        instead of file count (what OPTIMIZE does on Delta/Iceberg).
+        The version's fragment chain is folded into ONE new fragment and
+        the version re-pointed at it in one meta commit, so readers never
+        see a half-compacted version; fragments other versions still
+        list are left as they are. In-memory backends compact to a no-op
+        on file counts (reported as None) but still validate the
+        version; so do legacy fragments whose files were never recorded.
 
         Returns {"version", "rows", "files_before", "files_after"}.
         """
@@ -684,10 +700,9 @@ class FeatureStore:
             )
 
         def _file_count() -> int | None:
-            vp = getattr(self._backend, "_version_path", None)
-            if vp is None:
-                return None
-            return sum(1 for _ in vp(name, v).glob("**/*.parquet"))
+            state = self._backend.meta(name)
+            files = [state.fragments[k].files for k in state.versions[v].fragments]
+            return None if None in files else sum(files)
 
         files_before = _file_count()
         expected = self._backend.meta(name).versions[v].row_count
@@ -698,7 +713,7 @@ class FeatureStore:
                 f"compact_version('{name}' v{v}): row count changed "
                 f"({expected} -> {rows}); refusing to rewrite."
             )
-        self._backend.rewrite_version(name, v, compacted, rows)
+        self._backend.compact_version(name, v, compacted, rows)
         return {
             "version": v,
             "rows": rows,
@@ -713,17 +728,19 @@ class FeatureStore:
         rows from EVERY retained version of the table and from its online
         snapshot. Deliberately NOT copy-on-write — unlike ``upsert`` /
         ``expire_features``, the point of erasure is that no
-        time-travelable copy survives, so each affected version is
-        rewritten in place (scratch-write + directory swap; see
-        ``ParquetVersionStore.rewrite_version``). Versions with no
-        matching rows are left untouched (no pointless rewrite of 100 TB
-        of history for an entity that appears in two versions).
+        time-travelable copy survives, so each affected FRAGMENT is
+        rewritten in place, once, whichever versions share it
+        (scratch-write + directory swap; see
+        ``ParquetVersionStore._replace_fragment``), and every version
+        listing it re-records its row count. Fragments with no matching
+        rows are left untouched (no pointless rewrite of 100 TB of
+        history for an entity that appears in two fragments).
 
         Returns {(table, version): rows_removed} as the audit record.
 
         Scale shape: the IN-list anti-filter is a map-only pushdown
-        predicate per version; cost is one read+write of only the
-        affected versions. Rollup views are aggregates and are NOT
+        predicate per fragment; cost is one read+write of only the
+        affected fragments. Rollup views are aggregates and are NOT
         rewritten (counts/sums over many entities are not personal data
         under the aggregation exemption); call ``refresh_rollup`` after
         erasure if the deployment's policy says otherwise."""
@@ -737,9 +754,9 @@ class FeatureStore:
         for target in (name, name + self._ONLINE_SUFFIX):
             if not self._backend.exists(target):
                 continue
-            for v in self._backend.versions(target):
-                df = self._backend.read_version(target, v)
-                before = self._backend.meta(target).versions[v].row_count
+            for key, versions in self._backend.fragments(target).items():
+                df = self._backend.read_fragment(target, key)
+                before = self._backend.meta(target).fragments[key].rows
                 key_cols = self._entity_key_cols(df)
                 if key_cols:
                     kept = df.join(
@@ -755,8 +772,11 @@ class FeatureStore:
                     kept = df.filter(~F.col(ENTITY_COL).isin(ids))
                 after = kept.count()
                 if after != before:
-                    self._backend.rewrite_version(target, v, kept, after)
-                    removed[(target, v)] = before - after
+                    self._backend.rewrite_fragment(target, key, kept, after)
+                    for v in versions:
+                        removed[(target, v)] = (
+                            removed.get((target, v), 0) + before - after
+                        )
         if removed:
             # an erase followed by an equal-size append would evade row
             # accounting — invalidate so the next incremental rebuilds
@@ -925,10 +945,11 @@ class FeatureStore:
         so the next incremental call transparently runs a FULL rebuild
         (correct, never stale); out-of-band drift the invalidation
         cannot see is still caught by row accounting, which raises (the
-        ``refresh_rollup`` contract). Falls back to a full build when
-        no snapshot exists yet. The (watermark, src_rows) meta persists
-        in the registry, so a fresh process can keep materializing
-        incrementally."""
+        ``refresh_rollup`` contract; the count rides the snapshot write,
+        and a drifted fold is unpublished before the error). Falls back
+        to a full build when no snapshot exists yet. The (watermark,
+        src_rows) meta persists in the registry, so a fresh process can
+        keep materializing incrementally."""
         self._require_table(name)
         online = name + self._ONLINE_SUFFIX
         src_meta = self._backend.meta(name)
@@ -936,23 +957,8 @@ class FeatureStore:
         current = self._current(name)
         meta = self._online_meta.get(name)
         watermark: int
+        fold = None  # (rows, max row id) thunks of an incremental fold
         if incremental and meta is not None and self._backend.exists(online):
-            delta = current.filter(F.col(ROW_ID_COL) > meta["watermark"])
-            # one delta-sized pass: accounting count + the new watermark
-            # (the incremental lane must not scan history — appends only
-            # add ids above the old watermark, so max(delta) suffices)
-            drow = delta.agg(
-                F.count("*").alias("n"), F.max(ROW_ID_COL).alias("wm")
-            ).collect()[0]
-            delta_rows = int(drow["n"])
-            watermark = max(meta["watermark"], int(drow["wm"] or 0))
-            if meta["src_rows"] + delta_rows != cur_rows:
-                raise FeatureStoreError(
-                    f"materialize_online('{name}', incremental=True): "
-                    f"history drifted out-of-band since the last "
-                    f"materialize — run a full materialize_online"
-                    f"('{name}')."
-                )
             prev = self._backend.read_version(
                 online, self._backend.versions(online)[-1]
             )
@@ -962,9 +968,19 @@ class FeatureStore:
                     f"schema changed since the last materialize — run a "
                     f"full materialize_online('{name}')."
                 )
-            snap = latest_per_entity(
-                prev.select(*current.columns).unionByName(delta)
-            )
+            prev = prev.select(*current.columns)
+            delta = self._delta_since(name, src_meta.version, meta["watermark"])
+            fold = []
+            if delta is not None:
+                # the accounting count and the new watermark (appends only
+                # add ids above the old one, so max(delta) suffices) ride
+                # the snapshot write: the incremental lane reads the
+                # fragments written since the snapshot once, never history.
+                # The delta is the union's left side, so the write runs in
+                # the session its observation is registered in.
+                delta, *fold = self._observed_stats(delta)
+                prev = delta.unionByName(prev)
+            snap = latest_per_entity(prev)
         else:
             snap = latest_per_entity(current)
             # metadata watermark (observed at publish) — no history scan
@@ -984,6 +1000,19 @@ class FeatureStore:
             online, version, snap, n_rows, f"online snapshot of '{name}'"
         )
         row_count = n_rows()
+        if fold is not None:
+            delta_rows, wm = [f() for f in fold] or (0, None)
+            if meta["src_rows"] + delta_rows != cur_rows:
+                # error path only: unpublish the fold, as register does
+                # for an empty input
+                self._backend.rollback_version(online, version)
+                raise FeatureStoreError(
+                    f"materialize_online('{name}', incremental=True): "
+                    f"history drifted out-of-band since the last "
+                    f"materialize — run a full materialize_online"
+                    f"('{name}')."
+                )
+            watermark = max(meta["watermark"], wm or 0)
         # online view keeps only the latest snapshot
         for v in self._backend.versions(online)[:-1]:
             self._backend.drop_version(online, v)
@@ -993,6 +1022,15 @@ class FeatureStore:
         }
         self._save_registry()
         return row_count
+
+    def _delta_since(
+        self, name: str, version: int, watermark: int
+    ) -> DataFrame | None:
+        """Rows of ``version`` with ``__row_id__`` above ``watermark``,
+        read from only the fragments whose recorded ``max_row_id`` can
+        hold any — None when none can."""
+        hot = self._backend.read_delta(name, version, watermark)
+        return None if hot is None else hot.filter(F.col(ROW_ID_COL) > watermark)
 
     def _invalidate_online_meta(self, name: str) -> None:
         """History of ``name`` was REWRITTEN (not appended): the
@@ -1076,14 +1114,13 @@ class FeatureStore:
             # is out-of-band drift, and detecting it AFTER the offline
             # append would leave a half-applied push (a retry would
             # double-ingest the batch). A failed push writes nothing.
+            # Only fragments written since the snapshot are read; in
+            # steady state (materialized after the last push) none is.
             meta = self._online_meta[name]
             src_meta = self._backend.meta(name)
             cur_rows = src_meta.versions[src_meta.version].row_count
-            pre_delta = (
-                self._current(name)
-                .filter(F.col(ROW_ID_COL) > meta["watermark"])
-                .count()
-            )
+            delta = self._delta_since(name, src_meta.version, meta["watermark"])
+            pre_delta = 0 if delta is None else delta.count()
             if meta["src_rows"] + pre_delta != cur_rows:
                 raise FeatureStoreError(
                     f"push('{name}'): offline history drifted out-of-band "
@@ -1632,32 +1669,41 @@ class FeatureStore:
         return ver, rows, int(m), df
 
     def _write_state(
-        self, table: str, df: DataFrame, description: str
+        self, table: str, df: DataFrame, description: str,
+        extends: Sequence[int] = (),
     ) -> tuple[int, int]:
         """Write ``df`` as the NEXT version of state table ``table``
         (never overwriting the version the published spec pins); the
-        row count rides the write, so the encode runs once. Returns
-        (version, rows)."""
+        row count rides the write, so the encode runs once. With
+        ``extends`` the new version is those versions' fragments plus
+        one holding ``df`` — one fragment per refresh, never folded into
+        the tail: the chain length is the compaction signal
+        ``n_fragments`` reports. Returns (version, rows)."""
         df, n_rows = self._observed_count(df)
         ver = (
             self._backend.meta(table).version + 1
             if self._backend.exists(table) else 1
         )
-        self._backend.write_version(table, ver, df, n_rows, description)
+        self._backend.write_version(
+            table, ver, df, n_rows, description, extends=extends,
+            fold_tail=False,
+        )
         return ver, n_rows()
 
     @staticmethod
-    def _pin_fields(kind: str, src_version: int, frags: list[int]) -> dict:
-        """Spec fields pinning the state version(s) a publish covers.
+    def _pin_fields(kind: str, src_version: int, pins: list[int]) -> dict:
+        """Spec fields pinning the state version a publish covers.
         Rollup specs pin one ``state_version`` (their registry layout
-        predates source-version pins); index specs pin the fragment
-        chain plus the source version it covers."""
+        predates source-version pins); index specs pin ``data_version``
+        plus the source version it covers. ``data_versions`` — a chain
+        of state versions read as a union — survives only from legacy
+        registries, until the next refresh or compaction."""
         if kind == "rollup":
-            return {"state_version": frags[-1]}
+            return {"state_version": pins[-1]}
         return {
             "src_version": src_version,
-            "data_version": frags[-1],
-            "data_versions": list(frags),
+            "data_version": pins[-1],
+            "data_versions": pins if len(pins) > 1 else None,
         }
 
     def _publish_derived(
@@ -1721,10 +1767,10 @@ class FeatureStore:
         return True
 
     def _pinned_state_versions(self, spec: dict, dname: str) -> list[int]:
-        """The state-table version(s) a spec pins: the append-mode
-        fragment chain (``data_versions``), a single pin
-        (``data_version``, or a rollup's ``state_version``), or latest
-        for legacy registries that predate pinning."""
+        """The state-table version(s) a spec pins: one (``data_version``,
+        or a rollup's ``state_version``), latest for legacy registries
+        that predate pinning, or — in legacy registries only — a chain
+        of versions (``data_versions``) read as a union."""
         if spec.get("data_versions"):
             return [int(v) for v in spec["data_versions"]]
         pin = spec.get("data_version") or spec.get("state_version")
@@ -1733,19 +1779,28 @@ class FeatureStore:
         return [self._backend.versions(dname)[-1]]
 
     def _derived_state(self, kind: str, name: str) -> DataFrame:
-        """The data state table at the version(s) the SPEC pins — never a
-        just-written-but-unpublished orphan version. A refreshed index
-        is a FRAGMENT CHAIN (base + one delta fragment per refresh):
-        the read is a union of the pinned fragments, each scan still
-        pruned by the serving predicate; compaction folds the chain
-        back to one version."""
+        """The data state table at the version the SPEC pins — never a
+        just-written-but-unpublished orphan version. A refreshed index's
+        version is a FRAGMENT CHAIN (base + one delta fragment per
+        refresh) that the backend reads in one scan, still pruned by the
+        serving predicate; compaction folds the chain back to one
+        fragment."""
         spec = self._derived_spec(kind, name)
         dname = self._derived_data_table(kind, name)
-        out = None
-        for v in self._pinned_state_versions(spec, dname):
-            d = self._backend.read_version(dname, v)
-            out = d if out is None else out.unionByName(d)
-        return out
+        return reduce(DataFrame.unionByName, [
+            self._backend.read_version(dname, v)
+            for v in self._pinned_state_versions(spec, dname)
+        ])
+
+    def _state_fragments(self, kind: str, name: str) -> int:
+        """Fragments in the state a spec pins (its chain length)."""
+        spec = self._derived_spec(kind, name)
+        dname = self._derived_data_table(kind, name)
+        versions = self._backend.meta(dname).versions
+        return sum(
+            len(versions[v].fragments)
+            for v in self._pinned_state_versions(spec, dname)
+        )
 
     def _index_info(self, kind: str, name: str) -> dict[str, Any]:
         """A copy of an index spec plus its fragment-chain length."""
@@ -1753,11 +1808,7 @@ class FeatureStore:
         return {
             **spec,
             "params": dict(spec["params"]),
-            "n_fragments": len(
-                self._pinned_state_versions(
-                    spec, self._derived_data_table(kind, name)
-                )
-            ),
+            "n_fragments": self._state_fragments(kind, name),
         }
 
     def _fold_derived(self, kind: str, name: str, encode, merge=None) -> int:
@@ -1776,11 +1827,12 @@ class FeatureStore:
         equation and must rebuild.
 
         ``encode`` maps the delta rows to state rows. Indexes append
-        the encoded delta as a new FRAGMENT and the spec pins the
-        extended chain — refresh I/O is O(delta) end to end. Rollups
-        pass ``merge(state, encoded delta)``, written as one new
-        version. An empty delta writes nothing and republishes the
-        accounting. Returns the source's row count."""
+        the encoded delta as a new backend FRAGMENT: the new state
+        version extends the pinned one, and the spec pins it — refresh
+        I/O is O(delta) end to end. Rollups pass ``merge(state, encoded
+        delta)``, written as one new full version. An empty delta writes
+        nothing and republishes the accounting. Returns the source's row
+        count."""
         spec = self._derived_spec(kind, name)
         if spec.get("rewritten"):
             raise self._rewritten_error(kind, name, spec)
@@ -1795,54 +1847,66 @@ class FeatureStore:
                 f"re-registered; rebuild with create_{m}()."
             )
         dname = self._derived_data_table(kind, name)
-        frags = self._pinned_state_versions(spec, dname)
+        pins = self._pinned_state_versions(spec, dname)
         if delta_rows:
             state = encode(delta)
             if merge is not None:
                 state = merge(self._derived_state(kind, name), state)
-                frags = []
             ver, _ = self._write_state(
                 dname, state,
                 f"refresh ({delta_rows} delta rows) of {kind} '{name}'",
+                extends=() if merge is not None else pins,
             )
-            frags = frags + [ver]
+            pins = [ver]
         self._publish_derived(
             kind, name,
             {
                 **spec,
                 "watermark": watermark,  # the PINNED snapshot's bound
                 "src_rows": cur_rows,
-                **self._pin_fields(kind, src_version, frags),
+                **self._pin_fields(kind, src_version, pins),
             },
-            {dname: frags},
+            {dname: pins},
         )
         return cur_rows
 
     def _compact_derived(self, kind: str, name: str, layout=None) -> int:
-        """Fold an index's refresh FRAGMENT CHAIN back into one state
-        version — the OPTIMIZE-style maintenance job that pairs with
-        append-mode refresh. Serving results are IDENTICAL before and
-        after: physical layout only, so no source re-read and no
-        watermark change. ``layout`` optionally clusters the rewrite.
-        Publish-then-prune as everywhere. Returns the number of
-        fragments folded (1 = already compact, still re-pinned)."""
+        """Fold an index's refresh FRAGMENT CHAIN back into one fragment
+        — the OPTIMIZE-style maintenance job that pairs with append-mode
+        refresh, done by the backend's own compaction: the pinned state
+        version is re-pointed at the new fragment in one meta commit, so
+        the spec keeps its pin (a legacy chain of pinned versions is
+        folded into a new version instead, publish-then-prune). Serving
+        results are IDENTICAL before and after: physical layout only, so
+        no source re-read and no watermark change. ``layout`` optionally
+        clusters the rewrite. Returns the number of fragments folded
+        (1 = already compact, still rewritten)."""
         spec = self._derived_spec(kind, name)
         self._assert_registry_current(
             f"compact_{kind.replace(' ', '_')}('{name}')"
         )
         dname = self._derived_data_table(kind, name)
-        frags = self._pinned_state_versions(spec, dname)
+        pins = self._pinned_state_versions(spec, dname)
+        n = self._state_fragments(kind, name)
         merged = self._derived_state(kind, name)
+        if layout is not None:
+            merged = layout(merged)
+        if len(pins) == 1:
+            self._backend.compact_version(
+                dname, pins[0], merged,
+                self._backend.meta(dname).versions[pins[0]].row_count,
+            )
+            return n
+        # a legacy chain of state versions: folded into a new one
         ver, _ = self._write_state(
-            dname, merged if layout is None else layout(merged),
-            f"compaction of {len(frags)} fragment(s) of {kind} '{name}'",
+            dname, merged, f"compaction of {n} fragment(s) of {kind} '{name}'"
         )
         self._publish_derived(
             kind, name,
-            {**spec, "data_version": ver, "data_versions": [ver]},
+            {**spec, **self._pin_fields(kind, spec["src_version"], [ver])},
             {dname: [ver]},
         )
-        return len(frags)
+        return n
 
     # ------------------------------------------------------------------ #
     # incremental rollup maintenance (materialized aggregate views)
