@@ -13,9 +13,10 @@ storage concern behind a small interface with two implementations:
   ``<root>/<table>/`` plus a JSON meta file. This is the
   Delta-time-travel fallback (delta-spark is not available in this
   environment); on a cluster you would swap in a Delta/Iceberg-backed store
-  and map version -> snapshot (``versionAsOf``). Writes optionally
-  ``partitionBy`` a derived date column and ``sortWithinPartitions
-  (entity, ts)`` for scan locality / pruning at scale.
+  and map version -> snapshot (``versionAsOf``). Writes
+  ``sortWithinPartitions(entity, ts)`` for scan locality and, on a
+  ``date_partition`` store, ``partitionBy`` the hidden date column for
+  pruning at scale.
 
 Versions are log-structured. A version record lists the FRAGMENTS it is
 made of — immutable directories (frozen frames in memory), named after
@@ -74,6 +75,32 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+from ..operators.pit import ENTITY_COL, TIMESTAMP_COL
+
+
+def atomic_write_text(path: Path, text: str) -> None:
+    """Crash-atomic replace, the one writer of every JSON state file
+    (table meta, spec registry, snapshot manifests): write a temp file
+    in the SAME directory (so the rename never crosses filesystems) and
+    ``os.replace`` it over the target. A crash mid-write leaves either
+    the old file or the new one — never a truncated JSON that bricks
+    every later open with a parse error."""
+    fd, tmp = tempfile.mkstemp(
+        dir=str(path.parent), prefix=path.name + ".", suffix=".tmp"
+    )
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, str(path))
+    except BaseException:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+        raise
 
 
 @dataclass
@@ -543,15 +570,16 @@ class ParquetVersionStore(_VersionStore):
     ``root/<table>/``."""
 
     META = "_meta.json"
+    # every fragment is sorted by key then time within each file: an
+    # entity's rows sit together, so key filters skip row groups
+    SORT = (ENTITY_COL, TIMESTAMP_COL)
 
     def __init__(self, spark: SparkSession, root: str | Path,
-                 partition_by: str | None = None,
-                 sort_within_partitions: tuple[str, ...] = ()) -> None:
+                 partition_by: str | None = None) -> None:
         self.spark = spark
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
         self.partition_by = partition_by
-        self.sort_within_partitions = sort_within_partitions
 
     # -- meta persistence --------------------------------------------------
     def _meta_path(self, name: str) -> Path:
@@ -609,24 +637,8 @@ class ParquetVersionStore(_VersionStore):
                 for k, f in state.fragments.items()
             },
         }
-        # the meta save IS the version-visibility commit point — it gets
-        # the same crash-atomic replace as the registry/snapshot files
-        # (a truncated _meta.json would brick every read of the table)
-        fd, tmp = tempfile.mkstemp(
-            dir=str(path.parent), prefix=self.META + ".", suffix=".tmp"
-        )
-        try:
-            with os.fdopen(fd, "w") as f:
-                f.write(json.dumps(raw, separators=(",", ":")))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, str(path))
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
+        # the meta save IS the version-visibility commit point
+        atomic_write_text(path, json.dumps(raw, separators=(",", ":")))
 
     # -- catalog ----------------------------------------------------------
     def table_names(self) -> list[str]:
@@ -644,11 +656,11 @@ class ParquetVersionStore(_VersionStore):
         return self._path(name, _own_key(version))
 
     def _write_parquet(self, df: DataFrame, path: Path) -> dict:
-        """The storage layout every fragment write shares: optional
+        """The storage layout every fragment write shares:
         ``sortWithinPartitions`` and ``partitionBy`` on the columns the
         frame actually has. Returns the bytes, files and layout written."""
         out = df
-        cols = [c for c in self.sort_within_partitions or () if c in df.columns]
+        cols = [c for c in self.SORT if c in df.columns]
         if cols:
             out = out.sortWithinPartitions(*cols)
         writer = out.write.mode("overwrite")

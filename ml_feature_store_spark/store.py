@@ -26,6 +26,7 @@ operators/asof.py.
 
 from __future__ import annotations
 
+import json
 import math
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -51,6 +52,7 @@ from .sources.registry import (
     MemoryVersionStore,
     ParquetVersionStore,
     TableState,
+    atomic_write_text,
     version_schema,
 )
 
@@ -133,14 +135,13 @@ class FeatureStore:
         behavior).
     max_versions : total versions retained per table (current + history);
         must be >= 1 (reference store.py:107-110).
-    partition_by / sort_within_partitions : storage layout knobs passed to
-        the Parquet backend (e.g. a date column for partition pruning).
     date_partition : when True, registration derives a hidden
         ``__dt__ = to_date(timestamp)`` column and partitions storage by
         it; ``get`` then adds the monotonic rewrite of its time cutoff
         (``__dt__ <= date(cutoff)``) so the scan prunes whole date
         partitions — the reference README's own proposed scale fix
-        (reference README.md:167), done automatically.
+        (reference README.md:167), done automatically. Parquet fragments
+        are always sorted by (entity_id, timestamp) within each file.
     """
 
     def __init__(
@@ -148,8 +149,6 @@ class FeatureStore:
         spark: SparkSession,
         storage_path: str | None = None,
         max_versions: int = DEFAULT_MAX_VERSIONS,
-        partition_by: str | None = None,
-        sort_within_partitions: tuple[str, ...] = (ENTITY_COL, TIMESTAMP_COL),
         date_partition: bool = False,
     ) -> None:
         if max_versions < 1:
@@ -157,20 +156,18 @@ class FeatureStore:
         self.spark = spark
         self.max_versions = max_versions
         self._date_partition = date_partition
-        if date_partition:
-            partition_by = DT_COL
         if storage_path is None:
             self._backend: MemoryVersionStore | ParquetVersionStore = MemoryVersionStore()
         else:
             self._backend = ParquetVersionStore(
                 spark,
                 storage_path,
-                partition_by=partition_by,
-                sort_within_partitions=sort_within_partitions,
+                partition_by=DT_COL if date_partition else None,
             )
         # cross-table snapshot manifests: persisted beside the Parquet
         # backend (survive the process) or in-process for the memory one
-        self._snapshots: dict[str, SnapshotManifest] = self._load_snapshots()
+        self._snap_generation, snaps = self._read_state(self._snapshots_path())
+        self._snapshot_seq, self._snapshots = self._parse_snapshots(snaps)
         # derived-view / feature-service / rollup specs + view TTLs: the
         # REGISTRY (Feast's registry.db contract). Persisted to
         # _registry.json beside the version store — the 3 a.m. training
@@ -1253,7 +1250,6 @@ class FeatureStore:
         if num_files:
             df = df.repartition(num_files)
         if format == "jsonlines":
-            import json as _json
             from pathlib import Path as _Path
 
             from .sources.pyds import JsonLinesSinkDataSource
@@ -1265,7 +1261,7 @@ class FeatureStore:
                 .mode("overwrite")
                 .save()
             )
-            manifest = _json.loads((_Path(path) / "_SUCCESS").read_text())
+            manifest = json.loads((_Path(path) / "_SUCCESS").read_text())
             return int(manifest["rows"])
         if format not in ("parquet", "json", "csv"):
             raise FeatureValidationError(
@@ -1377,11 +1373,10 @@ class FeatureStore:
             "total_rows": sum(v["n_rows"] for v in shards.values()),
             "shards": {str(k): shards[k] for k in sorted(shards)},
         }
-        import json as _json
         from pathlib import Path as _Path
 
         self._atomic_write_text(
-            _Path(path) / "_manifest.json", _json.dumps(manifest, indent=2)
+            _Path(path) / "_manifest.json", json.dumps(manifest, indent=2)
         )
         return manifest
 
@@ -1394,7 +1389,6 @@ class FeatureStore:
         short epoch). One column-pruned scan of (shard, shard_key).
         Raises ``FeatureValidationError`` naming every mismatched
         shard; returns the verified manifest otherwise."""
-        import json as _json
         from pathlib import Path as _Path
 
         mpath = _Path(path) / "_manifest.json"
@@ -1403,7 +1397,7 @@ class FeatureStore:
                 f"verify_training_shards('{path}'): no _manifest.json — "
                 f"the export never committed (or the path is wrong)."
             )
-        manifest = _json.loads(mpath.read_text())
+        manifest = json.loads(mpath.read_text())
         key, seed = manifest["shard_key"], int(manifest["seed"])
         back = self.spark.read.parquet(path)
         h = F.conv(
@@ -1542,7 +1536,7 @@ class FeatureStore:
                 f"Available: {sorted(self._datasets)}"
             )
         spec = self._datasets[name]
-        return {**spec, "views": dict(spec["views"])}
+        return {"description": "", **spec, "views": dict(spec["views"])}
 
     def list_saved_datasets(self) -> list[str]:
         return sorted(self._datasets)
@@ -1953,9 +1947,9 @@ class FeatureStore:
             "rollup", rollup,
             {
                 "src": name,
-                "group_cols": tuple(group_cols),
-                "sum_cols": tuple(sum_cols),
-                "distinct_cols": tuple(distinct_cols),
+                "group_cols": list(group_cols),
+                "sum_cols": list(sum_cols),
+                "distinct_cols": list(distinct_cols),
                 "watermark": watermark,
                 "src_rows": src_rows,
                 "state_version": sver,
@@ -3933,9 +3927,16 @@ class FeatureStore:
         # versions pinned by a live snapshot manifest are retention-exempt:
         # pruning them would silently break the manifest's reproducibility
         # contract. Dropping the manifest releases the pin (next prune).
+        # The pins are read from the file NOW, not from this instance's
+        # view at open: a manifest another instance took since must hold.
+        path = self._snapshots_path()
+        manifests = (
+            self._snapshots if path is None
+            else self._parse_snapshots(self._read_state(path)[1])[1]
+        )
         pinned = {
             v
-            for m in self._snapshots.values()
+            for m in manifests.values()
             for t, v in m.tables
             if t == name
         }
@@ -4340,7 +4341,7 @@ class FeatureStore:
                 f"collide with the reserved key/timestamp columns."
             )
         self._derived[name] = {
-            "sources": tuple(sources),
+            "sources": list(sources),
             "exprs": dict(exprs),
             "how": how,
         }
@@ -4621,7 +4622,7 @@ class FeatureStore:
                 )
         self._services[name] = {
             "selections": {
-                v: (tuple(c) if c is not None else None)
+                v: (list(c) if c is not None else None)
                 for v, c in selections.items()
             },
             "how": how,
@@ -5251,15 +5252,15 @@ class FeatureStore:
                 default=0,
             ),
         )
-        self._snapshot_seq = n + 1
         manifest = SnapshotManifest(
             snapshot_id=f"snap-{n}",
             created_at=datetime.now(timezone.utc).isoformat(),
             description=description,
             tables=tuple(sorted(pins)),
         )
-        self._snapshots[manifest.snapshot_id] = manifest
-        self._save_snapshots()
+        self._publish_snapshots(
+            {**self._snapshots, manifest.snapshot_id: manifest}, n + 1
+        )
         return manifest
 
     def list_snapshots(self) -> list[SnapshotManifest]:
@@ -5275,10 +5276,19 @@ class FeatureStore:
 
     def drop_snapshot(self, snapshot_id: str) -> bool:
         """Release a manifest (and its retention pins). Returns False if
-        absent — never raises (the ``delete`` contract)."""
-        if self._snapshots.pop(snapshot_id, None) is None:
+        absent (the ``delete`` contract) — but only from a current view:
+        an instance that another writer's publish has left stale
+        refuses, as its publishes do, since the manifest may exist."""
+        if snapshot_id not in self._snapshots:
+            self._assert_current(
+                self._snapshots_path(), self._snap_generation,
+                f"drop_snapshot('{snapshot_id}')",
+            )
             return False
-        self._save_snapshots()
+        self._publish_snapshots(
+            {k: m for k, m in self._snapshots.items() if k != snapshot_id},
+            self._snapshot_seq,
+        )
         return True
 
     def _resolve(
@@ -5300,21 +5310,16 @@ class FeatureStore:
             )
         return self._backend.read_version(name, version)
 
-    def _load_snapshots(self) -> dict[str, SnapshotManifest]:
-        self._snapshot_seq = 1
-        path = self._snapshots_path()
-        if path is None or not path.exists():
-            return {}
-        import json
-
-        raw = json.loads(path.read_text())
-        # current format: {"next_id": N, "manifests": {...}}; legacy files
-        # (pre-counter) are a flat {sid: manifest} map — next_id then falls
-        # back to max(existing)+1 via the clamp in snapshot().
-        if "manifests" in raw and isinstance(raw.get("manifests"), dict):
-            self._snapshot_seq = int(raw.get("next_id", 1))
-            raw = raw["manifests"]
-        return {
+    @staticmethod
+    def _parse_snapshots(raw: dict) -> tuple[int, dict[str, SnapshotManifest]]:
+        """(next id, manifests) of a ``_snapshots.json`` payload. Current
+        files are ``{"next_id": N, "manifests": {...}}``; legacy files
+        (pre-counter) are a flat ``{sid: manifest}`` map — next_id then
+        falls back to max(existing)+1 via the clamp in snapshot()."""
+        seq = 1
+        if isinstance(raw.get("manifests"), dict):
+            seq, raw = int(raw.get("next_id", 1)), raw["manifests"]
+        return seq, {
             sid: SnapshotManifest(
                 snapshot_id=sid,
                 created_at=m["created_at"],
@@ -5324,59 +5329,113 @@ class FeatureStore:
             for sid, m in raw.items()
         }
 
-    @staticmethod
-    def _atomic_write_text(path, text: str) -> None:
-        """Crash-atomic replace: write a temp file in the SAME directory
-        (so the rename never crosses filesystems) and ``os.replace`` it
-        over the target. A crash mid-write leaves either the old file or
-        the new one — never a truncated JSON that bricks every later
-        ``FeatureStore`` open with a parse error."""
-        import os
-        import tempfile
-
-        fd, tmp = tempfile.mkstemp(
-            dir=str(path.parent), prefix=path.name + ".", suffix=".tmp"
+    def _publish_snapshots(
+        self, manifests: dict[str, SnapshotManifest], next_id: int
+    ) -> None:
+        """CAS-publish the whole manifest set; this instance's view
+        changes only once the file has."""
+        self._snap_generation = self._publish_state(
+            self._snapshots_path(),
+            {
+                "next_id": next_id,
+                "manifests": {sid: m.as_dict() for sid, m in manifests.items()},
+            },
+            self._snap_generation,
         )
-        try:
-            with os.fdopen(fd, "w") as f:
-                f.write(text)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, str(path))
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
-
-    def _save_snapshots(self) -> None:
-        path = self._snapshots_path()
-        if path is None:
-            return
-        import json
-
-        self._atomic_write_text(
-            path,
-            json.dumps(
-                {
-                    "next_id": self._snapshot_seq,
-                    "manifests": {
-                        sid: m.as_dict()
-                        for sid, m in self._snapshots.items()
-                    },
-                },
-                indent=2,
-            ),
-        )
+        self._snapshots, self._snapshot_seq = manifests, next_id
 
     def _snapshots_path(self):
         root = getattr(self._backend, "root", None)
         return None if root is None else root / "_snapshots.json"
 
     # ------------------------------------------------------------------ #
-    # spec registry persistence (derived views / services / rollups / TTL)
+    # JSON state files (spec registry, snapshot manifests): one CAS publish
     # ------------------------------------------------------------------ #
+    # The one crash-atomic writer, shared with the Parquet backend's meta
+    # commit. Called through the class, so a test can make it fail.
+    _atomic_write_text = staticmethod(atomic_write_text)
+
+    @staticmethod
+    def _read_state(path) -> tuple[int, dict]:
+        """(generation, payload) of a JSON state file; ``(0, {})`` when
+        there is none (memory backend, or nothing published yet). Files
+        written before the generation counter read as generation 0."""
+        if path is None or not path.exists():
+            return 0, {}
+        raw = json.loads(path.read_text())
+        return int(raw.pop("generation", 0)), raw
+
+    @classmethod
+    def _publish_state(cls, path, payload: dict, generation: int) -> int:
+        """Rewrite a JSON state file whole from one instance's view and
+        return the new generation (``path`` None: nothing is persisted).
+
+        CONCURRENT-WRITER SAFETY: an unguarded rewrite from a writer
+        holding a STALE view would silently erase everything published
+        since it loaded (specs, or manifests and the retention pins they
+        hold). The guard is a generation counter under an inter-process
+        file lock: inside ``flock(<file>.lock)`` the file's generation is
+        re-read and compared against the one the caller loaded or last
+        wrote (compare-and-swap) — a match publishes generation+1 through
+        the crash-atomic replace; a mismatch REFUSES with a
+        reopen-and-retry error and writes NOTHING. Simultaneous writers
+        serialize on the lock and the loser gets the refusal, never a
+        lost update. The caller commits the returned generation only
+        AFTER the write returns: committing first would leave a healthy
+        instance permanently ahead of the file when the write itself
+        fails (disk full), refusing every later publish. Feast's file
+        registry ships the same CAS idea before graduating to a SQL
+        registry — that remains the swap point here."""
+        if path is None:
+            return generation
+        with open(path.with_suffix(".lock"), "a+") as lk:
+            try:
+                import fcntl
+
+                fcntl.flock(lk, fcntl.LOCK_EX)
+            except ImportError:  # non-POSIX: CAS-only, no inter-process lock
+                pass
+            cls._assert_current(path, generation, "Publish")
+            cls._atomic_write_text(
+                path,
+                json.dumps({"generation": generation + 1, **payload}, indent=2),
+            )
+        return generation + 1
+
+    @classmethod
+    def _assert_current(cls, path, generation: int, context: str) -> None:
+        """Refuse when another writer has advanced ``path`` past the
+        generation this instance's view derives from."""
+        on_disk, _ = cls._read_state(path)
+        if on_disk != generation:
+            raise FeatureStoreError(
+                f"{context} refused: another writer advanced "
+                f"'{path.name}' to generation {on_disk} (this instance "
+                f"loaded generation {generation}). Reopen the store to "
+                f"pick up their changes, then retry — overwriting would "
+                f"silently erase them."
+            )
+
+    # ------------------------------------------------------------------ #
+    # spec registry persistence
+    # ------------------------------------------------------------------ #
+    # kind in _registry.json -> the attribute holding its specs. A spec
+    # holds plain JSON values (lists, not tuples), so the file is the
+    # in-memory state as it is; a field added later is read with .get
+    # and a default where a legacy registry may lack it.
+    _REGISTRY_KINDS = {
+        "derived": "_derived",
+        "services": "_services",
+        "rollups": "_rollups",
+        "ttl": "_ttl",
+        "online": "_online_meta",
+        "datasets": "_datasets",
+        "window_views": "_window_views",
+        "vector_indexes": "_vector_indexes",
+        "dedup_indexes": "_dedup_indexes",
+        "probes": "_probes",
+    }
+
     def _registry_path(self):
         root = getattr(self._backend, "root", None)
         return None if root is None else root / "_registry.json"
@@ -5389,277 +5448,30 @@ class FeatureStore:
         ``FeatureValidationError`` from the column validation) —
         ``delete()`` refuses to create dangling references in the first
         place."""
-        out: dict[str, dict] = {
-            "derived": {}, "services": {}, "rollups": {}, "ttl": {},
-            "online": {}, "datasets": {}, "window_views": {},
-            "vector_indexes": {}, "dedup_indexes": {}, "probes": {},
-        }
-        # generation this instance's in-memory view derives from: every
-        # save CAS-checks the file against it (round-9 verdict item 3 —
-        # two concurrent writer instances over one storage path must
-        # never silently clobber each other's specs)
-        self._reg_generation = 0
-        path = self._registry_path()
-        if path is None or not path.exists():
-            return out
-        import json
-
-        raw = json.loads(path.read_text())
-        self._reg_generation = int(raw.get("generation", 0))
-        for n, s in raw.get("derived", {}).items():
-            out["derived"][n] = {
-                "sources": tuple(s["sources"]),
-                "exprs": dict(s["exprs"]),
-                "how": s["how"],
-            }
-        for n, s in raw.get("services", {}).items():
-            out["services"][n] = {
-                "selections": {
-                    v: (tuple(c) if c is not None else None)
-                    for v, c in s["selections"].items()
-                },
-                "how": s["how"],
-                "output_mapping": dict(s.get("output_mapping") or {}),
-            }
-        for n, s in raw.get("rollups", {}).items():
-            out["rollups"][n] = {
-                "src": s["src"],
-                "group_cols": tuple(s["group_cols"]),
-                "sum_cols": tuple(s["sum_cols"]),
-                "distinct_cols": tuple(s.get("distinct_cols", ())),
-                "watermark": int(s["watermark"]),
-                "src_rows": int(s["src_rows"]),
-                "state_version": (
-                    int(s["state_version"]) if s.get("state_version")
-                    else None
-                ),
-                "rewritten": bool(s.get("rewritten", False)),
-            }
-        out["ttl"] = {t: float(v) for t, v in raw.get("ttl", {}).items()}
-        out["online"] = {
-            t: {"watermark": int(m["watermark"]), "src_rows": int(m["src_rows"])}
-            for t, m in raw.get("online", {}).items()
-        }
-        for n, s in raw.get("datasets", {}).items():
-            out["datasets"][n] = {
-                "views": {v: int(ver) for v, ver in s["views"].items()},
-                "row_count": int(s["row_count"]),
-                "created_at": s["created_at"],
-                "description": s.get("description", ""),
-            }
-        for n, s in raw.get("window_views", {}).items():
-            out["window_views"][n] = {
-                "source": s["source"],
-                "aggregations": [
-                    {
-                        "column": a["column"],
-                        "function": a["function"],
-                        "window_seconds": float(a["window_seconds"]),
-                        "alias": a["alias"],
-                    }
-                    for a in s["aggregations"]
-                ],
-            }
-        for n, s in raw.get("vector_indexes", {}).items():
-            out["vector_indexes"][n] = {
-                "src": s["src"],
-                "vec_col": s["vec_col"],
-                "method": s["method"],
-                "params": dict(s["params"]),
-                "dim": int(s["dim"]),
-                # composite-key + version pins: round-11 fields; legacy
-                # registries fall back (None -> scalar key / latest
-                # version)
-                "key_cols": (
-                    list(s["key_cols"]) if s.get("key_cols") else None
-                ),
-                "watermark": int(s["watermark"]),
-                "src_rows": int(s["src_rows"]),
-                "src_version": int(s["src_version"]),
-                "model_version": (
-                    int(s["model_version"])
-                    if s.get("model_version") else None
-                ),
-                "data_version": (
-                    int(s["data_version"]) if s.get("data_version") else None
-                ),
-                # append-mode fragment chain (round-12); legacy
-                # registries fall back to the scalar pin
-                "data_versions": (
-                    [int(v) for v in s["data_versions"]]
-                    if s.get("data_versions") else None
-                ),
-                "rewritten": bool(s.get("rewritten", False)),
-                # build-time occupancy histogram (round-12 drift signal);
-                # pre-r12 registries lack it -> vector_index_drift refuses
-                # with a rebuild message
-                "occupancy": (
-                    {str(k): int(v) for k, v in s["occupancy"].items()}
-                    if s.get("occupancy") else None
-                ),
-            }
-        for n, s in raw.get("dedup_indexes", {}).items():
-            out["dedup_indexes"][n] = {
-                "src": s["src"],
-                "content_col": s["content_col"],
-                "method": s.get("method", "minhash"),
-                "params": {k: int(v) for k, v in s["params"].items()},
-                "watermark": int(s["watermark"]),
-                "src_rows": int(s["src_rows"]),
-                "src_version": int(s["src_version"]),
-                "data_version": (
-                    int(s["data_version"]) if s.get("data_version") else None
-                ),
-                "data_versions": (
-                    [int(v) for v in s["data_versions"]]
-                    if s.get("data_versions") else None
-                ),
-                "rewritten": bool(s.get("rewritten", False)),
-            }
-        for n, s in raw.get("probes", {}).items():
-            out["probes"][n] = {
-                "src": s["src"],
-                "feature_exprs": dict(s["feature_exprs"]),
-                "label_expr": s["label_expr"],
-                "weights": [int(w) for w in s["weights"]],
-                "iterations": int(s["iterations"]),
-                "lr_den": int(s["lr_den"]),
-                "scale": int(s["scale"]),
-                "src_rows": int(s["src_rows"]),
-                "src_version": int(s["src_version"]),
-                "train_accuracy_ppm": int(s["train_accuracy_ppm"]),
-            }
-        return out
+        self._reg_generation, raw = self._read_state(self._registry_path())
+        return {kind: raw.get(kind, {}) for kind in self._REGISTRY_KINDS}
 
     def _save_registry(self) -> None:
-        """Persist the full in-memory spec state to ``_registry.json``.
-
-        CONCURRENT-WRITER SAFETY (round-10; round-9 verdict item 3): the
-        file is rewritten whole from this instance's state, so an
-        unguarded save from a writer holding a STALE in-memory view
-        would silently erase every spec published since it loaded. The
-        guard is a generation counter under an inter-process file lock:
-        inside ``flock(_registry.lock)`` the current file generation is
-        re-read and compared against the generation this instance
-        loaded/last wrote (compare-and-swap) — a match publishes
-        generation+1 via the crash-atomic replace; a mismatch REFUSES
-        with a clear reopen-and-retry error and writes NOTHING.
-        Simultaneous writers therefore serialize on the lock and the
-        loser gets the refusal, never a lost spec. Readers are
-        unaffected (they rehydrate at open). Version DATA publishes
-        into per-table directories and were never the clobber risk;
-        Feast's file registry ships the same CAS idea before graduating
-        to a SQL registry — that remains the swap point here."""
-        path = self._registry_path()
-        if path is None:
-            return
-        import json
-
-        lock_path = path.parent / "_registry.lock"
-        with open(lock_path, "a+") as lk:
-            try:
-                import fcntl
-
-                fcntl.flock(lk, fcntl.LOCK_EX)
-            except ImportError:  # non-POSIX: CAS-only, no inter-process lock
-                pass
-            if path.exists():
-                on_disk = int(
-                    json.loads(path.read_text()).get("generation", 0)
-                )
-                if on_disk != self._reg_generation:
-                    raise FeatureStoreError(
-                        f"Registry publish refused: another writer "
-                        f"advanced '{path.name}' to generation {on_disk} "
-                        f"(this instance loaded generation "
-                        f"{self._reg_generation}). Reopen the store to "
-                        f"pick up their specs, then retry — overwriting "
-                        f"would silently erase them."
-                    )
-            # commit the in-memory generation only AFTER the atomic write
-            # returns (round-11 ADVICE): incrementing first would leave a
-            # healthy instance permanently ahead of the file when the
-            # write itself fails (disk full), refusing every later save
-            # with a misleading 'another writer advanced' error.
-            new_gen = self._reg_generation + 1
-            self._atomic_write_text(
-                path,
-                json.dumps(
-                    {
-                        "generation": new_gen,
-                        "derived": {
-                            n: {
-                                "sources": list(s["sources"]),
-                                "exprs": s["exprs"],
-                                "how": s["how"],
-                            }
-                            for n, s in self._derived.items()
-                        },
-                        "services": {
-                            n: {
-                                "selections": {
-                                    v: (list(c) if c is not None else None)
-                                    for v, c in s["selections"].items()
-                                },
-                                "how": s["how"],
-                                "output_mapping": dict(
-                                    s.get("output_mapping") or {}
-                                ),
-                            }
-                            for n, s in self._services.items()
-                        },
-                        "rollups": {
-                            n: {
-                                "src": s["src"],
-                                "group_cols": list(s["group_cols"]),
-                                "sum_cols": list(s["sum_cols"]),
-                                "distinct_cols": list(
-                                    s.get("distinct_cols", ())
-                                ),
-                                "watermark": s["watermark"],
-                                "src_rows": s["src_rows"],
-                                "state_version": s.get("state_version"),
-                                "rewritten": bool(s.get("rewritten", False)),
-                            }
-                            for n, s in self._rollups.items()
-                        },
-                        "ttl": self._ttl,
-                        "online": self._online_meta,
-                        "datasets": self._datasets,
-                        "window_views": self._window_views,
-                        "vector_indexes": self._vector_indexes,
-                        "dedup_indexes": self._dedup_indexes,
-                        "probes": self._probes,
-                    },
-                    indent=2,
-                ),
-            )
-            self._reg_generation = new_gen
+        """CAS-publish the full in-memory spec state to ``_registry.json``
+        (see ``_publish_state``). Version DATA publishes into per-table
+        directories and was never the clobber risk."""
+        self._reg_generation = self._publish_state(
+            self._registry_path(),
+            {kind: getattr(self, attr) for kind, attr in self._REGISTRY_KINDS.items()},
+            self._reg_generation,
+        )
 
     def _assert_registry_current(self, context: str) -> None:
-        """Pre-mutation CAS probe (round-11 ADVICE): index builds and
-        refreshes mutate backend STATE TABLES before the registry
-        publish, so a save that would be refused (another writer
-        advanced the file) must be detected BEFORE the expensive encode
-        work and state writes, not after. Same comparison as
-        ``_save_registry``'s guard, read without the lock — the lock'd
-        CAS at publish time remains the authority; this probe just fails
-        fast. Version pinning in the spec (``data_version`` /
-        ``model_version``) closes the residual race window: superseded
-        state versions are dropped only AFTER a successful publish."""
-        path = self._registry_path()
-        if path is None or not path.exists():
-            return
-        import json
-
-        on_disk = int(json.loads(path.read_text()).get("generation", 0))
-        if on_disk != self._reg_generation:
-            raise FeatureStoreError(
-                f"{context} refused: another writer advanced "
-                f"'{path.name}' to generation {on_disk} (this instance "
-                f"loaded generation {self._reg_generation}). Reopen the "
-                f"store to pick up their specs, then retry."
-            )
+        """Pre-mutation CAS probe: index builds and refreshes mutate
+        backend STATE TABLES before the registry publish, so a save that
+        would be refused (another writer advanced the file) must be
+        detected BEFORE the expensive encode work and state writes, not
+        after. Read without the lock — the locked CAS at publish time
+        remains the authority; this probe just fails fast. Version
+        pinning in the spec (``data_version`` / ``model_version``)
+        closes the residual race window: superseded state versions are
+        dropped only AFTER a successful publish."""
+        self._assert_current(self._registry_path(), self._reg_generation, context)
 
     def _spec_references(self, table: str) -> list[tuple[str, str]]:
         """Registry specs that read ``table`` (directly, or through a
