@@ -10,10 +10,10 @@ fixed bins ACROSS documents; chunking windows WITHIN a document).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import bind, tokens
 
 
 def chunk_documents(
@@ -40,22 +40,26 @@ def chunk_documents(
             f"overlap_tokens ({overlap_tokens}) must be < chunk_tokens ({chunk_tokens})"
         )
     stride = chunk_tokens - overlap_tokens
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    # window starts: 0, stride, ... <= n-1; a document always yields at
-    # least one chunk (possibly shorter than chunk_tokens)
-    n_chunks = F.greatest(
-        F.ceil((n - F.lit(overlap_tokens)).cast("double") / F.lit(stride)).cast("int"),
-        F.lit(1),
-    )
-    starts = F.sequence(F.lit(0), (n_chunks - 1) * stride, F.lit(stride))
-    windows = F.transform(
-        starts,
-        lambda s: F.struct(
-            (s / stride).cast("int").alias("chunk_idx"),
-            F.slice(t, s + 1, chunk_tokens).alias("toks"),
-        ),
-    )
+
+    def chunks(t: Column) -> Column:
+        n = F.size(t)
+        # window starts: 0, stride, ... <= n-1; a document always yields at
+        # least one chunk (possibly shorter than chunk_tokens)
+        n_chunks = F.greatest(
+            F.ceil((n - F.lit(overlap_tokens)).cast("double") / F.lit(stride)).cast("int"),
+            F.lit(1),
+        )
+        starts = F.sequence(F.lit(0), (n_chunks - 1) * stride, F.lit(stride))
+        return F.transform(
+            starts,
+            lambda s: F.struct(
+                (s / stride).cast("int").alias("chunk_idx"),
+                F.slice(t, s + 1, chunk_tokens).alias("toks"),
+            ),
+        )
+
+    # the text is split once per row, not once per chunk
+    windows = bind(tokens(F.col(text_col)), chunks)
     out = df.withColumn("__w__", F.explode(windows))
     return (
         out.withColumn("chunk_idx", F.col("__w__.chunk_idx"))

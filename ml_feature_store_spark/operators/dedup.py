@@ -95,22 +95,19 @@ def minhash_signatures(
     id_cols = [c for c in df.columns if c != content_col]
     sh = shingles(F.col(content_col), shingle_k)
     ex = df.select(*id_cols, F.explode(sh).alias("__sh__"))
+    # each aggregate is one SQL string: one py4j call per expression,
+    # where the Column builders cost ~15
     if hash_family == "md5_affine":
-        h32 = F.conv(F.substring(F.md5("__sh__"), 1, 8), 16, 10).cast("long")
+        h32 = "CAST(conv(substring(md5(__sh__), 1, 8), 16, 10) AS BIGINT)"
         mins = [
-            F.min(
-                (h32 * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])) % F.lit(MINHASH_P)
-            ).alias(f"__mh{i}__")
+            f"min(({h32} * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}) AS __mh{i}__"
             for i in range(num_hashes)
         ]
     else:
-        mins = [
-            F.min(F.xxhash64("__sh__", F.lit(i))).alias(f"__mh{i}__")
-            for i in range(num_hashes)
-        ]
-    per_doc = ex.groupBy(*id_cols).agg(*mins)
-    sig = F.array(*[F.col(f"__mh{i}__") for i in range(num_hashes)]).alias("minhash")
-    return per_doc.select(*id_cols, sig)
+        mins = [f"min(xxhash64(__sh__, {i})) AS __mh{i}__" for i in range(num_hashes)]
+    per_doc = ex.groupBy(*id_cols).agg(*map(F.expr, mins))
+    sig = ", ".join(f"__mh{i}__" for i in range(num_hashes))
+    return per_doc.select(*id_cols, F.expr(f"array({sig}) AS minhash"))
 
 
 def minhash_band_buckets(
@@ -128,28 +125,20 @@ def minhash_band_buckets(
     bucket is the md5 of the comma-joined sub-signature, so an external
     oracle joins on the identical key."""
     rows_per_band = num_hashes // bands
+    digest = "md5" if hash_family == "md5_affine" else "xxhash64"
 
-    def band_key(b: int):
-        joined = F.concat_ws(
-            ",",
-            *[
-                F.element_at("minhash", b * rows_per_band + i + 1)
-                for i in range(rows_per_band)
-            ],
+    def band(b: int) -> str:
+        parts = ", ".join(
+            f"element_at(minhash, {b * rows_per_band + i + 1})"
+            for i in range(rows_per_band)
         )
-        return F.md5(joined) if hash_family == "md5_affine" else F.xxhash64(joined)
+        return f"named_struct('band', {b}, 'bucket', {digest}(concat_ws(',', {parts})))"
 
-    return sig.select(
-        *id_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(b).alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(*id_cols, "bb.band", "bb.bucket")
+    # one SQL string for the whole banding: one py4j call
+    bbs = ", ".join(band(b) for b in range(bands))
+    return sig.select(*id_cols, F.expr(f"explode(array({bbs})) AS bb")).select(
+        *id_cols, "bb.band", "bb.bucket"
+    )
 
 
 def dedup_minhash_lsh(

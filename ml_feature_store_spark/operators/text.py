@@ -12,7 +12,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles, token_count, tokens
+from ..functions.text import bind, shingles, token_count, tokens
 
 DEFAULT_STOPWORDS: Mapping[str, Sequence[str]] = {
     "en": ("the", "a", "of", "and", "in", "to", "is", "it", "for", "on"),
@@ -80,9 +80,11 @@ def lang_id_ngram(
     (broadcast-free). Swap the 8-trigram demo profiles for real frequency
     tables in deployment — the plan shape is unchanged.
     """
-    lowered = F.lower(F.col(text_col))
-    idx = F.sequence(F.lit(1), F.greatest(F.length(lowered) - 2, F.lit(1)))
-    tri = F.transform(idx, lambda i: F.call_function("substring", lowered, i, F.lit(3)))
+    def trigrams_of(lowered: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.greatest(F.length(lowered) - 2, F.lit(1)))
+        return F.transform(idx, lambda i: F.call_function("substring", lowered, i, F.lit(3)))
+
+    tri = bind(F.lower(F.col(text_col)), trigrams_of)
 
     def hit_filter(profile: Sequence[str]):
         pl = list(profile)

@@ -26,6 +26,7 @@ operators/asof.py.
 
 from __future__ import annotations
 
+import copy
 import json
 import math
 from dataclasses import dataclass
@@ -259,31 +260,35 @@ class FeatureStore:
         if not self._backend.exists(name):
             return False
         refs = self._spec_references(name)
-        if refs:
-            if not cascade:
-                raise FeatureValidationError(
-                    f"delete('{name}'): table is referenced by "
-                    f"{[f'{kind} {n!r}' for kind, n in refs]} — drop "
-                    f"those specs first or pass cascade=True to remove "
-                    f"them with the table."
-                )
-            # the cascade drops EXACTLY what _spec_references reported —
-            # one rule, no drift between the message and the action
-            for kind, n in refs:
-                if kind == "derived view":
-                    self._derived.pop(n, None)
-                elif kind == "feature service":
-                    self._services.pop(n, None)
-                else:
-                    getattr(self, self._SOURCED_SPECS[kind][0]).pop(n, None)
-                    self._drop_state_tables(kind, n)
+        if refs and not cascade:
+            raise FeatureValidationError(
+                f"delete('{name}'): table is referenced by "
+                f"{[f'{kind} {n!r}' for kind, n in refs]} — drop "
+                f"those specs first or pass cascade=True to remove "
+                f"them with the table."
+            )
+        publish = bool(refs) or name in self._ttl or name in self._online_meta
+        if publish:
+            # a registry publish follows the drops: refuse a stale
+            # instance before any table is dropped
+            self._assert_registry_current(f"delete('{name}')")
+        # the cascade drops EXACTLY what _spec_references reported —
+        # one rule, no drift between the message and the action
+        for kind, n in refs:
+            if kind == "derived view":
+                self._derived.pop(n, None)
+            elif kind == "feature service":
+                self._services.pop(n, None)
+            else:
+                getattr(self, self._SOURCED_SPECS[kind][0]).pop(n, None)
+                self._drop_state_tables(kind, n)
         self._backend.drop_table(name)
         online = name + self._ONLINE_SUFFIX
         if self._backend.exists(online):
             self._backend.drop_table(online)
-        dropped_ttl = self._ttl.pop(name, None) is not None
-        dropped_online = self._online_meta.pop(name, None) is not None
-        if dropped_ttl or dropped_online or refs:
+        self._ttl.pop(name, None)
+        self._online_meta.pop(name, None)
+        if publish:
             self._save_registry()
         return True
 
@@ -1487,6 +1492,8 @@ class FeatureStore:
             raise FeatureValidationError(
                 f"create_saved_dataset('{name}'): views must be non-empty."
             )
+        # a stale instance must not overwrite another's dataset table
+        self._assert_registry_current(f"create_saved_dataset('{name}')")
         pins: dict[str, int] = {}
         for v in view_list:
             self._require_table(v)
@@ -1546,10 +1553,11 @@ class FeatureStore:
         absent — never raises (the ``delete`` contract)."""
         if self._datasets.pop(name, None) is None:
             return False
+        # publish first: a refused publish must not take the table
+        self._save_registry()
         dname = name + self._DATASET_SUFFIX
         if self._backend.exists(dname):
             self._backend.drop_table(dname)
-        self._save_registry()
         return True
 
     # ------------------------------------------------------------------ #
@@ -1710,25 +1718,17 @@ class FeatureStore:
         """PUBLISH-THEN-PRUNE: CAS-publish ``spec`` as ``name``'s spec
         (None removes it), then drop every version of each state table in
         ``keep`` that the new spec does not pin. A refused publish
-        restores the previous in-memory spec and raises before any
-        prune, so the old spec + old state stay fully consistent: the
-        just-written versions are unreferenced orphans (reclaimed by the
-        next successful publish), never a spec/state mismatch or a
-        double-folded delta."""
+        restores the previous in-memory specs (``_save_registry``) and
+        raises before any prune, so the old spec + old state stay fully
+        consistent: the just-written versions are unreferenced orphans
+        (reclaimed by the next successful publish), never a spec/state
+        mismatch or a double-folded delta."""
         specs = getattr(self, self._SOURCED_SPECS[kind][0])
-        prev = specs.get(name)
         if spec is None:
             specs.pop(name, None)
         else:
             specs[name] = spec
-        try:
-            self._save_registry()
-        except BaseException:
-            if prev is None:
-                specs.pop(name, None)
-            else:
-                specs[name] = prev
-            raise
+        self._save_registry()
         for table, versions in (keep or {}).items():
             self._prune_state_versions(table, versions)
 
@@ -3314,9 +3314,13 @@ class FeatureStore:
         batch never self-joins), then exact shingle-Jaccard verification
         of the candidate pairs against the SOURCE table's text
         (candidate-bounded: only matched old docs are re-read/shingled).
-        One manifest row per new doc: ``(id_col, is_exact_dup,
-        n_candidates, n_fuzzy, best_j_e6)`` — bucket-collision count,
-        verified fuzzy matches at ``threshold``, best Jaccard (e6 int).
+        One manifest row per distinct batch id: ``(id_col,
+        is_exact_dup, n_candidates, n_fuzzy, best_j_e6)`` — bucket-
+        collision count, verified fuzzy matches at ``threshold``, best
+        Jaccard (e6 int). Each piece of work runs once per call: the
+        batch is signed once (inside the candidate checkpoint), each
+        doc frame joins the pairs once, and the manifest is one
+        aggregate by id.
 
         At 100 TB: the stored-signature scan is the banding input
         (map-only, ~200 B/doc); the bucket join shuffles |batch| x
@@ -3342,47 +3346,43 @@ class FeatureStore:
         half-covering signature store would silently under-report
         duplicates. Metadata-only check."""
         spec = self._serving_spec("dedup index", index)
-        new, signed_new, cand, ver = self._dedup_pairs(
-            index, spec, new_docs, id_col, content_col, threshold,
-            max_bucket_size,
+        ccol = content_col or spec["content_col"]
+        new, cand, ver = self._dedup_pairs(
+            index, spec, new_docs, id_col, ccol, threshold, max_bucket_size,
         )
         stored = self._derived_state("dedup index", index)
-        # exact arm: the shuffle carries 16-byte hashes, never bodies
+        # exact arm: the batch text is hashed here, not read back from
+        # its signature, so the batch is signed once per call; the
+        # shuffle carries 16-byte hashes, never bodies, and a semi
+        # join needs no distinct build side
         exacts = (
-            signed_new.select(id_col, "hh")
-            .join(stored.select("hh").distinct(), "hh", "left_semi")
-            .select(id_col)
-            .withColumn("__exact__", F.lit(1))
+            new.select(id_col, F.md5(F.lower(F.trim(ccol))).alias("hh"))
+            .join(stored.select("hh"), "hh", "left_semi")
+            .select(id_col, F.lit(1).alias("__exact__"))
         )
-        n_cand = cand.groupBy(id_col).agg(
-            F.count("*").alias("__n_cand__")
-        )
-        fz = ver.groupBy(id_col).agg(
-            F.count("*").alias("__n_fuzzy__"),
-            F.max(
-                F.floor(F.col("__j__") * 1_000_000 + F.lit(0.5)).cast("long")
-            ).alias("__best_j__"),
-        )
-        return (
-            new.select(id_col)
-            .join(exacts, id_col, "left")
-            .join(n_cand, id_col, "left")
-            .join(fz, id_col, "left")
-            .select(
+        # the manifest: one union of the four per-doc inputs and ONE
+        # aggregate by id — each input marks its own column, the others
+        # are null, so the counts count only that input's rows
+        parts = [
+            new.select(id_col),
+            exacts,
+            cand.select(id_col, F.lit(1).alias("__cand__")),
+            ver.select(
                 id_col,
-                F.coalesce("__exact__", F.lit(0)).cast("long").alias(
-                    "is_exact_dup"
-                ),
-                F.coalesce("__n_cand__", F.lit(0)).cast("long").alias(
-                    "n_candidates"
-                ),
-                F.coalesce("__n_fuzzy__", F.lit(0)).cast("long").alias(
-                    "n_fuzzy"
-                ),
-                F.coalesce("__best_j__", F.lit(0)).cast("long").alias(
-                    "best_j_e6"
-                ),
-            )
+                F.floor(F.col("__j__") * 1_000_000 + F.lit(0.5))
+                .cast("long")
+                .alias("__j_e6__"),
+            ),
+        ]
+        return reduce(
+            lambda x, y: x.unionByName(y, allowMissingColumns=True), parts
+        ).groupBy(id_col).agg(
+            (F.count("__exact__") > 0).cast("long").alias("is_exact_dup"),
+            F.count("__cand__").alias("n_candidates"),
+            F.count("__j_e6__").alias("n_fuzzy"),
+            F.coalesce(F.max("__j_e6__"), F.lit(0).cast("long")).alias(
+                "best_j_e6"
+            ),
         )
 
     def _dedup_pairs(
@@ -3391,7 +3391,7 @@ class FeatureStore:
         spec: dict,
         new_docs: DataFrame,
         id_col: str,
-        content_col: str | None,
+        ccol: str,
         threshold: float,
         max_bucket_size: int | None,
     ):
@@ -3399,8 +3399,9 @@ class FeatureStore:
         dedup_matches: sign the batch (frozen family), equi-join its
         band buckets against buckets derived MAP-ONLY from the stored
         signatures (cap honored), Jaccard-verify the candidate pairs
-        against the source text. Returns (new, signed_new, cand, ver)
-        where ver carries (id_col, __old_id__, __hh_o__, __j__) for
+        against the source text. Returns (new, cand, ver) where cand
+        holds the distinct (id_col, __old_id__) candidate pairs and ver
+        carries (id_col, __old_id__, __hh_n__, __hh_o__, __j__) for
         pairs at or above ``threshold``."""
         from .functions.text import shingles
         from .operators.dedup import (
@@ -3408,15 +3409,11 @@ class FeatureStore:
             simhash_band_buckets,
         )
 
-        ccol = content_col or spec["content_col"]
         p = spec["params"]
         method = spec.get("method", "minhash")
         new = new_docs.select(F.col(id_col), F.col(ccol))
-        # NOTE (r12 measurement): the batch signature feeds three
-        # consumers in one dedup_batch action, but each ends in an
-        # exchange and Spark's ReuseExchange dedups them within the
-        # plan — an explicit localCheckpoint here measured SLOWER
-        # (materialization cost without saved work), so none is taken.
+        # the batch signature's only consumer is the candidate join,
+        # which the checkpoint below computes once
         signed_new = self._dedup_sign(new, ccol, method, p)
         stored = self._derived_state("dedup index", index)
         # fuzzy arm: batch buckets vs STORED buckets (new x old only)
@@ -3453,32 +3450,29 @@ class FeatureStore:
                 .select("band", "bucket")
             )
             ob = ob.join(small, ["band", "bucket"], "left_semi")
-        # r13 (guide §2.5/§1.1): the verify stage was running as ONE task
-        # — AQE coalesces the few-MB (id, old_id) exchange to a single
-        # partition because coalescing is BYTES-based, but the downstream
-        # per-pair hash-set work (100k+ pairs under correlated simhash
-        # bands, each building an O(|shingles|) set) is CPU-bound, so the
-        # whole verify serialized on one core. Spread the pair set over
-        # the session's parallelism (scale-adaptive, not a constant) and
-        # materialize it once: it now feeds three consumers (digest
-        # prune, old-side shingle build, the caller's n_candidates agg).
+        # The verify is CPU-bound per pair (each builds an O(|shingles|)
+        # hash set), but AQE coalesces the few-MB (id, old_id) exchange
+        # to one partition because coalescing is bytes-based. Spread the
+        # pair set over the session's parallelism (scale-adaptive, not a
+        # constant) and materialize it once: it feeds the doc frames'
+        # semi joins, the verify and the manifest's candidate count.
+        # The dedup runs after the repartition, on its partitioning, so
+        # the pairs take one exchange instead of two.
         n_par = new_docs.sparkSession.sparkContext.defaultParallelism
         cand = (
             nb.join(ob, ["band", "bucket"])
             .select(id_col, "__old_id__")
-            .dropDuplicates()
             .repartition(n_par, id_col, "__old_id__")
+            .dropDuplicates()
             .localCheckpoint(eager=False)
         )
         # verify: exact shingle Jaccard, candidate-bounded on both sides
         # (left-semi joins on the candidate ids, whose size estimate is
-        # the doc side's own). Per-DOC frames are computed ONCE and
-        # materialized: each feeds both the digest prune and the exact
-        # arm, and without the checkpoint the plan re-evaluated the
-        # corpus-scan-join subtree per consumer (r13 plan audit).
-        # Shingle sets and their 64-bit digests are per-doc map-side
-        # work, bounded by |candidate new docs| and |candidate old docs|
-        # — never per pair.
+        # the doc side's own). Each per-DOC frame is materialized once:
+        # without the checkpoint the plan re-evaluated the corpus-scan-
+        # join subtree per consumer. Shingle sets, their 64-bit digests
+        # and the normalized-text hash are per-doc map-side work,
+        # bounded by the candidate docs — never per pair.
         dig = lambda c: F.array_distinct(  # noqa: E731
             F.transform(c, lambda s: F.xxhash64(s))
         )
@@ -3486,6 +3480,7 @@ class FeatureStore:
             cand.select(id_col), id_col, "left_semi"
         ).select(
             F.col(id_col),
+            F.md5(F.lower(F.trim(ccol))).alias("__hh_n__"),
             F.array_distinct(
                 shingles(F.col(ccol), p["shingle_k"])
             ).alias("__sh_n__"),
@@ -3507,75 +3502,61 @@ class FeatureStore:
         ).withColumn("__no__", F.size("__sh_o__")).withColumn(
             "__do__", dig(F.col("__sh_o__"))
         ).localCheckpoint(eager=False)
-        # r13 two-phase verify (guide §2.3 "shuffle keys and metadata
-        # instead of payloads"; r12 verdict item 3): a 64-bit
-        # shingle-DIGEST prune runs first, and the exact string-array
-        # Jaccard only touches the survivors. The prune is a provable
-        # UPPER BOUND on the true Jaccard, so it has no false negatives
-        # even under hash collisions: with du = |digest(A) ∪ digest(B)|
-        # and the TRUE set sizes |A|, |B|, collisions can only SHRINK
-        # the digest union, so du <= |A∪B|, hence
+        # One pass over the pairs: each doc frame joins the candidates
+        # once, then a 64-bit shingle-DIGEST prune and, for its
+        # survivors only, the exact string-set Jaccard. The prune
+        # filter comes first (Catalyst folds both filters into the join
+        # condition as a short-circuit AND), so the per-pair hash-set
+        # build runs on longs for every candidate and on strings only
+        # for the few that survive.
+        # The prune is a provable UPPER BOUND on the true Jaccard, so it
+        # has no false negatives even under hash collisions: with
+        # du = |digest(A) ∪ digest(B)| and the TRUE set sizes |A|, |B|,
+        # collisions can only SHRINK the digest union, so du <= |A∪B|,
+        # hence
         #   J_ub = (|A|+|B|-du)/du >= (|A|+|B|-|A∪B|)/|A∪B| = J_true
         # (numerator >= and denominator <=; IEEE division is monotone,
         # so the double compare preserves the ordering). A pair pruned
-        # by J_ub < threshold would therefore fail the exact verify too
-        # — ver's rows are IDENTICAL, but the per-pair hash-set build
-        # runs on longs for all 100k+ correlated-simhash candidates and
-        # on strings only for the few that survive. du rides the
-        # digest-set identity |dn ∪ do| = |dn|+|do|-|dn ∩ do| (exact —
-        # both digest arrays are distinct): the INTERSECT array is
-        # near-empty for dissimilar pairs, where an array_union would
-        # allocate an O(|A|+|B|) array per pair (measured 3x slower).
-        # Each doc frame joins onto the partitioned pair table as an
-        # explicit BROADCAST when its size estimate is within the
-        # session's autoBroadcastJoinThreshold — the planner's default
-        # was a sort-merge join that re-shuffled every pair WITH its
-        # digest arrays attached (the §8 antipattern; measured in the
-        # r13 plan audit). A side above the threshold keeps the
-        # planner's shuffle join: an unbounded broadcast would have to
-        # fit in the driver and every executor.
+        # by J_ub < threshold would therefore fail the exact verify
+        # too. du rides the digest-set identity
+        # |dn ∪ do| = |dn|+|do|-|dn ∩ do| (exact — both digest arrays
+        # are distinct): the INTERSECT array is near-empty for
+        # dissimilar pairs, where an array_union would allocate an
+        # O(|A|+|B|) array per pair (measured 3x slower).
+        # Each doc frame joins the partitioned pair table as an explicit
+        # BROADCAST when its size estimate is within the session's
+        # autoBroadcastJoinThreshold — the planner's default was a
+        # sort-merge join that re-shuffled every pair WITH its arrays
+        # attached. A side above the threshold keeps the planner's
+        # shuffle join (an unbounded broadcast would have to fit in the
+        # driver and every executor); that join then carries the
+        # side's shingle sets with every candidate pair.
         bn, bo = self._broadcast_if_small(ndoc), self._broadcast_if_small(odoc)
         du = (
             F.size("__dn__")
             + F.size("__do__")
             - F.size(F.array_intersect("__dn__", "__do__"))
         )
-        pre = (
-            cand.join(bn(ndoc.select(id_col, "__na__", "__dn__")), id_col)
-            .join(
-                bo(odoc.select("__old_id__", "__no__", "__do__")),
-                "__old_id__",
-            )
-            .withColumn("__du__", du)
-            .filter(
-                (F.col("__na__") + F.col("__no__") - F.col("__du__"))
-                / F.col("__du__")
-                >= threshold
-            )
-            .select(id_col, "__old_id__")
-        )
-        # Exact arm on survivors only. Jaccard via the set identity
-        # |A∪B| = |A| + |B| - |A∩B| (exact for distinct arrays, which
-        # both sides are): ONE hash-set build per pair (r12
-        # optimization). Integer-identical sizes -> bit-identical __j__.
+        # Exact Jaccard via the set identity |A∪B| = |A| + |B| - |A∩B|
+        # (exact for distinct arrays, which both sides are): ONE
+        # hash-set build per pair. Integer-identical sizes ->
+        # bit-identical __j__.
         inter = F.size(F.array_intersect("__sh_n__", "__sh_o__"))
         ver = (
-            pre.join(bn(ndoc.select(id_col, "__sh_n__")), id_col)
-            .join(
-                bo(odoc.select("__old_id__", "__hh_o__", "__sh_o__")),
-                "__old_id__",
+            cand.join(bn(ndoc), id_col)
+            .join(bo(odoc), "__old_id__")
+            .filter(
+                (F.col("__na__") + F.col("__no__") - du) / du >= threshold
             )
             .withColumn("__i__", inter)
             .withColumn(
                 "__j__",
-                F.col("__i__")
-                / (
-                    F.size("__sh_n__") + F.size("__sh_o__") - F.col("__i__")
-                ),
+                F.col("__i__") / (F.col("__na__") + F.col("__no__") - F.col("__i__")),
             )
             .filter(F.col("__j__") >= threshold)
+            .select(id_col, "__old_id__", "__hh_n__", "__hh_o__", "__j__")
         )
-        return new, signed_new, cand, ver
+        return new, cand, ver
 
     @staticmethod
     def _broadcast_if_small(df: DataFrame):
@@ -3616,14 +3597,12 @@ class FeatureStore:
         FLAG in dedup_batch covers those, at O(batch) rows. Same
         staleness/rewrite refusals and plan shape as dedup_batch."""
         spec = self._serving_spec("dedup index", index)
-        _, signed_new, _, ver = self._dedup_pairs(
-            index, spec, new_docs, id_col, content_col, threshold,
-            max_bucket_size,
+        _, _, ver = self._dedup_pairs(
+            index, spec, new_docs, id_col,
+            content_col or spec["content_col"], threshold, max_bucket_size,
         )
-        signed = signed_new.select(id_col, F.col("hh").alias("__hh_n__"))
         return (
-            ver.join(signed, id_col)
-            .select(
+            ver.select(
                 id_col,
                 F.col("__old_id__").alias("old_id"),
                 F.floor(F.col("__j__") * 1_000_000 + F.lit(0.5))
@@ -5449,17 +5428,30 @@ class FeatureStore:
         ``delete()`` refuses to create dangling references in the first
         place."""
         self._reg_generation, raw = self._read_state(self._registry_path())
-        return {kind: raw.get(kind, {}) for kind in self._REGISTRY_KINDS}
+        reg = {kind: raw.get(kind, {}) for kind in self._REGISTRY_KINDS}
+        self._reg_published = copy.deepcopy(reg)
+        return reg
 
     def _save_registry(self) -> None:
         """CAS-publish the full in-memory spec state to ``_registry.json``
         (see ``_publish_state``). Version DATA publishes into per-table
-        directories and was never the clobber risk."""
-        self._reg_generation = self._publish_state(
-            self._registry_path(),
-            {kind: getattr(self, attr) for kind, attr in self._REGISTRY_KINDS.items()},
-            self._reg_generation,
-        )
+        directories and was never the clobber risk.
+
+        Mutators change the spec dicts first and publish after. When the
+        publish fails (refused by the CAS, or the write itself), every
+        spec is restored to the state this instance last published or
+        loaded, so it never serves a spec that was never published."""
+        state = {kind: getattr(self, attr) for kind, attr in self._REGISTRY_KINDS.items()}
+        try:
+            self._reg_generation = self._publish_state(
+                self._registry_path(), state, self._reg_generation
+            )
+        except BaseException:
+            for kind, specs in state.items():
+                specs.clear()
+                specs.update(copy.deepcopy(self._reg_published[kind]))
+            raise
+        self._reg_published = copy.deepcopy(state)
 
     def _assert_registry_current(self, context: str) -> None:
         """Pre-mutation CAS probe: index builds and refreshes mutate

@@ -88,6 +88,64 @@ class TestTwoWriterInstances:
         ]
 
 
+class TestRefusedPublishRollsBack:
+    """A refused publish restores the instance's specs: a stale instance
+    keeps serving what it last published or loaded, never a spec the
+    file refused."""
+
+    def test_stale_mutators_keep_the_published_specs(self, spark, tmp_path):
+        root = str(tmp_path / "s")
+        setup = FeatureStore(spark, storage_path=root)
+        setup.register("ev", _feats(spark))
+        _wv(setup, "wa")
+        a = FeatureStore(spark, storage_path=root)
+        b = FeatureStore(spark, storage_path=root)
+        a.register("ev2", _feats(spark), ttl_seconds=60)  # a publishes
+
+        def fresh():
+            return FeatureStore(spark, storage_path=root)
+
+        with pytest.raises(FeatureStoreError, match="generation"):
+            _wv(b, "wb")
+        assert b.list_window_views() == fresh().list_window_views() == ["wa"]
+        with pytest.raises(FeatureStoreError, match="generation"):
+            b.register("ev3", _feats(spark), ttl_seconds=5)
+        assert b.get_view_ttl("ev3") is None
+        with pytest.raises(FeatureStoreError, match="generation"):
+            b.delete("ev", cascade=True)
+        # refused before any drop: the table and its window view survive
+        assert b.list_window_views() == fresh().list_window_views() == ["wa"]
+        assert "ev" in {t.name for t in fresh().list_tables()}
+
+    def test_stale_saved_dataset_writes_keep_the_published_data(
+        self, spark, tmp_path
+    ):
+        root = str(tmp_path / "s")
+        setup = FeatureStore(spark, storage_path=root)
+        setup.register("ev", _feats(spark))
+        spine = _feats(spark).select("entity_id", "timestamp").limit(50)
+        a = FeatureStore(spark, storage_path=root)
+        b = FeatureStore(spark, storage_path=root)
+        a.create_saved_dataset("ds", "ev", spine)
+        want = a.get_saved_dataset("ds").count()
+        # b does not know a's "ds": its create is refused before it
+        # writes over a's table
+        with pytest.raises(FeatureStoreError, match="generation"):
+            b.create_saved_dataset("ds", "ev", spine.limit(5))
+        assert FeatureStore(spark, storage_path=root).get_saved_dataset(
+            "ds"
+        ).count() == want
+        c = FeatureStore(spark, storage_path=root)
+        _wv(a, "wa")  # a publishes again: c is stale
+        with pytest.raises(FeatureStoreError, match="generation"):
+            c.drop_saved_dataset("ds")
+        # the refused drop leaves both the spec and its table
+        assert c.list_saved_datasets() == ["ds"]
+        assert FeatureStore(spark, storage_path=root).get_saved_dataset(
+            "ds"
+        ).count() == want
+
+
 def _child_drop_window_view(root: str, name: str, q) -> None:
     """Runs in a SEPARATE PROCESS. Registry mutations are pure Python
     (json + flock) — no SparkSession needed for this path, so the child

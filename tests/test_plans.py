@@ -1089,6 +1089,19 @@ class TestDedupIndexPlans:
         band_join = re.compile(r"Left keys \[2\]: \[band#\d+, bucket#\d+\]")
         assert any(band_join.search(p) for p in plans[:-1]), plans
 
+    def test_batch_is_signed_once(self, dd):
+        """The exact arm hashes the batch text itself: once the three
+        checkpoints are taken, the dedup_batch plan holds no shingle
+        explode and no signature aggregate — the batch's only signing
+        is the one inside the candidate checkpoint."""
+        fs, new = dd
+        plan = executed_plan(fs.dedup_batch("dd", new, id_col="doc_id"))
+        assert "Generate" not in plan
+        assert "conv(" not in plan and "functions=[min(" not in plan
+        # the manifest is one aggregate by id, not three left joins
+        assert "LeftOuter" not in plan
+        assert "LeftSemi" in plan  # the exact arm
+
     def test_stored_banding_is_map_only(self, dd):
         """Buckets re-derive from the persisted signatures at O(bands)
         per row: scan -> explode projection, zero exchanges."""
