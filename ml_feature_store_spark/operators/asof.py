@@ -1,34 +1,39 @@
-"""Distributed as-of (backward) join.
+"""Distributed as-of joins: backward, forward and nearest.
 
 The reference's ``get_training_set`` is a Python loop over spine rows with a
 full-table boolean mask per row — O(|spine| x |table|)
 (reference: src/ml_feature_store/store.py:261-334, loop at 288, mask at
-326-328). Spark has no native as-of join; this module ships two distributed
-rewrites with identical semantics:
+326-328). Spark has no native as-of join; every direction here is one
+kernel used several ways:
 
-* ``strategy="join"`` — range-join + per-spine-row argmax. Conceptually
-  simple; the non-equi conjunct means Spark executes an equi join on the
-  entity key with the range predicate as a post-filter, then a max_by
-  aggregation picks the latest qualifying feature row per spine row.
-  Row explosion is bounded by (spine rows x feature rows per entity).
+* ``_tagged`` unions feature rows (payload struct in ``__payload__``) and
+  spine rows (null payload, ``__is_spine__ = 1``) into one frame;
+* ``_carry`` runs the one carry-forward window over it — a running
+  ``last(payload, ignorenulls=True)`` — and holds the only copy of the
+  tie-break order;
+* ``_emit`` projects the picked feature row back into output columns.
 
-* ``strategy="union"`` — union + single sort: tag feature and spine rows,
-  sort within each entity by (ts, is_spine, tiebreak), and carry the most
-  recent feature payload forward onto each spine row with
-  ``last(payload, ignorenulls=True)`` over an unbounded-preceding window.
-  ONE shuffle, NO row explosion — this is the 100 TB strategy (cost is
-  O((|spine|+|table|) log) per entity partition, independent of fan-out).
+NO join between spine and features, NO row explosion: cost is
+O((|spine|+|table|) log) per window partition, independent of per-entity
+fan-out. The backward join has two strategies:
 
-* ``strategy="union_bucketed"`` — the hot-entity (skew) variant of
-  ``union``. A window partitioned by entity alone serializes each entity
-  into ONE task; an entity with billions of rows stalls the stage. Here
-  rows are additionally hashed into fixed time buckets, the carry-forward
-  window runs per (entity, bucket) — bounded work per task — and a second,
-  tiny pass over per-bucket maxima (one row per (entity, bucket), computed
-  with a skew-immune partial-aggregating max_by) supplies each bucket's
-  carry-in: the latest feature from any earlier bucket. Identical
-  semantics (property-tested against ``union``), two extra narrow shuffles
-  over per-bucket cardinality data.
+* ``strategy="union"`` (default) — one carry partitioned by entity: ONE
+  shuffle. This is the 100 TB strategy.
+
+* ``strategy="union_bucketed"`` — the hot-entity (skew) variant. A window
+  partitioned by entity alone serializes each entity into ONE task; an
+  entity with billions of rows stalls the stage. Here the carry runs per
+  (entity, time bucket) — bounded work per task — and a second, tiny pass
+  over per-bucket maxima (one row per (entity, bucket), computed with a
+  skew-immune partial-aggregating max_by) supplies each bucket's carry-in:
+  the latest feature from any earlier bucket. Identical semantics
+  (property-tested against ``union``), two extra narrow shuffles over
+  per-bucket cardinality data.
+
+``asof_join_forward`` and ``asof_join_nearest`` add the reversed (forward)
+carry on the same entity partitioning; ``asof_join_nearest_banded`` runs
+both carries per (entity, tolerance-wide bucket), the hot-entity variant
+of nearest.
 
 Semantics (must-match, SURVEY §2.3#4):
   * inclusive: feature.ts <= spine.ts qualifies;
@@ -41,13 +46,12 @@ Semantics (must-match, SURVEY §2.3#4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .pit import ENTITY_COL, ROW_ID_COL, TIMESTAMP_COL
+from .pit import ENTITY_COL, ROW_ID_COL, TIMESTAMP_COL, _latest_key
 
-_SPINE_TS = "__spine_ts__"
-_SPINE_ID = "__spine_row__"
+ASOF_STRATEGIES = ("union", "union_bucketed")
 
 
 def asof_join(
@@ -63,7 +67,8 @@ def asof_join(
     embargo_seconds: float = 0.0,
 ) -> DataFrame:
     """For each spine (entity, ts) row return the latest feature row with
-    ``feature.ts <= spine.ts``. See module docstring for semantics.
+    ``feature.ts <= spine.ts``. See module docstring for semantics;
+    ``strategy`` is ``"union"`` or ``"union_bucketed"``.
 
     ``keep_spine_ts=True`` additionally emits the spine timestamp as
     ``as_of_timestamp`` (useful for training pipelines; the reference's
@@ -92,6 +97,10 @@ def asof_join(
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
+    if strategy not in ASOF_STRATEGIES:
+        raise ValueError(
+            f"strategy must be 'union' or 'union_bucketed', got {strategy!r}"
+        )
     if embargo_seconds < 0:
         raise ValueError(
             f"embargo_seconds must be >= 0, got {embargo_seconds!r}"
@@ -102,21 +111,19 @@ def asof_join(
             F.col(ts_col)
             - F.expr(f"INTERVAL {float(embargo_seconds)} SECONDS"),
         )
-    inner = how == "inner"
-    if strategy == "join":
-        out = _asof_via_join(spine, features, entity_col, ts_col, True, inner)
-    elif strategy == "union_bucketed":
+    if strategy == "union_bucketed":
         out = _asof_via_union_bucketed(
-            spine, features, entity_col, ts_col, bucket_seconds=bucket_seconds,
-            inner=inner,
+            spine, features, entity_col, ts_col, bucket_seconds, how
         )
     else:
-        out = _asof_via_union(spine, features, entity_col, ts_col, True, inner)
+        out = _asof_directional(
+            spine, features, entity_col, ts_col, None, True, how, "backward"
+        )
     if tolerance_seconds is not None:
         bound = F.col("as_of_timestamp") - F.expr(
             f"INTERVAL {float(tolerance_seconds)} SECONDS"
         )
-        if inner:
+        if how == "inner":
             out = out.filter(F.col(ts_col) >= bound)
         else:
             # left: out-of-tolerance matches keep the spine row, features null
@@ -144,52 +151,106 @@ def asof_join(
     return out
 
 
-def _feature_payload_cols(features: DataFrame, entity_col: str) -> list[str]:
-    return [c for c in features.columns if c != entity_col]
+def _tagged(
+    spine: DataFrame, features: DataFrame, entity_col: str, ts_col: str
+) -> tuple[DataFrame, list[str], Column | None]:
+    """The one union frame every as-of variant sorts: ``entity_col``,
+    ``__evt_ts__``, ``__is_spine__`` and ``__payload__``. Feature rows
+    carry their columns (``ts_col`` included) as the ``__payload__``
+    struct; spine rows carry a null payload and ``__is_spine__ = 1``.
+    Returns ``(frame, payload columns, tie-break column or None)``; the
+    tie-break is the payload's ``__row_id__`` when the features have one."""
+    payload = [c for c in features.columns if c != entity_col]
+    f_tagged = features.select(
+        F.col(entity_col),
+        F.col(ts_col).alias("__evt_ts__"),
+        F.lit(0).alias("__is_spine__"),
+        F.struct(*[F.col(c) for c in payload]).alias("__payload__"),
+    )
+    s_tagged = spine.select(
+        F.col(entity_col),
+        F.col(ts_col).alias("__evt_ts__"),
+        F.lit(1).alias("__is_spine__"),
+        F.lit(None).cast(f_tagged.schema["__payload__"].dataType).alias("__payload__"),
+    )
+    tb = F.col(f"__payload__.{ROW_ID_COL}") if ROW_ID_COL in payload else None
+    return f_tagged.unionByName(s_tagged), payload, tb
 
 
-def _asof_via_join(
-    spine: DataFrame,
-    features: DataFrame,
-    entity_col: str,
-    ts_col: str,
-    keep_spine_ts: bool,
-    inner: bool = True,
+def _carry(
+    df: DataFrame,
+    part: list[str],
+    tb: Column | None,
+    name: str,
+    reverse: bool = False,
+    exact: bool = True,
 ) -> DataFrame:
-    payload = _feature_payload_cols(features, entity_col)
-    s = (
-        spine.select(
-            F.col(entity_col).alias("__s_entity__"),
-            F.col(ts_col).alias(_SPINE_TS),
-        )
-        .withColumn(_SPINE_ID, F.monotonically_increasing_id())
+    """Add ``name``: the running ``last(__payload__, ignorenulls=True)``
+    over ``part`` — the one carry window of every as-of variant, and the
+    only copy of the tie-break order:
+
+    * time ASC, or DESC when ``reverse``;
+    * at equal time the spine row sorts AFTER the features when ``exact``
+      (an exact-time feature row reaches it), BEFORE them otherwise — in
+      the window's own order, reversed or not;
+    * among tied feature rows ``__row_id__`` DESC NULLS FIRST, so the
+      last one the running window sees is the MIN ``__row_id__`` (pandas
+      first-max-occurrence parity, SURVEY §2.3#2) in either direction.
+
+    ``reverse`` is the forward carry: the feature row at-or-after each
+    spine row. Its natural spelling, first(ignorenulls) over [CURRENT
+    ROW, UNBOUNDED FOLLOWING), makes Spark re-aggregate the suffix for
+    EVERY row (UnboundedFollowingWindowFunctionFrame is O(n^2) per
+    partition; a 3M-row hot entity never finishes — caught by
+    tools/skew_smoke.py). The identical value is the RUNNING
+    last(ignorenulls) over the REVERSED sort, which Spark evaluates
+    incrementally in O(n): walking the reversed order up to the current
+    row visits exactly the rows at-or-after it in forward order, and
+    last() picks the one nearest the current row."""
+    ts, spine = F.col("__evt_ts__"), F.col("__is_spine__")
+    order = [ts.desc() if reverse else ts.asc(), spine.asc() if exact else spine.desc()]
+    if tb is not None:
+        order.append(tb.desc_nulls_first())
+    w = (
+        Window.partitionBy(*part)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # Rename feature columns up front: fresh attribute ids make the join
-    # unambiguous even when the spine was derived from `features` itself.
-    f = features.select([F.col(c).alias(f"__f_{c}") for c in features.columns])
-    cond = (s["__s_entity__"] == f[f"__f_{entity_col}"]) & (
-        f[f"__f_{ts_col}"] <= s[_SPINE_TS]
-    )
-    joined = s.join(f, cond, "inner" if inner else "left").select(
-        F.col(_SPINE_ID),
-        F.col(_SPINE_TS),
-        F.col("__s_entity__").alias(entity_col),
-        *[F.col(f"__f_{c}").alias(c) for c in payload],
-    )
-    # argmax per spine row: max feature ts, tie-broken by min __row_id__.
-    ord_fields = [F.col(ts_col).alias("_t")]
-    if ROW_ID_COL in payload:
-        ord_fields.append((-F.col(ROW_ID_COL)).alias("_n"))
-    best = F.max_by(
-        F.struct(*[F.col(c) for c in payload]), F.struct(*ord_fields)
-    ).alias("_best")
-    agg = joined.groupBy(_SPINE_ID, _SPINE_TS, entity_col).agg(best)
+    return df.withColumn(name, F.last("__payload__", ignorenulls=True).over(w))
+
+
+def _emit(
+    df: DataFrame,
+    picked: str,
+    entity_col: str,
+    payload: list[str],
+    keep_spine_ts: bool,
+) -> DataFrame:
+    """The one output projection: the entity, the columns of the picked
+    feature row (struct column ``picked``) without ``__row_id__``, and the
+    spine timestamp as ``as_of_timestamp`` when ``keep_spine_ts``."""
     out_cols = [F.col(entity_col)] + [
-        F.col(f"_best.{c}").alias(c) for c in payload if c != ROW_ID_COL
+        F.col(f"{picked}.{c}").alias(c) for c in payload if c != ROW_ID_COL
     ]
     if keep_spine_ts:
-        out_cols.append(F.col(_SPINE_TS).alias("as_of_timestamp"))
-    return agg.select(*out_cols)
+        out_cols.append(F.col("__evt_ts__").alias("as_of_timestamp"))
+    return df.select(*out_cols)
+
+
+def _dist(row: Column, ts_col: str) -> Column:
+    """|feature row's ts - spine ts| in microseconds."""
+    return F.abs(F.unix_micros(row[ts_col]) - F.unix_micros(F.col("__evt_ts__")))
+
+
+def _nearer(back: Column, fwd: Column, ts_col: str) -> Column:
+    """The candidate closer to the spine row; a distance tie keeps the
+    BACKWARD (past) one — never silently prefer future data."""
+    return (
+        F.when(back.isNull(), fwd)
+        .when(fwd.isNull(), back)
+        .when(_dist(back, ts_col) <= _dist(fwd, ts_col), back)
+        .otherwise(fwd)
+    )
 
 
 def _asof_via_union_bucketed(
@@ -198,127 +259,54 @@ def _asof_via_union_bucketed(
     entity_col: str,
     ts_col: str,
     bucket_seconds: int,
-    inner: bool = True,
+    how: str,
 ) -> DataFrame:
     """Skew-safe union as-of: carry-forward windows per (entity, time
     bucket), plus a carry-in join from per-bucket maxima. See module
     docstring. Always emits ``as_of_timestamp`` (caller drops it)."""
-    payload = _feature_payload_cols(features, entity_col)
-    tb = ROW_ID_COL if ROW_ID_COL in payload else None
+    u, payload, tb = _tagged(spine, features, entity_col, ts_col)
     bucket_us = int(bucket_seconds) * 1_000_000
+    u = u.withColumn("__bkt__", F.floor(F.unix_micros("__evt_ts__") / F.lit(bucket_us)))
+    part = [entity_col, "__bkt__"]
 
-    f_tagged = features.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(0).alias("__is_spine__"),
-        F.struct(*[F.col(c) for c in payload]).alias("__payload__"),
-    ).withColumn("__bkt__", F.floor(F.unix_micros("__evt_ts__") / F.lit(bucket_us)))
-    s_tagged = spine.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(1).alias("__is_spine__"),
-        F.lit(None).cast(f_tagged.schema["__payload__"].dataType).alias("__payload__"),
-    ).withColumn("__bkt__", F.floor(F.unix_micros("__evt_ts__") / F.lit(bucket_us)))
-    unioned = f_tagged.unionByName(s_tagged)
-
-    # Pass A: within-bucket carry-forward (same order contract as `union`,
-    # but each task's work is bounded by one entity-bucket, not one entity).
-    order = [F.col("__evt_ts__").asc(), F.col("__is_spine__").asc()]
-    if tb:
-        order.append(F.col(f"__payload__.{tb}").desc_nulls_first())
-    wa = (
-        Window.partitionBy(entity_col, "__bkt__")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn(
-        "__last_feat__", F.last("__payload__", ignorenulls=True).over(wa)
-    )
+    # Pass A: within-bucket carry-forward (the `union` carry, but each
+    # task's work is bounded by one entity-bucket, not one entity).
+    carried = _carry(u, part, tb, "__last_feat__")
 
     # Pass B: per-(entity, bucket) feature maximum — partial-aggregating
     # max_by, immune to hot entities — left-joined onto the scaffold of ALL
     # buckets either side touches, then a per-entity window over this tiny
     # (one row per entity-bucket) frame yields each bucket's carry-in.
-    ord_fields = [F.col("__evt_ts__").alias("_t")]
-    if tb:
-        ord_fields.append((-F.col(f"__payload__.{tb}")).alias("_n"))
-    bucket_last = f_tagged.groupBy(entity_col, "__bkt__").agg(
-        F.max_by(F.col("__payload__"), F.struct(*ord_fields)).alias("__blast__")
+    bucket_last = (
+        u.filter(F.col("__is_spine__") == 0)
+        .groupBy(*part)
+        .agg(
+            F.max_by("__payload__", _latest_key(F.col("__evt_ts__"), tb)).alias(
+                "__blast__"
+            )
+        )
     )
-    scaffold = unioned.select(entity_col, "__bkt__").distinct()
     wb = (
         Window.partitionBy(entity_col)
         .orderBy("__bkt__")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     carry = (
-        scaffold.join(bucket_last, [entity_col, "__bkt__"], "left")
+        u.select(*part)
+        .distinct()
+        .join(bucket_last, part, "left")
         .withColumn("__carry_in__", F.last("__blast__", ignorenulls=True).over(wb))
-        .select(entity_col, "__bkt__", "__carry_in__")
+        .select(*part, "__carry_in__")
     )
 
     matched = (
         carried.filter(F.col("__is_spine__") == 1)
-        .join(carry, [entity_col, "__bkt__"], "left")
+        .join(carry, part, "left")
         .withColumn("__feat__", F.coalesce("__last_feat__", "__carry_in__"))
     )
-    if inner:
+    if how == "inner":
         matched = matched.filter(F.col("__feat__").isNotNull())
-    out_cols = [F.col(entity_col)] + [
-        F.col(f"__feat__.{c}").alias(c) for c in payload if c != ROW_ID_COL
-    ]
-    out_cols.append(F.col("__evt_ts__").alias("as_of_timestamp"))
-    return matched.select(*out_cols)
-
-
-def _asof_via_union(
-    spine: DataFrame,
-    features: DataFrame,
-    entity_col: str,
-    ts_col: str,
-    keep_spine_ts: bool,
-    inner: bool = True,
-) -> DataFrame:
-    payload = _feature_payload_cols(features, entity_col)  # includes ts_col
-    tb = ROW_ID_COL if ROW_ID_COL in payload else None
-
-    f_tagged = features.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(0).alias("__is_spine__"),
-        F.struct(*[F.col(c) for c in payload]).alias("__payload__"),
-    )
-    s_tagged = spine.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(1).alias("__is_spine__"),
-        F.lit(None).cast(f_tagged.schema["__payload__"].dataType).alias("__payload__"),
-    )
-    unioned = f_tagged.unionByName(s_tagged)
-
-    # Sort order within entity: time asc; at equal time features precede the
-    # spine row (inclusive <=); among tied-ts features, descending tiebreak so
-    # the LAST one seen by the running window is the minimum __row_id__
-    # (pandas first-max-occurrence parity, SURVEY §2.3#2).
-    order = [F.col("__evt_ts__").asc(), F.col("__is_spine__").asc()]
-    if tb:
-        order.append(F.col(f"__payload__.{tb}").desc_nulls_first())
-    w = (
-        Window.partitionBy(entity_col)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn("__last_feat__", F.last("__payload__", ignorenulls=True).over(w))
-    matched = carried.filter(F.col("__is_spine__") == 1)
-    if inner:
-        matched = matched.filter(F.col("__last_feat__").isNotNull())
-
-    out_cols = [F.col(entity_col)] + [
-        F.col(f"__last_feat__.{c}").alias(c) for c in payload if c != ROW_ID_COL
-    ]
-    if keep_spine_ts:
-        out_cols.append(F.col("__evt_ts__").alias("as_of_timestamp"))
-    return matched.select(*out_cols)
+    return _emit(matched, "__feat__", entity_col, payload, True)
 
 
 def asof_join_nearest(
@@ -338,10 +326,9 @@ def asof_join_nearest(
     ``__row_id__`` (the backward contract of ``asof_join``).
 
     Plan: the union strategy run in BOTH directions — one shuffle on the
-    entity key, two in-partition sorts (backward carry via
-    ``last(ignorenulls)`` over preceding, forward carry via
-    ``first(ignorenulls)`` over following), then a per-row CASE picks the
-    closer candidate. NO join, NO row explosion, cost independent of
+    entity key, two in-partition sorts (the backward carry and the
+    reversed forward carry, see ``_carry``), then a per-row CASE picks
+    the closer candidate. NO join, NO row explosion, cost independent of
     per-entity fan-out — the same reason union is the 100 TB backward
     strategy. ``tolerance_seconds`` bounds the distance post-hoc (drop
     on ``inner``, null-pad on ``left``) with identical semantics in both
@@ -369,8 +356,6 @@ def asof_join_forward(
     forward the way f16's label windows do, but for a single match.
     Same join-free single-shuffle plan as ``asof_join_nearest``; only
     the forward carry is computed."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     return _asof_directional(
         spine, features, entity_col, ts_col, tolerance_seconds,
         keep_spine_ts, how, "forward",
@@ -387,108 +372,34 @@ def _asof_directional(
     how: str,
     direction: str,
 ) -> DataFrame:
+    """The entity-partitioned as-of join in ``direction`` ``"backward"``,
+    ``"forward"`` or ``"nearest"``: only the carries that direction needs,
+    then the spine rows with their pick."""
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    payload = _feature_payload_cols(features, entity_col)
-    tb = ROW_ID_COL if ROW_ID_COL in payload else None
-
-    f_tagged = features.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(0).alias("__is_spine__"),
-        F.struct(*[F.col(c) for c in payload]).alias("__payload__"),
-    )
-    s_tagged = spine.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(1).alias("__is_spine__"),
-        F.lit(None).cast(f_tagged.schema["__payload__"].dataType).alias("__payload__"),
-    )
-    unioned = f_tagged.unionByName(s_tagged)
-
-    # Spine position at equal ts decides whether exact matches reach the
-    # forward window: nearest keeps features BEFORE the spine (backward
-    # covers distance-0), pure forward puts them AFTER (pandas
-    # allow_exact_matches). The forward sort is conceptually
-    # (__evt_ts__ ASC, spine_pos, tb ASC) — but it is EVALUATED reversed:
-    # the natural spelling, first(ignorenulls) over [CURRENT ROW,
-    # UNBOUNDED FOLLOWING), makes Spark re-aggregate the suffix for
-    # EVERY row (UnboundedFollowingWindowFunctionFrame is O(n^2) per
-    # partition; a 3M-row hot entity never finishes — caught by
-    # tools/skew_smoke.py). The identical value is the RUNNING
-    # last(ignorenulls) over the REVERSED sort, which Spark evaluates
-    # incrementally in O(n): walking the reversed order up to the
-    # current row visits exactly the rows at-or-after it in forward
-    # order, and last() picks the one nearest the current row.
-    back_order = [F.col("__evt_ts__").asc(), F.col("__is_spine__").asc()]
-    if tb:
-        # backward: desc so last() lands on the MIN row id (asof_join
-        # parity); forward(reversed): desc_nulls_first so last() lands
-        # on the MIN row id
-        back_order.append(F.col(f"__payload__.{tb}").desc_nulls_first())
-    rev_spine_pos = (
-        F.col("__is_spine__").desc()
-        if direction == "nearest"
-        else F.col("__is_spine__").asc()
-    )
-    rev_fwd_order = [F.col("__evt_ts__").desc(), rev_spine_pos]
-    if tb:
-        rev_fwd_order.append(F.col(f"__payload__.{tb}").desc_nulls_first())
-    w_fwd = (
-        Window.partitionBy(entity_col)
-        .orderBy(*rev_fwd_order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn(
-        "__fwd__", F.last("__payload__", ignorenulls=True).over(w_fwd)
-    )
+    u, payload, tb = _tagged(spine, features, entity_col, ts_col)
+    part = [entity_col]
+    if direction != "backward":
+        # Exact matches reach the forward carry only for pure forward
+        # (pandas allow_exact_matches); nearest leaves distance 0 to the
+        # backward carry.
+        u = _carry(u, part, tb, "__fwd__", reverse=True, exact=direction == "forward")
+    if direction != "forward":
+        u = _carry(u, part, tb, "__last_feat__")
+    picked = u.filter(F.col("__is_spine__") == 1)
     if direction == "nearest":
-        w_back = (
-            Window.partitionBy(entity_col)
-            .orderBy(*back_order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        carried = carried.withColumn(
-            "__back__", F.last("__payload__", ignorenulls=True).over(w_back)
-        )
-    spine_rows = carried.filter(F.col("__is_spine__") == 1)
-
-    if direction == "nearest":
-        d_back = F.abs(
-            F.unix_micros(F.col("__evt_ts__"))
-            - F.unix_micros(F.col(f"__back__.{ts_col}"))
-        )
-        d_fwd = F.abs(
-            F.unix_micros(F.col(f"__fwd__.{ts_col}"))
-            - F.unix_micros(F.col("__evt_ts__"))
-        )
-        chosen = (
-            F.when(F.col("__back__").isNull(), F.col("__fwd__"))
-            .when(F.col("__fwd__").isNull(), F.col("__back__"))
-            .when(d_back <= d_fwd, F.col("__back__"))
-            .otherwise(F.col("__fwd__"))
+        col = "__near__"
+        picked = picked.withColumn(
+            col, _nearer(F.col("__last_feat__"), F.col("__fwd__"), ts_col)
         )
     else:
-        chosen = F.col("__fwd__")
-    picked = spine_rows.withColumn("__near__", chosen)
+        col = "__last_feat__" if direction == "backward" else "__fwd__"
     if tolerance_seconds is not None:
-        dist = F.abs(
-            F.unix_micros(F.col(f"__near__.{ts_col}"))
-            - F.unix_micros(F.col("__evt_ts__"))
-        )
-        in_tol = dist <= F.lit(int(tolerance_seconds * 1_000_000))
-        picked = picked.withColumn(
-            "__near__", F.when(in_tol, F.col("__near__"))
-        )
+        in_tol = _dist(F.col(col), ts_col) <= F.lit(int(tolerance_seconds * 1_000_000))
+        picked = picked.withColumn(col, F.when(in_tol, F.col(col)))
     if how == "inner":
-        picked = picked.filter(F.col("__near__").isNotNull())
-
-    out_cols = [F.col(entity_col)] + [
-        F.col(f"__near__.{c}").alias(c) for c in payload if c != ROW_ID_COL
-    ]
-    if keep_spine_ts:
-        out_cols.append(F.col("__evt_ts__").alias("as_of_timestamp"))
-    return picked.select(*out_cols)
+        picked = picked.filter(F.col(col).isNotNull())
+    return _emit(picked, col, entity_col, payload, keep_spine_ts)
 
 
 def asof_join_nearest_banded(
@@ -506,10 +417,10 @@ def asof_join_nearest_banded(
     ``(entity, floor(ts / tolerance))``, so a hot entity's task is
     bounded by one tolerance-width of history.
 
-    Plan: the same double-window carry as the union strategy, but
+    Plan: the same two carries as ``asof_join_nearest``, but
     partitioned per (entity, bucket); candidates that live in the
     ADJACENT bucket are supplied by a per-bucket boundary table (each
-    bucket's first/last feature row under the union plan's exact tie
+    bucket's first/last feature row under the carries' exact tie
     orders — a partial-agg min_by/max_by, skew-immune) joined back onto
     the spine rows. Any in-tolerance candidate is in the spine row's own
     or adjacent bucket (bucket width == tolerance), so
@@ -529,70 +440,26 @@ def asof_join_nearest_banded(
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     if tolerance_seconds is None or tolerance_seconds <= 0:
         raise ValueError("asof_join_nearest_banded requires tolerance_seconds > 0")
-    payload = _feature_payload_cols(features, entity_col)
-    tb = ROW_ID_COL if ROW_ID_COL in payload else None
+    u, payload, tb = _tagged(spine, features, entity_col, ts_col)
     band_us = int(tolerance_seconds * 1_000_000)
-
-    f_tagged = features.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(0).alias("__is_spine__"),
-        F.struct(*[F.col(c) for c in payload]).alias("__payload__"),
-    )
-    s_tagged = spine.select(
-        F.col(entity_col),
-        F.col(ts_col).alias("__evt_ts__"),
-        F.lit(1).alias("__is_spine__"),
-        F.lit(None).cast(f_tagged.schema["__payload__"].dataType).alias("__payload__"),
-    )
-    u = (
-        f_tagged.unionByName(s_tagged)
-        .withColumn("__ts_us__", F.unix_micros(F.col("__evt_ts__")))
-        .withColumn("__bkt__", F.floor(F.col("__ts_us__") / F.lit(band_us)))
-    )
-
-    # In-bucket carries: EXACTLY the union plan's orders, partitioned by
-    # (entity, bucket). Backward: running last over (ts ASC, spine LAST,
-    # tb DESC-nulls-first). Forward: evaluated as the reversed running
-    # frame (see _asof_directional — the O(n) formulation).
-    back_order = [F.col("__evt_ts__").asc(), F.col("__is_spine__").asc()]
-    rev_fwd_order = [F.col("__evt_ts__").desc(), F.col("__is_spine__").desc()]
-    if tb:
-        back_order.append(F.col(f"__payload__.{tb}").desc_nulls_first())
-        rev_fwd_order.append(F.col(f"__payload__.{tb}").desc_nulls_first())
+    u = u.withColumn("__bkt__", F.floor(F.unix_micros("__evt_ts__") / F.lit(band_us)))
     part = [entity_col, "__bkt__"]
-    w_back = (
-        Window.partitionBy(*part)
-        .orderBy(*back_order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(*part)
-        .orderBy(*rev_fwd_order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = u.withColumn(
-        "__back__", F.last("__payload__", ignorenulls=True).over(w_back)
-    ).withColumn("__fwd__", F.last("__payload__", ignorenulls=True).over(w_fwd))
+    carried = _carry(u, part, tb, "__last_feat__")
+    carried = _carry(carried, part, tb, "__fwd__", reverse=True, exact=False)
     sp = carried.filter(F.col("__is_spine__") == 1)
 
     # Per-bucket boundary rows under the SAME tie orders: "first" is the
     # row the forward carry would hand a spine row just before the
     # bucket (min ts, then min tb); "last" is the backward pick at the
     # bucket end (max ts, then min tb).
-    ts_us = F.unix_micros(F.col("__evt_ts__"))
-    if tb:
-        k_first = F.struct(ts_us, F.col(f"__payload__.{tb}"))
-        k_last = F.struct(ts_us, (-F.col(f"__payload__.{tb}")).alias("_ntb"))
-    else:
-        k_first = F.struct(ts_us)
-        k_last = F.struct(ts_us)
+    ts = F.col("__evt_ts__")
+    first_key = F.struct(ts) if tb is None else F.struct(ts, tb)
     bounds = (
         u.filter(F.col("__is_spine__") == 0)
-        .groupBy(entity_col, "__bkt__")
+        .groupBy(*part)
         .agg(
-            F.min_by("__payload__", k_first).alias("__first__"),
-            F.max_by("__payload__", k_last).alias("__last__"),
+            F.min_by("__payload__", first_key).alias("__first__"),
+            F.max_by("__payload__", _latest_key(ts, tb)).alias("__last__"),
         )
     )
     prev_m = bounds.select(
@@ -607,26 +474,16 @@ def asof_join_nearest_banded(
     )
     sp = sp.join(prev_m, part, "left").join(next_m, part, "left")
 
-    def _dist(c):
-        return F.abs(F.unix_micros(c[ts_col]) - F.col("__ts_us__"))
-
-    back = F.coalesce(F.col("__back__"), F.col("__prev_last__"))
+    # each side's candidate: in-bucket carry, else the neighbor's
+    # boundary row, kept only within the band
+    band = F.lit(band_us)
+    back = F.coalesce(F.col("__last_feat__"), F.col("__prev_last__"))
     fwd = F.coalesce(F.col("__fwd__"), F.col("__next_first__"))
-    backc = F.when(back.isNotNull() & (_dist(back) <= F.lit(band_us)), back)
-    fwdc = F.when(fwd.isNotNull() & (_dist(fwd) <= F.lit(band_us)), fwd)
-    sp = sp.withColumn("__bc__", backc).withColumn("__fc__", fwdc)
-    chosen = (
-        F.when(F.col("__bc__").isNull(), F.col("__fc__"))
-        .when(F.col("__fc__").isNull(), F.col("__bc__"))
-        .when(_dist(F.col("__bc__")) <= _dist(F.col("__fc__")), F.col("__bc__"))
-        .otherwise(F.col("__fc__"))
+    sp = sp.withColumn("__bc__", F.when(_dist(back, ts_col) <= band, back))
+    sp = sp.withColumn("__fc__", F.when(_dist(fwd, ts_col) <= band, fwd))
+    picked = sp.withColumn(
+        "__near__", _nearer(F.col("__bc__"), F.col("__fc__"), ts_col)
     )
-    picked = sp.withColumn("__near__", chosen)
     if how == "inner":
         picked = picked.filter(F.col("__near__").isNotNull())
-    out_cols = [F.col(entity_col)] + [
-        F.col(f"__near__.{c}").alias(c) for c in payload if c != ROW_ID_COL
-    ]
-    if keep_spine_ts:
-        out_cols.append(F.col("__evt_ts__").alias("as_of_timestamp"))
-    return picked.select(*out_cols)
+    return _emit(picked, "__near__", entity_col, payload, keep_spine_ts)

@@ -9,13 +9,11 @@ Scale notes
 -----------
 * ``temporal_filter`` / ``entity_filter`` are pure predicates — they reach the
   scan as PushedFilters (row-group + partition pruning at 100 TB).
-* ``latest_per_entity`` is the one shuffle. Two strategies:
-  - ``"maxby"`` (default): ``groupBy(entity).agg(max_by(struct(*), ord))`` —
-    a hash aggregate with *map-side partial aggregation*, so the shuffle
-    carries at most one row per (entity, map-partition) instead of the whole
-    table. This is the strategy that survives 100x scale-up.
-  - ``"window"``: ``row_number() over (partition by entity order by ts desc)``
-    — shuffles every row; kept for comparison/testing.
+* ``latest_per_entity`` is the one shuffle:
+  ``groupBy(entity).agg(max_by(struct(*), _latest_key))`` — a hash aggregate
+  with *map-side partial aggregation*, so the shuffle carries at most one
+  row per (entity, map-partition) instead of the whole table. This is what
+  survives 100x scale-up.
 """
 
 from __future__ import annotations
@@ -79,40 +77,37 @@ def entity_filter(
     return df.join(F.broadcast(ids_df), on=entity_col, how="left_semi")
 
 
+def _latest_key(ts: Column, tiebreak: Column | None = None) -> Column:
+    """The ``max_by`` key of "the latest row": max ``ts`` wins, then the
+    MIN ``tiebreak`` among tied timestamps (stable sort then first max
+    occurrence == smallest input row id, SURVEY §2.3#2). Struct comparison
+    is lexicographic, so ``struct(ts, -tiebreak)`` orders exactly that way.
+    The as-of joins' per-bucket picks share it (operators/asof.py)."""
+    fields = [ts.alias("_t")]
+    if tiebreak is not None:
+        fields.append((-tiebreak).alias("_n"))
+    return F.struct(*fields)
+
+
 def latest_per_entity(
     df: DataFrame,
     entity_col: str = ENTITY_COL,
     ts_col: str = TIMESTAMP_COL,
     tiebreak_col: str | None = None,
-    strategy: str = "maxby",
 ) -> DataFrame:
     """One row per entity: the row with the maximum timestamp.
 
     This is the leakage-prevention primitive (reference store.py:516-530,
-    ``groupby().idxmax()``). Tie-break parity with the reference (stable sort
-    then first max occurrence == smallest input row id among tied timestamps,
-    SURVEY §2.3#2): order ties by ``tiebreak_col`` ascending when present.
-
-    ``maxby`` strategy: max of ``struct(ts, -tiebreak, payload)`` — struct
-    comparison is lexicographic, so max ts wins, then min tiebreak. Partial
-    aggregation makes this the scalable default.
+    ``groupby().idxmax()``). Tie-break parity with the reference: among
+    tied timestamps the smallest ``tiebreak_col`` (default ``__row_id__``
+    when present) wins — see :func:`_latest_key`. Partial aggregation makes
+    the ``max_by`` scale.
     """
     cols = df.columns
     tb = tiebreak_col if tiebreak_col in cols else (ROW_ID_COL if ROW_ID_COL in cols else None)
-
-    if strategy == "window":
-        order = [F.col(ts_col).desc()]
-        if tb:
-            order.append(F.col(tb).asc())
-        w = Window.partitionBy(entity_col).orderBy(*order)
-        rn = "__rn__"
-        return df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) == 1).drop(rn)
-
     payload = [c for c in cols if c != entity_col]
-    ord_fields = [F.col(ts_col).alias("_t")]
-    if tb:
-        ord_fields.append((-F.col(tb)).alias("_n"))
-    best = F.max_by(F.struct(*[F.col(c) for c in payload]), F.struct(*ord_fields)).alias("_best")
+    key = _latest_key(F.col(ts_col), F.col(tb) if tb else None)
+    best = F.max_by(F.struct(*[F.col(c) for c in payload]), key).alias("_best")
     out = df.groupBy(entity_col).agg(best)
     return out.select(entity_col, *[F.col(f"_best.{c}").alias(c) for c in payload])
 

@@ -2,9 +2,9 @@
 
 Single place where we pin the configuration that correctness depends on
 (UTC session timezone, Arrow) and the configuration that scale depends on
-(AQE, shuffle partitions, broadcast threshold). Tests and ``bench.py`` both
-go through :func:`get_spark` so local runs and cluster runs only differ in
-``master`` / partition counts.
+(AQE, shuffle partitions, broadcast threshold). Tests, tools and the
+benchmark all go through :func:`get_spark` so local runs and cluster runs
+only differ in ``master`` / partition counts.
 """
 
 from __future__ import annotations

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .errors import FeatureStoreError, FeatureTableNotFoundError, FeatureValidationError
-from .operators.asof import asof_join, asof_join_nearest
+from .operators.asof import ASOF_STRATEGIES, asof_join, asof_join_nearest
 from .operators.pit import (
     ENTITY_COL,
     ROW_ID_COL,
@@ -4014,10 +4014,13 @@ class FeatureStore:
         time after the event (chargebacks, returns, delayed ground
         truth); backward-direction only. Composes with the TTL/tolerance
         lookback, which then counts back from the embargoed cutoff.
-        ``tolerance_seconds`` optionally bounds the lookback window;
-        ``strategy="union_bucketed"`` with ``bucket_seconds`` is the
-        hot-entity (skew) path; ``how="left"`` keeps unmatched spine rows
-        null-padded (Feast contract) — see operators/asof.py.
+        ``tolerance_seconds`` optionally bounds the lookback window.
+        ``strategy`` picks the backward plan: ``"union"`` (default; one
+        shuffle on the entity key) or ``"union_bucketed"`` with
+        ``bucket_seconds``, the hot-entity (skew) path that bounds each
+        task by one (entity, time bucket); any other value refuses.
+        ``how="left"`` keeps unmatched spine rows null-padded (Feast
+        contract) — see operators/asof.py.
         ``direction="nearest"`` matches the CLOSEST feature row in either
         direction (pandas merge_asof parity, ties prefer the past) —
         sensor-alignment semantics; only meaningful with an explicit
@@ -4056,6 +4059,10 @@ class FeatureStore:
         if direction not in ("backward", "nearest"):
             raise FeatureValidationError(
                 f"direction must be 'backward' or 'nearest', got {direction!r}"
+            )
+        if strategy not in ASOF_STRATEGIES:
+            raise FeatureValidationError(
+                f"strategy must be 'union' or 'union_bucketed', got {strategy!r}"
             )
         if embargo_seconds < 0:
             raise FeatureValidationError(
@@ -4198,6 +4205,10 @@ class FeatureStore:
         if how not in ("inner", "left"):
             raise FeatureValidationError(
                 f"how must be 'inner' or 'left', got {how!r}"
+            )
+        if strategy not in ASOF_STRATEGIES:
+            raise FeatureValidationError(
+                f"strategy must be 'union' or 'union_bucketed', got {strategy!r}"
             )
         if columns:
             unknown = sorted(set(columns) - set(names))

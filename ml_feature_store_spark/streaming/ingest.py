@@ -369,14 +369,21 @@ def stream_pit_enrich(
     idempotence contract as sd9's upsert / io18's committer).
 
     Scale (100 TB): per micro-batch cost is one as-of join of |batch|
-    spine rows against the feature table — with the default union
-    strategy that re-shuffles features every batch (right for a witness;
-    wrong for a hot loop). For production rates, pass
-    ``strategy="union_bucketed"`` so the features side is pre-bucketed
-    on the entity key and each micro-batch only shuffles its own rows,
-    or pre-filter features to the stream's entity universe.
+    spine rows against the WHOLE feature table — either strategy unions
+    the static features with the batch and re-shuffles them every batch
+    (right for a witness; wrong for a hot loop). For production rates,
+    pre-filter ``features`` to the stream's entity universe.
+    ``strategy="union_bucketed"`` does not cut the per-batch cost (it
+    adds a per-bucket max_by over all features); it only bounds a hot
+    entity's task to one (entity, time bucket). Any other ``strategy``
+    than these two refuses up front, before the query starts.
     """
-    from ..operators.asof import asof_join
+    from ..operators.asof import ASOF_STRATEGIES, asof_join
+
+    if strategy not in ASOF_STRATEGIES:
+        raise ValueError(
+            f"strategy must be 'union' or 'union_bucketed', got {strategy!r}"
+        )
 
     def _enrich(batch_df: DataFrame, batch_id: int) -> None:
         out = asof_join(

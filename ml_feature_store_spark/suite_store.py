@@ -1814,15 +1814,13 @@ def q_f25_online_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_online1_point_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correctness twin of bench.py's ``online1_point_read`` row (the one
-    bench entry that previously had no oracle artifact — round-4 brief
-    item 2): the serving-path read, exactly as the bench times it — a
-    5-entity ``get_online`` IN-list against the materialized
-    latest-per-entity snapshot (store.py materialize_online + get_online;
-    reference semantics = ``get`` at reference store.py:218-259 with the
-    default as-of-now cutoff). One row per requested entity, read from
-    the |entities|-sized snapshot — history is never touched, which is
-    why the bench row stays flat as history grows. __row_id__ is pinned
+    """The serving-path read under the oracle: a 5-entity ``get_online``
+    IN-list against the materialized latest-per-entity snapshot (store.py
+    materialize_online + get_online; reference semantics = ``get`` at
+    reference store.py:218-259 with the default as-of-now cutoff). One
+    row per requested entity, read from the |entities|-sized snapshot —
+    history is never touched, which is why the read's cost stays flat as
+    history grows. __row_id__ is pinned
     to event_id pre-register so the max-ts/min-row-id tie-break is
     oracle-replayable (row_number over ts DESC, event_id ASC)."""
     from .store import FeatureStore

@@ -22,7 +22,7 @@ class TestEmptyInputs:
             [], "entity_id string, timestamp timestamp, x double, __row_id__ long"
         )
         spine = spark.createDataFrame([("a", d(5))], ["entity_id", "timestamp"])
-        for strategy in ("union", "join", "union_bucketed"):
+        for strategy in ("union", "union_bucketed"):
             assert asof_join(spine, feats, strategy=strategy).count() == 0
             left = asof_join(spine, feats, strategy=strategy, how="left").collect()
             assert len(left) == 1 and left[0]["x"] is None

@@ -74,7 +74,7 @@ def test_pit_matches_spec(spark, rows, cutoff):
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=feature_rows, spine=spine_rows)
-@pytest.mark.parametrize("strategy", ["union", "join", "union_bucketed"])
+@pytest.mark.parametrize("strategy", ["union", "union_bucketed"])
 def test_asof_matches_spec(spark, strategy, rows, spine):
     feats = _to_df(spark, rows)
     spine_df = spark.createDataFrame(
@@ -102,7 +102,7 @@ def spec_asof_tolerance(feature_rows_, spine, tol_days):
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=feature_rows, spine=spine_rows, tol=st.integers(min_value=0, max_value=3))
-@pytest.mark.parametrize("strategy", ["union", "join", "union_bucketed"])
+@pytest.mark.parametrize("strategy", ["union", "union_bucketed"])
 def test_asof_tolerance_matches_spec(spark, strategy, rows, spine, tol):
     """Tolerance interacts with bucketing at the worst spot by construction:
     day-granular timestamps + 1-day buckets put every spine row EXACTLY on a
@@ -125,7 +125,15 @@ def test_asof_tolerance_matches_spec(spark, strategy, rows, spine, tol):
     assert got == spec_asof_tolerance(rows, spine, tol)
 
 
-@pytest.mark.parametrize("strategy", ["union", "join", "union_bucketed"])
+@pytest.mark.parametrize("strategy", ["jion", "join"])
+def test_unknown_strategy_refused(spark, strategy):
+    feats = _to_df(spark, [("a", 0, 1)])
+    spine = spark.createDataFrame([("a", BASE)], ["entity_id", "timestamp"])
+    with pytest.raises(ValueError, match="'union' or 'union_bucketed'"):
+        asof_join(spine, feats, strategy=strategy)
+
+
+@pytest.mark.parametrize("strategy", ["union", "union_bucketed"])
 def test_tolerance_at_exact_bucket_edge(spark, strategy):
     """Spine ts exactly at a bucket edge, match at the prior bucket's last
     second: one-second tolerance keeps it (inclusive), zero drops it."""
@@ -147,7 +155,7 @@ def test_tolerance_at_exact_bucket_edge(spark, strategy):
     assert dropped == []
 
 
-@pytest.mark.parametrize("strategy", ["union", "join", "union_bucketed"])
+@pytest.mark.parametrize("strategy", ["union", "union_bucketed"])
 def test_left_asof_keeps_unmatched_spine_rows(spark, strategy):
     """how='left': spine rows with no qualifying feature survive with
     null features (Feast contract); matched rows identical to inner."""
@@ -182,7 +190,7 @@ def test_left_asof_keeps_unmatched_spine_rows(spark, strategy):
     } == {("a", d(15)), ("b", d(25))}
 
 
-@pytest.mark.parametrize("strategy", ["union", "join", "union_bucketed"])
+@pytest.mark.parametrize("strategy", ["union", "union_bucketed"])
 def test_left_asof_tolerance_pads_instead_of_drops(spark, strategy):
     import datetime as dt
 

@@ -83,15 +83,6 @@ class TestAsofJoinPlan:
         assert "Join" not in executed_plan(df).replace("joinType", "")
         assert shuffle_count(df) <= 3
 
-    def test_window_strategy_uses_join(self, spark):
-        from ml_feature_store_spark.operators.asof import asof_join
-        from ml_feature_store_spark.suite import events_features
-
-        feats = events_features(spark, SF)
-        spine = feats.select("entity_id", "timestamp").limit(100)
-        plan = executed_plan(asof_join(spine, feats, strategy="join"))
-        assert "Join" in plan
-
 
 class TestCodegen:
     @pytest.mark.parametrize(

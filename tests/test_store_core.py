@@ -181,7 +181,7 @@ class TestTrainingSet:
         assert out["user_2"]["feature_a"] == 10.0
         assert out["user_2"]["timestamp"] == ts("2024-01-01")
 
-    @pytest.mark.parametrize("strategy", ["union", "join", "union_bucketed"])
+    @pytest.mark.parametrize("strategy", ["union", "union_bucketed"])
     def test_strategies_agree(self, store, feature_df, spark, strategy):
         store.register("f", feature_df)
         spine = spark.createDataFrame(
@@ -204,6 +204,19 @@ class TestTrainingSet:
         empty = spark.createDataFrame([], "entity_id string, timestamp timestamp")
         with pytest.raises(FeatureValidationError):
             store.get_training_set("f", empty)
+
+    @pytest.mark.parametrize("strategy", ["jion", "join"])
+    def test_unknown_strategy_refused(self, store, feature_df, spark, strategy):
+        """A misspelt or retired strategy refuses up front instead of
+        silently running the union plan."""
+        store.register("f", feature_df)
+        spine = spark.createDataFrame(
+            [("user_1", ts("2024-01-15"))], ["entity_id", "timestamp"]
+        )
+        with pytest.raises(FeatureValidationError, match="union_bucketed"):
+            store.get_training_set("f", spine, strategy=strategy)
+        with pytest.raises(FeatureValidationError, match="union_bucketed"):
+            store.get_multi_view_training_set(["f"], spine, strategy=strategy)
 
 
 class TestVersioning:

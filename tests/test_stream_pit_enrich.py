@@ -113,3 +113,16 @@ class TestStreamPitEnrich:
         )
         r3 = [r for r in out.collect() if r.entity_id == 3]
         assert len(r3) == 1 and r3[0].value is None
+
+    def test_unknown_strategy_refused_before_start(
+        self, spark, feature_df, spine_feed, tmp_path
+    ):
+        stream = spark.readStream.schema(
+            "entity_id long, timestamp timestamp"
+        ).parquet(spine_feed)
+        with pytest.raises(ValueError, match="union_bucketed"):
+            stream_pit_enrich(
+                stream, feature_df, str(tmp_path / "sink"),
+                str(tmp_path / "ck"), strategy="jion",
+            )
+        assert not os.path.exists(tmp_path / "ck")
