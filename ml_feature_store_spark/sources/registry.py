@@ -168,6 +168,17 @@ def version_schema(state: TableState, version: int) -> StructType | None:
     return None if raw is None else StructType.fromJson(raw)
 
 
+def delta_fragments(state: TableState, version: int, row_id: int) -> list[str]:
+    """``version``'s fragments that may hold rows with ``__row_id__``
+    above ``row_id``: their recorded ``max_row_id`` is above it, or
+    unknown."""
+    return [
+        k for k in state.versions[version].fragments
+        if state.fragments[k].max_row_id is None
+        or state.fragments[k].max_row_id > row_id
+    ]
+
+
 def _own_key(version: int) -> str:
     """The fragment a version's own write creates."""
     return f"v={version}"
@@ -414,15 +425,10 @@ class _VersionStore:
         )
 
     def read_delta(self, name: str, version: int, row_id: int) -> DataFrame | None:
-        """``version``'s fragments that may hold rows with ``__row_id__``
-        above ``row_id`` (recorded ``max_row_id`` above it, or unknown),
-        read with the version's schema — None when none can."""
+        """``version``'s ``delta_fragments`` above ``row_id``, read with
+        the version's schema — None when there are none."""
         state = self._load(name)
-        keys = [
-            k for k in state.versions[version].fragments
-            if state.fragments[k].max_row_id is None
-            or state.fragments[k].max_row_id > row_id
-        ]
+        keys = delta_fragments(state, version, row_id)
         if not keys:
             return None
         return self._read_fragments(state, keys, version_schema(state, version))

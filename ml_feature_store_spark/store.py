@@ -54,6 +54,7 @@ from .sources.registry import (
     ParquetVersionStore,
     TableState,
     atomic_write_text,
+    delta_fragments,
     version_schema,
 )
 
@@ -186,9 +187,10 @@ class FeatureStore:
         # in get_online for every read of that view; explicit per-call
         # arguments override.
         self._ttl: dict[str, float] = reg["ttl"]
-        # table -> incremental-materialize bookkeeping (row-id watermark
-        # + source row count at the last online snapshot build)
-        self._online_meta: dict[str, dict[str, int]] = reg["online"]
+        # table -> its online view's derived-state spec (src, watermark,
+        # src_rows, src_version, data_version, rewritten): the "online
+        # view" kind of _SOURCED_SPECS
+        self._online_meta: dict[str, dict[str, Any]] = reg["online"]
         # saved datasets (Feast SavedDataset): name -> provenance of a
         # MATERIALIZED training set (views + pinned versions + spine
         # shape). The data itself is a backend table; the spec makes the
@@ -283,9 +285,7 @@ class FeatureStore:
                 getattr(self, self._SOURCED_SPECS[kind][0]).pop(n, None)
                 self._drop_state_tables(kind, n)
         self._backend.drop_table(name)
-        online = name + self._ONLINE_SUFFIX
-        if self._backend.exists(online):
-            self._backend.drop_table(online)
+        self._drop_state_tables("online view", name)
         self._ttl.pop(name, None)
         self._online_meta.pop(name, None)
         if publish:
@@ -490,10 +490,10 @@ class FeatureStore:
         allowed — an incoming batch MISSING existing columns is still
         refused (silently null-filling history-shaped columns for new
         rows is a pipeline bug, not evolution; re-register to shrink). A widening append
-        invalidates the incremental-online watermark: the materialized
-        snapshot's schema no longer matches history, so the next
+        flags the online view ``rewritten``: the materialized snapshot's
+        schema no longer matches history, so the next
         materialize_online(incremental=True) falls back to one full
-        rebuild (the refresh_rollup invalidation contract).
+        rebuild.
         """
         if not self._backend.exists(name):
             self._validate_dataframe(df, context=f"append('{name}')")
@@ -529,9 +529,8 @@ class FeatureStore:
                 c, F.lit(None).cast(prepared.schema[c].dataType)
             )
         # from version metadata (observed at the last publish) — no
-        # full-history max() scan; loose-after-rewrite is fine, ids only
-        # need to keep increasing
-        max_id = self._max_row_id(name)
+        # full-history max() scan
+        _, parent, _, max_id = self._pin_meta(name)
         prepared = prepared.withColumn(
             ROW_ID_COL, F.col(ROW_ID_COL) + F.lit(int(max_id) + 1)
         )
@@ -540,7 +539,6 @@ class FeatureStore:
         # the only thing written; otherwise the union is, whole
         merged = current.select(*prepared.columns).unionByName(prepared)
         stored = {f.name: f.dataType.simpleString() for f in current.schema}
-        parent = self._backend.meta(name).version
         extends: tuple[int, ...] = ()
         if set(stored) <= set(merged.columns) and all(
             stored[f.name] == f.dataType.simpleString() for f in merged.schema
@@ -559,10 +557,9 @@ class FeatureStore:
         )
         self._prune_history(name)
         if widened:
-            # the materialized online snapshot's schema no longer matches
-            # history — the incremental fold equation breaks; force a full
-            # rebuild at the next materialize_online(incremental=True)
-            self._invalidate_online_meta(name)
+            # the online snapshot's schema no longer matches history:
+            # the next incremental materialize rebuilds in full
+            self._invalidate_on_rewrite(name, ("online view",))
         return self.get_table_info(name)
 
     def upsert(self, name: str, patch: DataFrame, description: str = "") -> FeatureTableInfo:
@@ -935,132 +932,84 @@ class FeatureStore:
         map-side combined, one shuffle — and subsequent ``get_online``
         calls never touch history at all.
 
-        ``incremental=True`` (Feast's incremental materialization): fold
-        only the rows APPENDED since the last materialize into the
-        existing snapshot — argmax(snapshot ∪ delta), so the refresh
-        costs O(\\|entities\\| + \\|delta\\|) and NEVER rescans history.
+        The view is derived state like rollups and indexes, on the same
+        lifecycle: a full build pins its source snapshot, writes the
+        snapshot and publishes its spec before pruning the old one.
+        ``incremental=True`` (Feast's incremental materialization) is the
+        shared fold (``_fold_derived``): only the rows APPENDED since the
+        last materialize are read and folded into the existing snapshot —
+        argmax(snapshot ∪ delta), so the refresh costs
+        O(\\|entities\\| + \\|delta\\|) and NEVER rescans history.
         Exactness: the per-entity argmax is associative and ``append``
         assigns appended rows strictly higher ``__row_id__`` tie-break
         ids, so the fold reproduces the full rebuild bit-for-bit,
         including ties. History REWRITES (re-register, upsert, merge,
-        expire, erase) INVALIDATE the incremental meta at rewrite time,
+        expire, erase, a widening append) flag the view ``rewritten``,
         so the next incremental call transparently runs a FULL rebuild
-        (correct, never stale); out-of-band drift the invalidation
-        cannot see is still caught by row accounting, which raises (the
-        ``refresh_rollup`` contract; the count rides the snapshot write,
-        and a drifted fold is unpublished before the error). Falls back
-        to a full build when no snapshot exists yet. The (watermark,
-        src_rows) meta persists in the registry, so a fresh process can
-        keep materializing incrementally."""
+        (correct, never stale); out-of-band drift the flag cannot see is
+        caught by row accounting, which raises (the count rides the
+        snapshot write, and a drifted fold is unpublished before the
+        error). Falls back to a full build when no snapshot exists yet.
+        The spec persists in the registry, so a fresh process can keep
+        materializing incrementally."""
         self._require_table(name)
         online = name + self._ONLINE_SUFFIX
-        src_meta = self._backend.meta(name)
-        cur_rows = src_meta.versions[src_meta.version].row_count
-        current = self._current(name)
-        meta = self._online_meta.get(name)
-        watermark: int
-        fold = None  # (rows, max row id) thunks of an incremental fold
-        if incremental and meta is not None and self._backend.exists(online):
-            prev = self._backend.read_version(
-                online, self._backend.versions(online)[-1]
+        if incremental and self._online_folds(name):
+            # the delta stays the union's left side: the write runs in
+            # its session, where its row-count observation is registered
+            self._fold_derived(
+                "online view", name, lambda delta: delta,
+                merge=lambda snap, delta: latest_per_entity(
+                    delta.unionByName(snap.select(*delta.columns))
+                ),
             )
-            if set(prev.columns) != set(current.columns):
-                raise FeatureStoreError(
-                    f"materialize_online('{name}', incremental=True): "
-                    f"schema changed since the last materialize — run a "
-                    f"full materialize_online('{name}')."
-                )
-            prev = prev.select(*current.columns)
-            delta = self._delta_since(name, src_meta.version, meta["watermark"])
-            fold = []
-            if delta is not None:
-                # the accounting count and the new watermark (appends only
-                # add ids above the old one, so max(delta) suffices) ride
-                # the snapshot write: the incremental lane reads the
-                # fragments written since the snapshot once, never history.
-                # The delta is the union's left side, so the write runs in
-                # the session its observation is registered in.
-                delta, *fold = self._observed_stats(delta)
-                prev = delta.unionByName(prev)
-            snap = latest_per_entity(prev)
         else:
-            snap = latest_per_entity(current)
-            # metadata watermark (observed at publish) — no history scan
-            watermark = self._max_row_id(name)
-        version = (self._backend.meta(online).version + 1) if self._backend.exists(online) else 1
-        # count rides the write — the latest-per-entity argmax used to
-        # run twice (once for count, once for the write; r12 optimization)
-        snap, n_rows = self._observed_count(snap)
-        # ordering note (round-11 audit): unlike rollup sums / index
-        # encodes, this fold is an ARGMAX — re-folding the same delta is
-        # idempotent, and the written snapshot equals the full rebuild of
-        # the current rows regardless of the meta publish outcome. A
-        # refused registry save therefore leaves a CORRECT latest
-        # snapshot with a conservative (older) watermark — no
-        # publish-then-prune pinning needed on this path.
-        self._backend.write_version(
-            online, version, snap, n_rows, f"online snapshot of '{name}'"
+            self._assert_registry_current(f"materialize_online('{name}')")
+            src_version, src_rows, watermark, raw = self._pin_source(name)
+            ver, _ = self._write_state(
+                online, latest_per_entity(raw), f"online snapshot of '{name}'"
+            )
+            self._publish_derived(
+                "online view", name,
+                {
+                    "src": name,
+                    "watermark": watermark,
+                    "src_rows": src_rows,
+                    "rewritten": False,
+                    **self._pin_fields("online view", src_version, [ver]),
+                },
+                {online: [ver]},
+            )
+        return self._state_rows("online view", name)
+
+    def _online_folds(self, name: str) -> bool:
+        """Whether an incremental materialize of ``name`` folds (or
+        else builds in full): a snapshot exists and no rewrite since."""
+        spec = self._online_meta.get(name)
+        return (
+            spec is not None and not spec.get("rewritten")
+            and self._backend.exists(name + self._ONLINE_SUFFIX)
         )
-        row_count = n_rows()
-        if fold is not None:
-            delta_rows, wm = [f() for f in fold] or (0, None)
-            if meta["src_rows"] + delta_rows != cur_rows:
-                # error path only: unpublish the fold, as register does
-                # for an empty input
-                self._backend.rollback_version(online, version)
-                raise FeatureStoreError(
-                    f"materialize_online('{name}', incremental=True): "
-                    f"history drifted out-of-band since the last "
-                    f"materialize — run a full materialize_online"
-                    f"('{name}')."
-                )
-            watermark = max(meta["watermark"], wm or 0)
-        # online view keeps only the latest snapshot
-        for v in self._backend.versions(online)[:-1]:
-            self._backend.drop_version(online, v)
-        self._online_meta[name] = {
-            "watermark": watermark,
-            "src_rows": int(cur_rows),
-        }
-        self._save_registry()
-        return row_count
 
-    def _delta_since(
-        self, name: str, version: int, watermark: int
-    ) -> DataFrame | None:
-        """Rows of ``version`` with ``__row_id__`` above ``watermark``,
-        read from only the fragments whose recorded ``max_row_id`` can
-        hold any — None when none can."""
-        hot = self._backend.read_delta(name, version, watermark)
-        return None if hot is None else hot.filter(F.col(ROW_ID_COL) > watermark)
-
-    def _invalidate_online_meta(self, name: str) -> None:
-        """History of ``name`` was REWRITTEN (not appended): the
-        incremental-materialize equation no longer holds, so drop the
-        meta — the next ``materialize_online(incremental=True)``
-        transparently runs a full rebuild instead of serving a stale
-        fold. Row counting alone cannot catch count-preserving rewrites
-        (merge_entities, equal-size upsert), so every rewriting method
-        calls this at publish time."""
-        if self._online_meta.pop(name, None) is not None:
-            self._save_registry()
-
-    def _invalidate_on_rewrite(self, name: str) -> None:
+    def _invalidate_on_rewrite(
+        self, name: str, kinds: Iterable[str] | None = None
+    ) -> None:
         """One hook for EVERY history rewrite of ``name`` (re-register,
-        upsert, expire, erase, merge): drops the online fold meta and
-        marks dependent rollups and vector indexes ``rewritten`` so
-        their refresh (and knn) REFUSES with a rebuild message. The
-        explicit flag is what makes the guard sound: watermark row
-        accounting alone cannot catch a count-preserving rewrite whose
-        fresh ``monotonically_increasing_id`` row ids land at-or-below
-        the old watermark — delta counts 0 and the base+delta equation
-        holds vacuously. The rewriting METHOD knows it rewrote;
-        recording that fact costs one registry save and no data scan."""
-        self._invalidate_online_meta(name)
+        upsert, expire, erase, merge): marks its derived state — the
+        online view, rollups and indexes (or only ``kinds``) —
+        ``rewritten``, so an index refresh (and knn) REFUSES with a
+        rebuild message and the next incremental materialize rebuilds
+        in full. The explicit flag is what makes the guard sound:
+        watermark row accounting alone cannot catch a count-preserving
+        rewrite whose fresh ``monotonically_increasing_id`` row ids land
+        at-or-below the old watermark — delta counts 0 and the
+        base+delta equation holds vacuously. The rewriting METHOD knows
+        it rewrote; recording that fact costs one registry save and no
+        data scan."""
         dirty = False
-        for attr, _, suffixes in self._SOURCED_SPECS.values():
-            if not suffixes:  # no derived state to invalidate
-                continue
+        for kind, (attr, _, suffixes) in self._SOURCED_SPECS.items():
+            if not suffixes or (kinds is not None and kind not in kinds):
+                continue  # no derived state to invalidate
             for spec in getattr(self, attr).values():
                 if spec["src"] == name and not spec.get("rewritten"):
                     spec["rewritten"] = True
@@ -1090,7 +1039,12 @@ class FeatureStore:
         online view is DERIVED state, and keeping it a pure function of
         the offline history is what makes f28-style consistency audits
         meaningful — there is deliberately no independent online write
-        path). Returns the offline table info."""
+        path). Returns the offline table info.
+
+        A failed push writes nothing: the fold's own checks (rewritten
+        flag, registry CAS probe, source pin, row accounting) run on
+        metadata BEFORE the offline append, since a refusal after it
+        would leave a half-applied push that a retry ingests twice."""
         targets = set(to)
         unknown = targets - {"offline", "online"}
         if unknown:
@@ -1104,35 +1058,13 @@ class FeatureStore:
                 f"online snapshot from the offline history (the online "
                 f"view is derived state) — include 'offline'."
             )
-        online = name + self._ONLINE_SUFFIX
-        incremental = (
-            "online" in targets
-            and self._backend.exists(online)
-            and name in self._online_meta
-        )
-        if incremental:
-            # PRE-validate the incremental fold's row accounting on the
-            # pre-push state: the only error the fold could raise later
-            # is out-of-band drift, and detecting it AFTER the offline
-            # append would leave a half-applied push (a retry would
-            # double-ingest the batch). A failed push writes nothing.
-            # Only fragments written since the snapshot are read; in
-            # steady state (materialized after the last push) none is.
-            meta = self._online_meta[name]
-            src_meta = self._backend.meta(name)
-            cur_rows = src_meta.versions[src_meta.version].row_count
-            delta = self._delta_since(name, src_meta.version, meta["watermark"])
-            pre_delta = 0 if delta is None else delta.count()
-            if meta["src_rows"] + pre_delta != cur_rows:
-                raise FeatureStoreError(
-                    f"push('{name}'): offline history drifted out-of-band "
-                    f"since the last materialize — run a full "
-                    f"materialize_online('{name}') first. Nothing was "
-                    f"written."
-                )
+        if "online" in targets and self._online_folds(name):
+            self._fold_guard("online view", name, f"push('{name}')")
+        elif "online" in targets:  # a full build: only its publish refuses
+            self._assert_registry_current(f"push('{name}')")
         info = self.append(name, df, description or f"push into '{name}'")
         if "online" in targets:
-            self.materialize_online(name, incremental=incremental)
+            self.materialize_online(name, incremental=True)
         return info
 
     def get_online(
@@ -1561,8 +1493,8 @@ class FeatureStore:
         return True
 
     # ------------------------------------------------------------------ #
-    # derived state: ONE lifecycle for rollups, vector indexes, dedup
-    # indexes (and probes, where a step applies)
+    # derived state: ONE lifecycle for the online view, rollups, vector
+    # indexes, dedup indexes (and probes, where a step applies)
     # ------------------------------------------------------------------ #
     _ROLLUP_SUFFIX = "__rollup"
     _VINDEX_DATA_SUFFIX = "__vindex"
@@ -1582,7 +1514,9 @@ class FeatureStore:
     # watermark), so a history rewrite flags it ``rewritten`` and every
     # step below — pin, publish, fold, compact, stale, drop — is the
     # same code for each. The method names follow the kind
-    # (create_vector_index, refresh_dedup_index, ...).
+    # (create_vector_index, refresh_dedup_index, ...). The online view
+    # is named after its table and goes with it: delete() drops it and
+    # never reports it as a reference.
     _SOURCED_SPECS = {
         "rollup": ("_rollups", "src", (_ROLLUP_SUFFIX,)),
         "window view": ("_window_views", "source", ()),
@@ -1592,6 +1526,7 @@ class FeatureStore:
         ),
         "dedup index": ("_dedup_indexes", "src", (_DINDEX_DATA_SUFFIX,)),
         "probe": ("_probes", "src", ()),
+        "online view": ("_online_meta", "src", (_ONLINE_SUFFIX,)),
     }
 
     def _derived_spec(self, kind: str, name: str) -> dict:
@@ -1604,11 +1539,22 @@ class FeatureStore:
         return name + self._SOURCED_SPECS[kind][2][0]
 
     @staticmethod
-    def _rewritten_error(kind: str, name: str, spec: dict) -> FeatureStoreError:
+    def _lifecycle_calls(kind: str, name: str) -> tuple[str, str]:
+        """The (refresh, rebuild) calls of a kind, as messages name them."""
+        if kind == "online view":
+            call = f"materialize_online('{name}'"
+            return call + ", incremental=True)", call + ")"
+        m = kind.replace(" ", "_")
+        return f"refresh_{m}('{name}')", f"create_{m}()"
+
+    @classmethod
+    def _rebuild_error(
+        cls, kind: str, name: str, spec: dict, what: str = "was rewritten"
+    ) -> FeatureStoreError:
         return FeatureStoreError(
             f"{kind.capitalize()} '{name}': source '{spec['src']}' history "
-            f"was rewritten since the last build; rebuild with "
-            f"create_{kind.replace(' ', '_')}()."
+            f"{what} since the last build; rebuild with "
+            f"{cls._lifecycle_calls(kind, name)[1]}."
         )
 
     def _derived_lag(
@@ -1622,18 +1568,18 @@ class FeatureStore:
         accounting looking current only through the flag."""
         spec = self._derived_spec(kind, name)
         if spec.get("rewritten"):
-            return spec, self._rewritten_error(kind, name, spec)
+            return spec, self._rebuild_error(kind, name, spec)
         src_meta = self._backend.meta(spec["src"])
         cur_rows = src_meta.versions[src_meta.version].row_count
         if src_meta.version != spec["src_version"] or cur_rows != spec["src_rows"]:
-            m = kind.replace(" ", "_")
+            refresh, rebuild = self._lifecycle_calls(kind, name)
             return spec, FeatureStoreError(
                 f"{kind.capitalize()} '{name}' is STALE: source "
                 f"'{spec['src']}' is at version {src_meta.version} with "
                 f"{cur_rows} rows, but the index covers version "
                 f"{spec['src_version']} with {spec['src_rows']} rows. "
-                f"Run refresh_{m}('{name}') after appends, or "
-                f"create_{m}() after a re-register."
+                f"Run {refresh} after appends, or {rebuild} after a "
+                f"re-register."
             )
         return spec, None
 
@@ -1646,29 +1592,39 @@ class FeatureStore:
             raise lag
         return spec
 
-    def _pin_source(self, name: str) -> tuple[int, int, int, DataFrame]:
-        """Observe-then-read snapshot pin for every derived-state build
-        and refresh: capture the source's version, row count and row-id
-        watermark FIRST, then read exactly that version. append() never
-        touches the registry generation, so the CAS probe cannot see a
-        concurrent append — with publish-time FRESH watermark/meta
-        reads, an append landing mid-build was silently absorbed (the
-        spec recorded post-append accounting against pre-append state,
-        the staleness check passed, and the appended rows sat below the
-        watermark forever — never folded). Pinning makes the spec LAG
-        the source instead: serving refuses stale, the next refresh
-        folds the missed delta. Returns (version, row_count,
-        max_row_id, pinned DataFrame)."""
+    def _pin_meta(self, name: str) -> tuple[TableState, int, int, int]:
+        """Snapshot pin for every derived-state build and refresh:
+        capture the source's version, row count and row-id watermark
+        FIRST, from one metadata read, and read data only of exactly
+        that version afterwards. append() never touches the registry
+        generation, so the CAS probe cannot see a concurrent append —
+        with publish-time FRESH watermark/meta reads, an append landing
+        mid-build was silently absorbed (the spec recorded post-append
+        accounting against pre-append state, the staleness check
+        passed, and the appended rows sat below the watermark forever —
+        never folded). Pinning makes the spec LAG the source instead:
+        serving refuses stale, the next refresh folds the missed delta.
+        The row-id bound is the one the publish observed (a legacy
+        record without it costs one scan); it may be loose after a
+        rewrite, which is safe: append id offsets only need strict
+        monotonicity, and watermarks only need to dominate every folded
+        id. Returns (meta, version, row_count, max_row_id)."""
         self._require_table(name)
         st = self._backend.meta(name)
         ver = int(st.version)
         rec = st.versions[ver]
-        rows = int(rec.row_count)
-        m = getattr(rec, "max_row_id", None)
-        df = self._backend.read_version(name, ver)
+        m = rec.max_row_id
         if m is None:  # legacy version records: scan the PINNED version
-            m = df.agg(F.max(ROW_ID_COL)).collect()[0][0] or 0
-        return ver, rows, int(m), df
+            m = self._backend.read_version(name, ver).agg(
+                F.max(ROW_ID_COL)
+            ).collect()[0][0] or 0
+        return st, ver, int(rec.row_count), int(m)
+
+    def _pin_source(self, name: str) -> tuple[int, int, int, DataFrame]:
+        """(version, row_count, max_row_id, pinned DataFrame): the
+        ``_pin_meta`` pin and a read of exactly the pinned version."""
+        _, ver, rows, m = self._pin_meta(name)
+        return ver, rows, m, self._backend.read_version(name, ver)
 
     def _write_state(
         self, table: str, df: DataFrame, description: str,
@@ -1788,13 +1744,17 @@ class FeatureStore:
 
     def _state_fragments(self, kind: str, name: str) -> int:
         """Fragments in the state a spec pins (its chain length)."""
+        return sum(len(rec.fragments) for rec in self._state_records(kind, name))
+
+    def _state_rows(self, kind: str, name: str) -> int:
+        """Rows in the state a spec pins, from version metadata."""
+        return sum(rec.row_count for rec in self._state_records(kind, name))
+
+    def _state_records(self, kind: str, name: str) -> list:
         spec = self._derived_spec(kind, name)
         dname = self._derived_data_table(kind, name)
         versions = self._backend.meta(dname).versions
-        return sum(
-            len(versions[v].fragments)
-            for v in self._pinned_state_versions(spec, dname)
-        )
+        return [versions[v] for v in self._pinned_state_versions(spec, dname)]
 
     def _index_info(self, kind: str, name: str) -> dict[str, Any]:
         """A copy of an index spec plus its fragment-chain length."""
@@ -1805,53 +1765,83 @@ class FeatureStore:
             "n_fragments": self._state_fragments(kind, name),
         }
 
+    def _fold_guard(
+        self, kind: str, name: str, context: str
+    ) -> tuple[dict, int, int, int]:
+        """The checks a fold makes before it writes, on metadata only,
+        in order: the ``rewritten`` flag (a count-preserving rewrite
+        satisfies row accounting vacuously — fresh row ids can land
+        at-or-below the watermark — see _invalidate_on_rewrite); the
+        fail-fast CAS probe, BEFORE any state write (state folded under
+        a stale registry view would re-fold the same delta after reopen
+        — sums, unlike the online argmax, are not idempotent); the
+        snapshot pin; and the append-only row accounting as far as
+        metadata shows it — the source may have gained at most the rows
+        of the fragments a delta read returns, and lost none. ``push``
+        runs it before its offline append. Returns (spec, src_version,
+        src_rows, watermark) of the pin."""
+        spec = self._derived_spec(kind, name)
+        if spec.get("rewritten"):
+            raise self._rebuild_error(kind, name, spec)
+        self._assert_registry_current(context)
+        st, src_version, cur_rows, watermark = self._pin_meta(spec["src"])
+        hot = sum(
+            st.fragments[k].rows
+            for k in delta_fragments(st, src_version, spec["watermark"])
+        )
+        if not 0 <= cur_rows - spec["src_rows"] <= hot:
+            raise self._rebuild_error(kind, name, spec, "drifted out-of-band")
+        return spec, src_version, cur_rows, watermark
+
     def _fold_derived(self, kind: str, name: str, encode, merge=None) -> int:
         """The refresh step every derived state shares: fold rows
         APPENDED to the source since the last (re)build, O(delta).
 
-        Guards, in order: the ``rewritten`` flag (a count-preserving
-        rewrite satisfies row accounting vacuously — fresh row ids can
-        land at-or-below the watermark — see _invalidate_on_rewrite);
-        the fail-fast CAS probe, BEFORE any state write (state folded
-        under a stale registry view would re-fold the same delta after
-        reopen — sums, unlike the online argmax, are not idempotent);
-        the snapshot pin; and the append-only row accounting — every
-        source row is either base (counted at the last sync) or delta,
-        so a re-register (rewritten history, fresh row ids) breaks the
-        equation and must rebuild.
+        After ``_fold_guard``, only the source fragments that can hold
+        rows above the watermark are read (``read_delta``; none in
+        steady state), and the delta's row count rides the state write
+        as an observed metric. The exact row accounting — every source
+        row is either base (counted at the last sync) or delta, so a
+        re-register (rewritten history, fresh row ids) breaks the
+        equation and must rebuild — is checked after that write, which
+        is unpublished again when the equation fails (or the delta was
+        empty) before anything is published.
 
         ``encode`` maps the delta rows to state rows. Indexes append
         the encoded delta as a new backend FRAGMENT: the new state
         version extends the pinned one, and the spec pins it — refresh
-        I/O is O(delta) end to end. Rollups pass ``merge(state, encoded
-        delta)``, written as one new full version. An empty delta writes
-        nothing and republishes the accounting. Returns the source's row
-        count."""
-        spec = self._derived_spec(kind, name)
-        if spec.get("rewritten"):
-            raise self._rewritten_error(kind, name, spec)
-        m = kind.replace(" ", "_")
-        self._assert_registry_current(f"refresh_{m}('{name}')")
-        src_version, cur_rows, watermark, raw = self._pin_source(spec["src"])
-        delta = raw.filter(F.col(ROW_ID_COL) > spec["watermark"])
-        delta_rows = delta.count()
-        if spec["src_rows"] + delta_rows != cur_rows:
-            raise FeatureStoreError(
-                f"{kind.capitalize()} '{name}': source '{spec['src']}' was "
-                f"re-registered; rebuild with create_{m}()."
-            )
+        I/O is O(delta) end to end. Rollups and the online view pass
+        ``merge(state, encoded delta)``, written as one new full
+        version; it keeps the delta the left side of any union, so the
+        write runs in the delta's session, where its observation is
+        registered. No delta writes nothing and republishes the
+        accounting. Returns the source's row count."""
+        refresh, _ = self._lifecycle_calls(kind, name)
+        spec, src_version, cur_rows, watermark = self._fold_guard(
+            kind, name, refresh
+        )
         dname = self._derived_data_table(kind, name)
         pins = self._pinned_state_versions(spec, dname)
-        if delta_rows:
+        delta = self._backend.read_delta(spec["src"], src_version, spec["watermark"])
+        delta_rows = 0
+        if delta is not None:
+            delta, observed = self._observed_count(
+                delta.filter(F.col(ROW_ID_COL) > spec["watermark"])
+            )
             state = encode(delta)
             if merge is not None:
                 state = merge(self._derived_state(kind, name), state)
             ver, _ = self._write_state(
-                dname, state,
-                f"refresh ({delta_rows} delta rows) of {kind} '{name}'",
+                dname, state, f"refresh of {kind} '{name}'",
                 extends=() if merge is not None else pins,
             )
-            pins = [ver]
+            delta_rows = observed()
+            if delta_rows and spec["src_rows"] + delta_rows == cur_rows:
+                pins = [ver]
+            else:
+                self._backend.rollback_version(dname, ver)
+        if spec["src_rows"] + delta_rows != cur_rows:
+            raise self._rebuild_error(kind, name, spec, "drifted out-of-band")
         self._publish_derived(
             kind, name,
             {
@@ -1974,9 +1964,7 @@ class FeatureStore:
                 prev, partial, group_cols, sum_cols, distinct_cols
             ),
         )
-        rname = rollup + self._ROLLUP_SUFFIX
-        ver = self._pinned_state_versions(self._rollups[rollup], rname)[0]
-        return self._backend.meta(rname).versions[ver].row_count
+        return self._state_rows("rollup", rollup)
 
     def get_rollup(self, rollup: str) -> DataFrame:
         return self._derived_state("rollup", rollup)
@@ -2031,12 +2019,18 @@ class FeatureStore:
             # register-wise max union: merged sketches estimate exactly
             # what a single-pass sketch over the union would
             aggs.append(F.hll_union_agg(f"hll_{c}").alias(f"hll_{c}"))
-        return prev.unionByName(partial).groupBy(*group_cols).agg(*aggs)
+        # the delta's partial stays the left side (see _fold_derived)
+        return partial.unionByName(prev).groupBy(*group_cols).agg(*aggs)
 
     # ------------------------------------------------------------------ #
     # persisted vector indexes (versioned ANN: build once, serve many)
     # ------------------------------------------------------------------ #
     _VINDEX_METHODS = ("ivf", "pq", "lsh", "ivfpq", "sq")
+    # methods ranking by exact cosine inside the probed cells/buckets
+    # (the others rank by integer quantized distance: refine applies)
+    _VINDEX_EXACT = ("ivf", "lsh")
+    # methods with a probe key (nprobe applies; pq/sq scan exhaustively)
+    _VINDEX_PROBED = ("ivf", "lsh", "ivfpq")
     # internal columns of the encoded state table + knn output columns;
     # composite natural keys must not shadow them (round-11 ADVICE)
     _VINDEX_RESERVED = ("vec_id", "embedding", "cell", "codes", "bucket",
@@ -2441,42 +2435,16 @@ class FeatureStore:
             pq_adc_rank,
         )
 
-        spec = self._serving_spec("vector index", index)
+        spec, data, key_cols, adc_k = self._vindex_serving(
+            f"knn('{index}')", index, k, filter_expr, nprobe, refine
+        )
         qv = [float(x) for x in query_vec]
         if len(qv) != spec["dim"]:
             raise FeatureValidationError(
                 f"knn('{index}'): query vector has {len(qv)} dims, index "
                 f"has {spec['dim']}."
             )
-        data = self._derived_state("vector index", index)
-        key_cols = spec.get("key_cols")
-        if key_cols:
-            # composite-key index: expose the natural key columns so
-            # filter_expr can reference them; vec_id (the struct) stays
-            # the ranking/tie-break key
-            data = data.select(
-                *[F.col(f"vec_id.{c}").alias(c) for c in key_cols], "*"
-            )
-        if filter_expr is not None:
-            data = data.filter(filter_expr)
         pp = spec["params"]
-        if refine is not None:
-            if spec["method"] not in ("pq", "ivfpq", "sq"):
-                raise FeatureValidationError(
-                    f"knn('{index}'): refine applies to quantized "
-                    f"methods (pq/ivfpq/sq) — {spec['method']} already "
-                    f"re-ranks by exact cosine."
-                )
-            if int(refine) < 1:
-                raise FeatureValidationError(
-                    f"knn('{index}'): refine must be >= 1, got {refine}."
-                )
-        if nprobe is not None and spec["method"] in ("pq", "sq"):
-            raise FeatureValidationError(
-                f"knn('{index}'): nprobe does not apply to "
-                f"{spec['method']} (exhaustive scan; no probe key)."
-            )
-        adc_k = k * int(refine) if refine else k
         if spec["method"] == "ivf":
             probes = ivf_probe_cells_int(
                 self._vindex_ivf_model(index), qv,
@@ -2531,6 +2499,51 @@ class FeatureStore:
             )
             out = knn_brute_force(cand, qv, k=k)
         return self._vindex_expand_key(out, key_cols)
+
+    def _vindex_serving(
+        self,
+        context: str,
+        index: str,
+        k: int,
+        filter_expr: str | None,
+        nprobe: int | None,
+        refine: int | None,
+    ) -> tuple[dict, DataFrame, list[str] | None, int]:
+        """The serving prelude ``knn`` and ``knn_batch`` share: the spec
+        behind the staleness gate, the nprobe/refine refusals, and the
+        encoded rows — composite-key indexes expose their natural key
+        columns (vec_id, the struct, stays the ranking/tie-break key),
+        and ``filter_expr`` PRE-filters the rows before any distance
+        math (the x33 filtered-ANN shape: post-filtering a global top-k
+        would under-fill k). Returns (spec, rows, key columns, the
+        shortlist size ``k * refine``)."""
+        spec = self._serving_spec("vector index", index)
+        method = spec["method"]
+        if nprobe is not None and method not in self._VINDEX_PROBED:
+            raise FeatureValidationError(
+                f"{context}: nprobe does not apply to {method} "
+                f"(exhaustive scan; no probe key)."
+            )
+        if refine is not None:
+            if method in self._VINDEX_EXACT:
+                raise FeatureValidationError(
+                    f"{context}: refine applies to quantized methods "
+                    f"(pq/ivfpq/sq) — {method} already re-ranks by exact "
+                    f"cosine."
+                )
+            if int(refine) < 1:
+                raise FeatureValidationError(
+                    f"{context}: refine must be >= 1, got {refine}."
+                )
+        data = self._derived_state("vector index", index)
+        key_cols = spec.get("key_cols")
+        if key_cols:
+            data = data.select(
+                *[F.col(f"vec_id.{c}").alias(c) for c in key_cols], "*"
+            )
+        if filter_expr is not None:
+            data = data.filter(filter_expr)
+        return spec, data, key_cols, k * int(refine) if refine else k
 
     def _vindex_batch_refine(
         self,
@@ -2621,59 +2634,30 @@ class FeatureStore:
         from .operators.pit import top_k_per_group
         from .operators.similarity import cosine_similarity
 
-        spec = self._serving_spec("vector index", index)
-        data = self._derived_state("vector index", index)
-        key_cols = spec.get("key_cols")
-        clash = {query_id_col, query_vec_col} & (
-            set(data.columns) | set(key_cols or ())
+        spec, data, key_cols, adc_k = self._vindex_serving(
+            f"knn_batch('{index}')", index, k, filter_expr, nprobe, refine
         )
+        # the encoded columns (and composite-key columns) of the index
+        clash = {query_id_col, query_vec_col} & set(data.columns)
         if clash:
             raise FeatureValidationError(
                 f"knn_batch('{index}'): query column(s) {sorted(clash)} "
                 f"collide with the encoded table's columns "
                 f"({data.columns}) — rename them on the query frame."
             )
-        pp = spec["params"]
-        if key_cols:
-            # composite-key index: natural key columns available to
-            # filter_expr, vec_id (the struct) stays the ranking key
-            if exclude_self:
-                # round-11 ADVICE: the self-exclusion predicate compares
-                # vec_id to the query id column — a struct vs a scalar
-                # can never match (or errors at analysis); the caller
-                # must filter on the natural key columns instead
-                raise FeatureValidationError(
-                    f"knn_batch('{index}'): exclude_self is not "
-                    f"supported on composite-key indexes (vec_id is a "
-                    f"struct over {key_cols}; comparing it to the "
-                    f"scalar '{query_id_col}' cannot match) — use "
-                    f"filter_expr on the natural key columns instead."
-                )
-            data = data.select(
-                *[F.col(f"vec_id.{c}").alias(c) for c in key_cols], "*"
-            )
-        if filter_expr is not None:
-            # PRE-filter the encoded rows before any distance math —
-            # knn's x33 filtered-ANN shape, batch form (round-11)
-            data = data.filter(filter_expr)
-        if nprobe is not None and spec["method"] in ("pq", "sq"):
+        if key_cols and exclude_self:
+            # round-11 ADVICE: the self-exclusion predicate compares
+            # vec_id to the query id column — a struct vs a scalar can
+            # never match (or errors at analysis); the caller must
+            # filter on the natural key columns instead
             raise FeatureValidationError(
-                f"knn_batch('{index}'): nprobe does not apply to "
-                f"{spec['method']} (exhaustive scan; no probe key)."
+                f"knn_batch('{index}'): exclude_self is not supported on "
+                f"composite-key indexes (vec_id is a struct over "
+                f"{key_cols}; comparing it to the scalar "
+                f"'{query_id_col}' cannot match) — use filter_expr on "
+                f"the natural key columns instead."
             )
-        if refine is not None:
-            if spec["method"] not in ("pq", "ivfpq", "sq"):
-                raise FeatureValidationError(
-                    f"knn_batch('{index}'): refine applies to quantized "
-                    f"methods (pq/ivfpq/sq) — {spec['method']} already "
-                    f"re-ranks by exact cosine."
-                )
-            if int(refine) < 1:
-                raise FeatureValidationError(
-                    f"knn_batch('{index}'): refine must be >= 1, got "
-                    f"{refine}."
-                )
-        adc_k = k * int(refine) if refine else k
+        pp = spec["params"]
         # lazy dim guard on the query side (round-11 ADVICE): a
         # wrong-length q_vec would null-pad the zip_with distance/dot
         # expressions — NULL sims and wrong probes instead of an error
@@ -2681,46 +2665,38 @@ class FeatureStore:
             queries, spec["dim"], f"knn_batch('{index}')",
             vec_col=query_vec_col, id_col=query_id_col,
         )
-        if spec["method"] == "sq":
-            from .operators.similarity import sq_rank_batch
+        if spec["method"] not in self._VINDEX_EXACT:
+            # quantized ranks (integer distances), exact-cosine refined
+            if spec["method"] == "sq":
+                from .operators.similarity import sq_rank_batch
 
-            mins, maxs = self._vindex_sq_model(index)
-            out = sq_rank_batch(
-                data, queries, mins, maxs, k=adc_k,
-                query_id_col=query_id_col, query_vec_col=query_vec_col,
-                exclude_self=exclude_self,
-            )
-            if refine:
-                out = self._vindex_batch_refine(
-                    out, queries, spec, k, query_id_col, query_vec_col
+                mins, maxs = self._vindex_sq_model(index)
+                out = sq_rank_batch(
+                    data, queries, mins, maxs, k=adc_k,
+                    query_id_col=query_id_col, query_vec_col=query_vec_col,
+                    exclude_self=exclude_self,
                 )
-            return self._vindex_expand_key(out, key_cols)
-        if spec["method"] == "pq":
-            from .operators.similarity import pq_adc_batch
+            elif spec["method"] == "pq":
+                from .operators.similarity import pq_adc_batch
 
-            out = pq_adc_batch(
-                data, self._vindex_pq_model(index), queries,
-                m=pp["m"], sub_dim=pp["sub_dim"], k=adc_k,
-                query_id_col=query_id_col, query_vec_col=query_vec_col,
-                grid=pp["grid"], exclude_self=exclude_self,
-            )
-            if refine:
-                out = self._vindex_batch_refine(
-                    out, queries, spec, k, query_id_col, query_vec_col
+                out = pq_adc_batch(
+                    data, self._vindex_pq_model(index), queries,
+                    m=pp["m"], sub_dim=pp["sub_dim"], k=adc_k,
+                    query_id_col=query_id_col, query_vec_col=query_vec_col,
+                    grid=pp["grid"], exclude_self=exclude_self,
                 )
-            return self._vindex_expand_key(out, key_cols)
-        if spec["method"] == "ivfpq":
-            from .operators.similarity import ivfpq_adc_batch
+            else:  # ivfpq
+                from .operators.similarity import ivfpq_adc_batch
 
-            centroids, books = self._vindex_ivfpq_model(index)
-            out = ivfpq_adc_batch(
-                data, centroids, books, queries,
-                m=pp["m"], sub_dim=pp["sub_dim"],
-                nprobe=int(nprobe) if nprobe is not None else pp["nprobe"],
-                k=adc_k, query_id_col=query_id_col,
-                query_vec_col=query_vec_col, grid=pp["grid"],
-                exclude_self=exclude_self,
-            )
+                centroids, books = self._vindex_ivfpq_model(index)
+                out = ivfpq_adc_batch(
+                    data, centroids, books, queries,
+                    m=pp["m"], sub_dim=pp["sub_dim"],
+                    nprobe=int(nprobe) if nprobe is not None else pp["nprobe"],
+                    k=adc_k, query_id_col=query_id_col,
+                    query_vec_col=query_vec_col, grid=pp["grid"],
+                    exclude_self=exclude_self,
+                )
             if refine:
                 out = self._vindex_batch_refine(
                     out, queries, spec, k, query_id_col, query_vec_col
@@ -2822,7 +2798,7 @@ class FeatureStore:
         prunes the encoded scan), so semantic dedup of a nightly batch
         prices like any other retrieval job."""
         spec = self._derived_spec("vector index", index)
-        if spec["method"] not in ("ivf", "lsh") and refine is None:
+        if spec["method"] not in self._VINDEX_EXACT and refine is None:
             raise FeatureValidationError(
                 f"dedup_embedding_batch('{index}'): method "
                 f"'{spec['method']}' ranks by integer quantized "
@@ -3885,22 +3861,6 @@ class FeatureStore:
             return None if m is None else int(m)
 
         return observed, lambda: int(obs.get["rows"]), _max_id
-
-    def _max_row_id(self, name: str) -> int:
-        """Upper bound of ``__row_id__`` in the CURRENT version — from
-        version metadata when the publish observed it, else one
-        column-stats scan (legacy versions written before the field).
-        The bound may be loose after a rewrite (rows only get removed);
-        loose is safe everywhere it is used: append id offsets only
-        need strict monotonicity, and watermarks only need to dominate
-        every already-folded id."""
-        st = self._backend.meta(name)
-        rec = st.versions[st.version]
-        m = getattr(rec, "max_row_id", None)
-        if m is not None:
-            return int(m)
-        cur = self._current(name)
-        return int(cur.agg(F.max(ROW_ID_COL)).collect()[0][0] or 0)
 
     def _prune_history(self, name: str) -> None:
         # versions pinned by a live snapshot manifest are retention-exempt:
@@ -5440,6 +5400,8 @@ class FeatureStore:
         place."""
         self._reg_generation, raw = self._read_state(self._registry_path())
         reg = {kind: raw.get(kind, {}) for kind in self._REGISTRY_KINDS}
+        for table, spec in reg["online"].items():
+            spec.setdefault("src", table)  # legacy: watermark + src_rows
         self._reg_published = copy.deepcopy(reg)
         return reg
 
@@ -5481,7 +5443,8 @@ class FeatureStore:
         derived view that sources it — a service selecting such a view
         dangles transitively), as (kind, name) pairs. ONE rule drives
         both ``delete``'s refusal message and its cascade, so the two
-        cannot drift."""
+        cannot drift. The table's own online view is not one: it is
+        dropped with the table."""
         dv = {
             n for n, s in self._derived.items() if table in s["sources"]
         }
@@ -5495,7 +5458,7 @@ class FeatureStore:
             refs += [
                 (kind, n)
                 for n, s in sorted(getattr(self, attr).items())
-                if s[src_key] == table
+                if s[src_key] == table and kind != "online view"
             ]
         return refs
 

@@ -227,6 +227,27 @@ class TestIncrementalStateUnderConcurrency:
         ]
         assert b2.knn("ann", qvec, k=3).count() == 3
 
+    def test_stale_writer_push_writes_nothing(self, spark, tmp_path):
+        """The online fold's CAS probe runs before the offline append:
+        a refused push leaves the history as it was, so a retry after a
+        reopen ingests the batch once."""
+        root = str(tmp_path / "s")
+        setup = FeatureStore(spark, storage_path=root)
+        setup.register("t", _feats(spark))
+        setup.materialize_online("t")
+        a = FeatureStore(spark, storage_path=root)
+        b = FeatureStore(spark, storage_path=root)
+        b.materialize_online("t")  # b publishes
+        batch = _feats(spark).limit(5)
+        with pytest.raises(FeatureStoreError, match="refused"):
+            a.push("t", batch)
+        assert a._backend.versions("t") == [1]
+        a2 = FeatureStore(spark, storage_path=root)
+        rows = a2.get_table_info("t").row_count
+        a2.push("t", batch)
+        assert a2._backend.versions("t") == [1, 2]
+        assert a2.get_table_info("t").row_count == rows + 5
+
     def test_stale_writer_rollup_refresh_refuses_pre_mutation(
         self, spark, tmp_path
     ):

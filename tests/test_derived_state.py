@@ -1,7 +1,8 @@
-"""The derived-state lifecycle shared by rollups, vector indexes and
-dedup indexes: every build pins its source snapshot, so an append that
-lands mid-build is folded by the next refresh instead of being lost.
-Plus a guard on where the public API lives: perfbench spans the public
+"""The derived-state lifecycle shared by the online view, rollups,
+vector indexes and dedup indexes: every build pins its source snapshot,
+so an append that lands mid-build is folded by the next refresh instead
+of being lost, and a fold reads only the source fragments above its
+watermark. Plus a guard on where the public API lives: perfbench spans the public
 methods found in ``vars(FeatureStore)`` / ``vars(ParquetVersionStore)``,
 so a method inherited from a mixin or base class would silently lose
 its span."""
@@ -10,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import inspect
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +50,70 @@ def test_append_during_create_rollup_is_folded_by_refresh(spark):
     assert fs.get_table_info("src").row_count == 15
     assert got["n"] == 15
     assert got["s"] == float(sum(range(15)))
+
+
+def _events(spark, lo, hi):
+    """Rows lo..hi-1 over 3 entities, each later than the one before."""
+    return spark.createDataFrame(
+        [(f"e{i % 3}", dt.datetime(2024, 1, 1) + dt.timedelta(hours=i),
+          float(i)) for i in range(lo, hi)],
+        ["entity_id", "timestamp", "val"],
+    )
+
+
+def _online(fs, name="t"):
+    return {r["entity_id"]: r["val"] for r in fs.get_online(name).collect()}
+
+
+def test_append_during_materialize_online_is_folded_by_push(spark):
+    fs = FeatureStore(spark)
+    fs.register("t", _events(spark, 0, 6))
+    real_read = fs._backend.read_version
+    landed = []
+
+    def append_then_read(name, version):
+        if name == "t" and not landed:
+            landed.append(version)
+            fs.append("t", _events(spark, 6, 9))
+        return real_read(name, version)
+
+    fs._backend.read_version = append_then_read
+    fs.materialize_online("t")
+    fs._backend.read_version = real_read
+    assert landed == [1], "the append never ran inside materialize_online"
+    fs.push("t", _events(spark, 9, 10))
+    assert fs.get_table_info("t").row_count == 10
+    assert _online(fs) == {"e0": 9.0, "e1": 7.0, "e2": 8.0}
+
+
+def test_legacy_online_entry_folds_incrementally(spark, tmp_path):
+    """A registry whose online entry holds only watermark and src_rows
+    opens, reads as the table's own view, and folds only the delta."""
+    fs = FeatureStore(spark, storage_path=str(tmp_path))
+    fs.register("t", _events(spark, 0, 6))
+    fs.materialize_online("t")
+    path = tmp_path / "_registry.json"
+    reg = json.loads(path.read_text())
+    spec = reg["online"]["t"]
+    reg["online"]["t"] = {k: spec[k] for k in ("watermark", "src_rows")}
+    path.write_text(json.dumps(reg))
+    b = FeatureStore(spark, storage_path=str(tmp_path))
+    b.append("t", _events(spark, 6, 8))
+    real_read = b._backend.read_version
+    reads = []
+
+    def logged(name, version):
+        reads.append(name)
+        return real_read(name, version)
+
+    b._backend.read_version = logged
+    assert b.materialize_online("t", incremental=True) == 3
+    b._backend.read_version = real_read
+    assert "t" not in reads  # only the fragment above the watermark
+    assert _online(b) == {"e0": 6.0, "e1": 7.0, "e2": 5.0}
+    spec = b._online_meta["t"]
+    assert (spec["src"], spec["src_version"], spec["src_rows"]) == ("t", 2, 8)
+    assert spec["data_version"] == 2 and not spec.get("rewritten")
 
 
 def test_refresh_rollup_without_appends_writes_nothing(spark):

@@ -15,7 +15,9 @@ contract pinned here, on a plain and on a date-partitioned Parquet store:
 * the streaming sink's exactly-once restart still holds;
 * legacy ``_meta.json`` without fragments reads and takes an append;
 * the chain stays bounded over many small appends;
-* planning ``get`` / ``get_online`` runs no Spark job.
+* planning ``get`` / ``get_online`` runs no Spark job;
+* a materialize, a push and a rollup refresh each run a fixed number of
+  jobs.
 """
 
 from __future__ import annotations
@@ -314,6 +316,25 @@ def _jobs_run_by(spark, group, fn) -> int:
     finally:
         sc.setJobGroup(group + "_done", "")
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_derived_state_job_counts(spark, tmp_path):
+    """Spark jobs per lifecycle call on a 6-row plain table. A fold
+    reads only the fragments above its watermark, and the delta's row
+    count rides the state write: a rollup refresh runs no separate count
+    job."""
+    fs = _store(spark, tmp_path, False)
+    fs.register("t", _batch(spark, 0, 6))
+    assert _jobs_run_by(spark, "lv_mat", lambda: fs.materialize_online("t")) == 2
+    assert _jobs_run_by(
+        spark, "lv_push", lambda: fs.push("t", _batch(spark, 6, 8, day=2))
+    ) == 4
+    fs.create_rollup("t", "r", ["entity_id"], ["x"])
+    fs.append("t", _batch(spark, 8, 10, day=3))
+    assert _jobs_run_by(spark, "lv_refresh", lambda: fs.refresh_rollup("r")) == 3
+    got = {r.entity_id: (r.n_rows, r.sum_x) for r in fs.get_rollup("r").collect()}
+    assert got == {"u0": (3, 12.0), "u1": (3, 15.0), "u2": (2, 8.0),
+                   "u3": (2, 10.0)}
 
 
 def test_planning_reads_runs_no_job(spark, tmp_path, open_cost, layout):
