@@ -424,35 +424,16 @@ class FeatureStore:
         self._validate_dataframe(
             df, context=f"register('{name}')", check_empty=False
         )
-        prepared = self._prepare_dataframe(df)
-        # ONE job per register: the version row count rides the write
-        # action as an observed metric instead of a separate count()
-        # pass over the input (which, for a register fed by an expensive
-        # upstream plan, re-evaluated that whole plan once more), and the
-        # empty-input refusal reads the SAME metric instead of paying a
-        # pre-write isEmpty job. An empty input is detected after the
-        # write action but before anything else can see it: the version
-        # is rolled back (unpublished) and the reference's
-        # "refuse empty" error raised — error-path-only extra work.
-        prepared, row_count, max_id = self._observed_stats(prepared)
-        new_version = (self._backend.meta(name).version + 1) if self._backend.exists(name) else 1
-        self._backend.write_version(
-            name, new_version, prepared, row_count, description,
-            max_row_id=max_id,
-        )
-        if row_count() == 0:  # cached observation — no extra job
-            self._backend.rollback_version(name, new_version)
-            raise FeatureValidationError(
-                f"DataFrame is empty (register('{name}'))"
-            )
-        self._prune_history(name)
         # a re-register rewrites history with fresh row ids — the
         # incremental fold equations no longer hold for ANY dependent
-        self._invalidate_on_rewrite(name)
+        info = self._publish_version(
+            name, df, description,
+            empty=f"DataFrame is empty (register('{name}'))",
+        )
         if ttl_seconds is not None:
             self._ttl[name] = float(ttl_seconds)
             self._save_registry()
-        return self.get_table_info(name)
+        return info
 
     def get_view_ttl(self, name: str) -> float | None:
         """The view-level TTL default registered for ``name`` (seconds),
@@ -482,6 +463,11 @@ class FeatureStore:
         would widen an existing column's type is the exception — the
         union is then written whole, as one new fragment.
 
+        An empty batch is refused ("DataFrame is empty") from the row
+        count the write observes, as ``register`` refuses one: the
+        version is written, then unpublished, so the batch is read
+        once. On the union path the observed count is the parent's.
+
         ``allow_new_columns=True`` permits SCHEMA WIDENING: the incoming
         batch may carry feature columns the table does not have yet;
         existing history reads them as nulls in the new version (older
@@ -502,12 +488,10 @@ class FeatureStore:
         key_cols = self._entity_key_cols(current)
         if key_cols:
             df = self._compose_entity_key(
-                df, key_cols, context=f"append('{name}')"
-            ).withColumn(
-                ENTITY_COL,
-                F.col(ENTITY_COL).cast(current.schema[ENTITY_COL].dataType),
+                df, key_cols, context=f"append('{name}')",
+                key_type=current.schema[ENTITY_COL].dataType,
             )
-        self._validate_dataframe(df, context=f"append('{name}')")
+        self._validate_dataframe(df, f"append('{name}')", check_empty=False)
         visible = [c for c in current.columns if c not in HIDDEN_COLS]
         incoming = [c for c in df.columns if c not in HIDDEN_COLS]
         missing = set(visible) - set(incoming)
@@ -530,7 +514,7 @@ class FeatureStore:
             )
         # from version metadata (observed at the last publish) — no
         # full-history max() scan
-        _, parent, _, max_id = self._pin_meta(name)
+        _, parent, parent_rows, max_id = self._pin_meta(name)
         prepared = prepared.withColumn(
             ROW_ID_COL, F.col(ROW_ID_COL) + F.lit(int(max_id) + 1)
         )
@@ -547,20 +531,16 @@ class FeatureStore:
                 F.col(f.name).cast(f.dataType).alias(f.name, metadata=f.metadata)
                 for f in merged.schema
             ])
-            extends = (parent,)
-        # same one-job contract as register: the write evaluates the
-        # batch once, with count + new max row id observed on the way
-        merged, row_count, new_max = self._observed_stats(merged)
-        self._backend.write_version(
-            name, parent + 1, merged, row_count, description,
-            max_row_id=new_max, extends=extends,
+            extends, parent_rows = (parent,), 0
+        # a widening append flags the online view: the snapshot's schema
+        # no longer matches history, so the next incremental materialize
+        # rebuilds in full
+        return self._publish_version(
+            name, merged, description,
+            empty=f"DataFrame is empty (append('{name}'))",
+            parent=parent, extends=extends, base_rows=parent_rows,
+            kinds=("online view",) if widened else (),
         )
-        self._prune_history(name)
-        if widened:
-            # the online snapshot's schema no longer matches history:
-            # the next incremental materialize rebuilds in full
-            self._invalidate_on_rewrite(name, ("online view",))
-        return self.get_table_info(name)
 
     def upsert(self, name: str, patch: DataFrame, description: str = "") -> FeatureTableInfo:
         """Row-level correction: new version = current rows with patch rows
@@ -572,8 +552,8 @@ class FeatureStore:
 
         Duplicate keys WITHIN the patch are rejected (which row should
         win would be arbitrary) — same guardrail philosophy as F13.
-        Plan: one union + one per-key argmax over (source priority);
-        the old version's files are re-referenced, not rewritten.
+        Plan: one aggregate over the patch keys checks it (empty,
+        duplicates); the version is one anti-join + union, written whole.
         """
         if not self._backend.exists(name):
             self._validate_dataframe(patch, context=f"upsert('{name}')")
@@ -582,12 +562,18 @@ class FeatureStore:
         key_cols = self._entity_key_cols(current)
         if key_cols:
             patch = self._compose_entity_key(
-                patch, key_cols, context=f"upsert('{name}')"
-            ).withColumn(
-                ENTITY_COL,
-                F.col(ENTITY_COL).cast(current.schema[ENTITY_COL].dataType),
+                patch, key_cols, context=f"upsert('{name}')",
+                key_type=current.schema[ENTITY_COL].dataType,
             )
-        self._validate_dataframe(patch, context=f"upsert('{name}')")
+        self._validate_dataframe(patch, f"upsert('{name}')", check_empty=False)
+        key = [ENTITY_COL, TIMESTAMP_COL]
+        # one aggregate answers both pre-write checks: the busiest key
+        # first — none means an empty patch, a count above 1 a duplicate
+        top = patch.groupBy(*key).count().orderBy(F.desc("count")).limit(1).collect()
+        if not top:
+            raise FeatureValidationError(
+                f"DataFrame is empty (upsert('{name}'))"
+            )
         visible = [c for c in current.columns if c not in HIDDEN_COLS]
         incoming = [c for c in patch.columns if c not in HIDDEN_COLS]
         if set(visible) != set(incoming):
@@ -595,35 +581,21 @@ class FeatureStore:
                 f"upsert('{name}'): column mismatch — table has {sorted(visible)}, "
                 f"patch has {sorted(incoming)}. Re-register for schema changes."
             )
-        key = [ENTITY_COL, TIMESTAMP_COL]
-        dup = (
-            patch.groupBy(*key).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup:
+        if top[0]["count"] > 1:
             raise FeatureValidationError(
                 f"upsert('{name}'): patch contains duplicate "
                 f"(entity_id, timestamp) keys — resolve before upserting."
             )
         # anti-join keeps untouched rows verbatim (incl. legal duplicate
         # keys in the existing data); patched keys get exactly the patch
-        # rows. One shuffle on the key, no argmax needed.
+        # rows. One shuffle on the key, no argmax needed. A
+        # row-count-preserving upsert would evade the incremental fold's
+        # row accounting — the publish invalidates at the rewrite.
         untouched = current.select(*visible).join(
             patch.select(*key), key, "left_anti"
         )
         flat = untouched.unionByName(patch.select(*visible))
-        prepared = self._prepare_dataframe(flat.select(*visible))
-        # one-job publish: count + max row id observed on the write
-        prepared, row_count, new_max = self._observed_stats(prepared)
-        new_version = self._backend.meta(name).version + 1
-        self._backend.write_version(
-            name, new_version, prepared, row_count, description,
-            max_row_id=new_max,
-        )
-        self._prune_history(name)
-        # a row-count-preserving upsert would evade the incremental
-        # fold's row accounting — invalidate at the rewrite
-        self._invalidate_on_rewrite(name)
-        return self.get_table_info(name)
+        return self._publish_version(name, flat.select(*visible), description)
 
     def expire_features(
         self, name: str, older_than, description: str = ""
@@ -644,24 +616,12 @@ class FeatureStore:
         current = self._current(name)
         visible = [c for c in current.columns if c not in HIDDEN_COLS]
         kept = current.filter(F.col(TIMESTAMP_COL) >= F.lit(cutoff)).select(*visible)
-        prepared = self._prepare_dataframe(kept)
-        # one-job publish with rollback-on-empty (the register pattern):
         # an all-rows-expired cutoff must not publish an empty version
-        prepared, row_count, new_max = self._observed_stats(prepared)
-        new_version = self._backend.meta(name).version + 1
-        self._backend.write_version(
-            name, new_version, prepared, row_count, description,
-            max_row_id=new_max,
+        return self._publish_version(
+            name, kept, description,
+            empty=f"expire_features('{name}'): cutoff {cutoff} would drop "
+            f"every row — refusing to write an empty version.",
         )
-        if row_count() == 0:
-            self._backend.rollback_version(name, new_version)
-            raise FeatureValidationError(
-                f"expire_features('{name}'): cutoff {cutoff} would drop every "
-                f"row — refusing to write an empty version."
-            )
-        self._prune_history(name)
-        self._invalidate_on_rewrite(name)
-        return self.get_table_info(name)
 
     def compact_version(
         self, name: str, version: int | None = None, target_files: int = 1
@@ -817,7 +777,16 @@ class FeatureStore:
                 f"canonical_id columns, got {sorted(mcols)}."
             )
         m = mapping.select("alias_id", "canonical_id")
-        if m.limit(1).count() == 0:
+        # the empty, NULL and duplicate-alias guards read one aggregate
+        # per alias, worst first: a group holding a NULL row, else the
+        # largest — none means an empty mapping
+        worst = m.groupBy("alias_id").agg(
+            F.count_if(
+                F.col("alias_id").isNull() | F.col("canonical_id").isNull()
+            ).alias("nulls"),
+            F.count(F.lit(1)).alias("n"),
+        ).orderBy(F.desc("nulls"), F.desc("n")).limit(1).collect()
+        if not worst:
             raise FeatureValidationError(
                 f"merge_entities('{name}'): empty mapping."
             )
@@ -825,20 +794,12 @@ class FeatureStore:
         # and a NULL canonical coalesces back to the original id, so a
         # malformed row would be silently ignored — reject like the other
         # guardrails instead (bounded on the mapping dim).
-        if (
-            m.filter(
-                F.col("alias_id").isNull() | F.col("canonical_id").isNull()
-            )
-            .limit(1)
-            .count()
-        ):
+        if worst[0]["nulls"]:
             raise FeatureValidationError(
                 f"merge_entities('{name}'): mapping contains NULL "
                 f"alias_id/canonical_id rows — drop or fix them first."
             )
-        if (
-            m.groupBy("alias_id").count().filter(F.col("count") > 1).limit(1).count()
-        ):
+        if worst[0]["n"] > 1:
             raise FeatureValidationError(
                 f"merge_entities('{name}'): an alias maps to multiple "
                 f"canonical ids — resolve the mapping first."
@@ -902,20 +863,13 @@ class FeatureStore:
             .drop("__canonical__")
             .select(*cols)
         )
-        prepared = self._prepare_dataframe(merged)
-        # one-job publish: count + max row id observed on the write
-        prepared, row_count, new_max = self._observed_stats(prepared)
-        new_version = self._backend.meta(name).version + 1
-        self._backend.write_version(
-            name, new_version, prepared, row_count,
-            description or "merge_entities", max_row_id=new_max,
-        )
-        self._prune_history(name)
         # merge preserves row count AND row ids — exactly the rewrite
-        # row accounting cannot see; invalidate so the next incremental
-        # materialize rebuilds instead of serving pre-merge identities
-        self._invalidate_on_rewrite(name)
-        return self.get_table_info(name)
+        # row accounting cannot see; the publish invalidates so the next
+        # incremental materialize rebuilds instead of serving pre-merge
+        # identities
+        return self._publish_version(
+            name, merged, description or "merge_entities"
+        )
 
     # ------------------------------------------------------------------ #
     # online serving view
@@ -3862,6 +3816,48 @@ class FeatureStore:
 
         return observed, lambda: int(obs.get["rows"]), _max_id
 
+    def _publish_version(
+        self,
+        name: str,
+        df: DataFrame,
+        description: str,
+        empty: str | None = None,
+        parent: int | None = None,
+        extends: Sequence[int] = (),
+        base_rows: int = 0,
+        kinds: Iterable[str] | None = None,
+    ) -> FeatureTableInfo:
+        """The publish tail of every history writer: write ``df``,
+        prepared, as the version after ``parent`` (default: the current
+        one) listing ``extends``' fragments first, prune retention, and
+        flag the derived state of ``kinds`` (default: all — a rewrite)
+        rewritten.
+
+        ONE job: the row count and row-id bound ride the write as
+        observed metrics instead of a count() pass that re-evaluates
+        the input's plan, and the empty refusal reads the SAME count
+        instead of a pre-write isEmpty job. A result of ``base_rows``
+        rows (the parent's, on an append's union path) added nothing:
+        the version is rolled back (unpublished) and ``empty`` raised —
+        error-path-only extra work. A writer whose result cannot be
+        empty (upsert, merge) passes no ``empty``."""
+        df, row_count, max_id = self._observed_stats(self._prepare_dataframe(df))
+        if parent is None:
+            parent = (
+                self._backend.meta(name).version
+                if self._backend.exists(name) else 0
+            )
+        self._backend.write_version(
+            name, parent + 1, df, row_count, description,
+            max_row_id=max_id, extends=extends,
+        )
+        if empty is not None and row_count() == base_rows:
+            self._backend.rollback_version(name, parent + 1)
+            raise FeatureValidationError(empty)
+        self._prune_history(name)
+        self._invalidate_on_rewrite(name, kinds)
+        return self.get_table_info(name)
+
     def _prune_history(self, name: str) -> None:
         # versions pinned by a live snapshot manifest are retention-exempt:
         # pruning them would silently break the manifest's reproducibility
@@ -4082,10 +4078,8 @@ class FeatureStore:
             )
         if key_cols:
             entity_timestamps = self._compose_entity_key(
-                entity_timestamps, key_cols, context="get_training_set(spine)"
-            ).withColumn(
-                ENTITY_COL,
-                F.col(ENTITY_COL).cast(feats.schema[ENTITY_COL].dataType),
+                entity_timestamps, key_cols, context="get_training_set(spine)",
+                key_type=feats.schema[ENTITY_COL].dataType,
             )
         self._validate_dataframe(entity_timestamps, context="get_training_set(spine)")
         if tolerance_seconds is None:
@@ -4199,11 +4193,7 @@ class FeatureStore:
                 entity_timestamps,
                 key_cols,
                 context="get_multi_view_training_set(spine)",
-            ).withColumn(
-                ENTITY_COL,
-                F.col(ENTITY_COL).cast(
-                    resolved[0].schema[ENTITY_COL].dataType
-                ),
+                key_type=resolved[0].schema[ENTITY_COL].dataType,
             )
         spine = entity_timestamps.select(ENTITY_COL, TIMESTAMP_COL).distinct()
         self._validate_dataframe(spine, context="get_multi_view_training_set(spine)")
@@ -5815,10 +5805,12 @@ class FeatureStore:
 
     @staticmethod
     def _compose_entity_key(
-        df: Any, entity_cols: Sequence[str], context: str
+        df: Any, entity_cols: Sequence[str], context: str, key_type=None
     ) -> DataFrame:
         """Natural (user_id, merchant_id, ...) columns -> one struct
-        ``entity_id`` key column, validating the key spec."""
+        ``entity_id`` key column, validating the key spec. With
+        ``key_type`` (a stored table's key type) the key is cast to it,
+        so joins and unions against the table compare equal types."""
         if not isinstance(df, DataFrame):
             raise FeatureValidationError(
                 f"Expected a Spark DataFrame, got {type(df).__name__} ({context})"
@@ -5850,9 +5842,10 @@ class FeatureStore:
                 "the existing one."
             )
         rest = [c for c in df.columns if c not in cols]
-        return df.select(
-            F.struct(*[F.col(c) for c in cols]).alias(ENTITY_COL), *rest
-        )
+        key = F.struct(*[F.col(c) for c in cols])
+        if key_type is not None:
+            key = key.cast(key_type)
+        return df.select(key.alias(ENTITY_COL), *rest)
 
     @staticmethod
     def _expand_entity_key(
@@ -5939,9 +5932,9 @@ class FeatureStore:
             raise FeatureValidationError(
                 f"DataFrame is missing required columns: {sorted(missing)} ({context})"
             )
-        # register skips the isEmpty job: its emptiness refusal rides the
-        # write's observed row count (rollback-on-empty). The other call
-        # sites (append deltas, spines) keep the cheap limit-1 pre-check.
+        # history writers refuse an empty input from the write's observed
+        # row count instead (_publish_version); spines, and appends and
+        # upserts that create their table, keep this limit-1 pre-check.
         if check_empty and df.isEmpty():
             raise FeatureValidationError(f"DataFrame is empty ({context})")
 

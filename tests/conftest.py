@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 import pytest
 
@@ -11,6 +12,19 @@ from ml_feature_store_spark.session import get_spark
 def spark():
     s = get_spark("mlfs-tests", master="local[4]")
     yield s
+
+
+def jobs_run_by(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group of its own.
+    Import it with ``from conftest import jobs_run_by``."""
+    sc = spark.sparkContext
+    group = f"jobs_run_by_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count gate")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(group + "_done", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def ts(s: str) -> dt.datetime:

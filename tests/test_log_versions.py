@@ -16,8 +16,8 @@ contract pinned here, on a plain and on a date-partitioned Parquet store:
 * legacy ``_meta.json`` without fragments reads and takes an append;
 * the chain stays bounded over many small appends;
 * planning ``get`` / ``get_online`` runs no Spark job;
-* a materialize, a push and a rollup refresh each run a fixed number of
-  jobs.
+* a materialize, a push, an append and a rollup refresh each run a
+  fixed number of jobs.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import jobs_run_by
 from ml_feature_store_spark import FeatureStore
 from ml_feature_store_spark.operators.pit import ROW_ID_COL
 from ml_feature_store_spark.sources.testdata import DEFAULT_SF_DIR
@@ -308,30 +309,23 @@ def test_chain_stays_bounded(spark, tmp_path, open_cost, layout):
     assert fs._current("t").count() == 4 + 50 * 2
 
 
-def _jobs_run_by(spark, group, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "log-versions job gate")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(group + "_done", "")
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_derived_state_job_counts(spark, tmp_path):
     """Spark jobs per lifecycle call on a 6-row plain table. A fold
     reads only the fragments above its watermark, and the delta's row
     count rides the state write: a rollup refresh runs no separate count
-    job."""
+    job. An append is its write alone: the empty refusal reads the
+    write's observed row count, so a push is that write plus the fold."""
     fs = _store(spark, tmp_path, False)
     fs.register("t", _batch(spark, 0, 6))
-    assert _jobs_run_by(spark, "lv_mat", lambda: fs.materialize_online("t")) == 2
-    assert _jobs_run_by(
-        spark, "lv_push", lambda: fs.push("t", _batch(spark, 6, 8, day=2))
-    ) == 4
+    assert jobs_run_by(spark, lambda: fs.materialize_online("t")) == 2
+    assert jobs_run_by(
+        spark, lambda: fs.push("t", _batch(spark, 6, 8, day=2))
+    ) == 3
     fs.create_rollup("t", "r", ["entity_id"], ["x"])
-    fs.append("t", _batch(spark, 8, 10, day=3))
-    assert _jobs_run_by(spark, "lv_refresh", lambda: fs.refresh_rollup("r")) == 3
+    assert jobs_run_by(
+        spark, lambda: fs.append("t", _batch(spark, 8, 10, day=3))
+    ) == 1
+    assert jobs_run_by(spark, lambda: fs.refresh_rollup("r")) == 3
     got = {r.entity_id: (r.n_rows, r.sum_x) for r in fs.get_rollup("r").collect()}
     assert got == {"u0": (3, 12.0), "u1": (3, 15.0), "u2": (2, 8.0),
                    "u3": (2, 10.0)}
@@ -348,7 +342,7 @@ def test_planning_reads_runs_no_job(spark, tmp_path, open_cost, layout):
         ("lv_get", lambda: fs.get("t", ["u1"], dt.datetime(2024, 1, 9))),
         ("lv_get_online", lambda: fs.get_online("t", ["u1"])),
     ):
-        assert _jobs_run_by(spark, group, fn) == 0, group
+        assert jobs_run_by(spark, fn) == 0, group
     # the pre-push check reads no fragment once the snapshot is current
     assert fs._backend.read_delta(
         "t", 2, fs._online_meta["t"]["watermark"]

@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import jobs_run_by
 from ml_feature_store_spark import (
     NO_TTL,
     FeatureStore,
@@ -340,31 +341,20 @@ class TestOneJobRegister:
         # build the input before the gate so createDataFrame's own work
         # cannot be attributed to register
         feature_df.count()
-        sc = spark.sparkContext
         fs = FeatureStore(spark)
-        sc.setJobGroup("reg_gate_mem", "register one-job gate")
-        try:
-            info = fs.register("one_job", feature_df)
-        finally:
-            sc.setJobGroup("reg_gate_done", "")
-        jobs = sc.statusTracker().getJobIdsForGroup("reg_gate_mem")
-        assert len(jobs) == 1, (
-            f"register ran {len(jobs)} jobs; the row count must ride the "
+        jobs = jobs_run_by(spark, lambda: fs.register("one_job", feature_df))
+        assert jobs == 1, (
+            f"register ran {jobs} jobs; the row count must ride the "
             "write action as an observed metric, not a separate count()"
         )
+        info = fs.get_table_info("one_job")
         assert info.row_count == 5
 
     def test_register_parquet_backend_one_job(self, spark, feature_df, tmp_path):
         feature_df.count()
-        sc = spark.sparkContext
         fs = FeatureStore(spark, storage_path=str(tmp_path))
-        sc.setJobGroup("reg_gate_pq", "register one-job gate")
-        try:
-            info = fs.register("one_job", feature_df)
-        finally:
-            sc.setJobGroup("reg_gate_done", "")
-        jobs = sc.statusTracker().getJobIdsForGroup("reg_gate_pq")
-        assert len(jobs) == 1
+        assert jobs_run_by(spark, lambda: fs.register("one_job", feature_df)) == 1
+        info = fs.get_table_info("one_job")
         assert info.row_count == 5
 
     def test_empty_register_rolls_back_unpublished(

@@ -23,6 +23,7 @@ import pytest
 from pyspark.ml.linalg import Vectors
 from pyspark.sql import functions as F
 
+from conftest import jobs_run_by
 from ml_feature_store_spark import FeatureStore
 from ml_feature_store_spark.sources.registry import version_schema
 
@@ -55,17 +56,6 @@ def _assert_faithful(spark, fs, names=None) -> set[str]:
             want = spark.read.parquet(str(b._version_path(name, v))).schema
             assert got == want, (name, v, got.simpleString(), want.simpleString())
     return set(names)
-
-
-def _jobs_run_by(spark, group, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted through its job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "version-schema job gate")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(group + "_done", "")
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module", params=[False, True], ids=["plain", "date_partition"])
@@ -184,7 +174,7 @@ class TestZeroJobReads:
             ("vs_get", lambda: fs.get("t", ["u1"], ts("2024-01-03"))),
             ("vs_table_info", lambda: fs.get_table_info("t")),
         ):
-            jobs = _jobs_run_by(spark, group, fn)
+            jobs = jobs_run_by(spark, fn)
             assert jobs == 0, f"{group} ran {jobs} Spark jobs while planning"
         assert [r.a for r in fs.get("t", ["u1"], ts("2024-01-03")).collect()] == [1.0]
 
