@@ -25,6 +25,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity, dot, l2_norm
+from .clustering import (
+    _adc_sum,
+    _code_exprs,
+    _dist_table_exprs,
+    _dist_tables,
+    _lloyd_seeds,
+    _lloyd_step,
+    _nearest_code_expr,
+    _nearest_codes,
+    _nearest_codes_expr,
+    _quantize,
+    _residual_expr,
+    _subvec_expr,
+    kmeans_quantized,
+    quantize_vec,
+)
 
 
 def knn_brute_force(
@@ -273,8 +289,6 @@ def pq_fit_codebooks(
     machinery (:func:`_pq_fit_books_int` — one seed job + one
     explode/partial-agg job per round for ALL subspaces). Codebooks are
     bit-identical to the m-loop's (pinned in pytest)."""
-    from .clustering import quantize_vec
-
     # NOTE: no unpersist — Dataset.unpersist on a localCheckpointed frame
     # is a no-op (it only clears cacheManager entries; checkpoint blocks
     # free on RDD GC, which the end of this scope triggers). r12 ADVICE.
@@ -316,55 +330,33 @@ def _pq_fit_books_int(
     updates), so the returned codebooks are bit-identical to m
     sequential fits — the DuckDB oracles that replay the fit
     relationally keep matching (pinned in pytest)."""
-    from .clustering import _int_dist_expr
-
     if k_codes < 1:
         # Preserve the contract of the replaced kmeans_quantized /
         # kmeans_int fits (r12 ADVICE): k_codes=0 would otherwise yield
         # empty codebooks and a malformed array_min(array()) expression
         # that fails with an obscure AnalysisException at iterations>=1.
         raise ValueError(f"k_codes must be >= 1, got {k_codes}")
-    seed_rows = res.orderBy(id_col).limit(k_codes).select(rv_col).collect()
+    seeds = _lloyd_seeds(res, k_codes, rv_col, id_col)
     books: dict[int, dict[int, list[int]]] = {
-        s: {
-            i: [int(x) for x in r[rv_col][s * sub_dim : (s + 1) * sub_dim]]
-            for i, r in enumerate(seed_rows)
-        }
+        s: {i: v[s * sub_dim : (s + 1) * sub_dim] for i, v in enumerate(seeds)}
         for s in range(m)
     }
     for _ in range(iterations):
-        structs = []
-        for s in range(m):
-            sub_expr = f"slice({rv_col}, {s * sub_dim + 1}, {sub_dim})"
-            pairs = ", ".join(
-                f"struct({_int_dist_expr(sub_expr, cv)} AS d, {cid} AS cid)"
-                for cid, cv in sorted(books[s].items())
+        codes = _code_exprs(rv_col, books, m, sub_dim)
+        structs = [
+            F.struct(
+                F.lit(s).alias("s"),
+                F.expr(_subvec_expr(rv_col, s, sub_dim)).alias("sub"),
+                F.expr(codes[s]).alias("cl"),
             )
-            structs.append(
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.expr(sub_expr).alias("sub"),
-                    F.expr(f"array_min(array({pairs})).cid").alias("cl"),
-                )
-            )
+            for s in range(m)
+        ]
         ex = res.select(F.explode(F.array(*structs)).alias("z")).select(
             "z.s", "z.sub", "z.cl"
         )
-        aggs = [F.count("*").alias("n")] + [
-            F.sum(F.element_at("sub", i + 1)).alias(f"s{i}")
-            for i in range(sub_dim)
-        ]
-        rows = ex.groupBy("s", "cl").agg(*aggs).collect()
-        new: dict[int, dict[int, list[int]]] = {}
-        for r in rows:
-            new.setdefault(r["s"], {})[r["cl"]] = [
-                int(math.floor(r[f"s{i}"] / r["n"])) for i in range(sub_dim)
-            ]
+        new = _lloyd_step(ex, ["s", "cl"], "sub", sub_dim)
         books = {
-            s: {
-                cid: new.get(s, {}).get(cid, cv)
-                for cid, cv in books[s].items()
-            }
+            s: {cid: new.get((s, cid), cv) for cid, cv in books[s].items()}
             for s in range(m)
         }
     return books
@@ -383,18 +375,9 @@ def pq_encode(
     codebooks — the ADD step: map-only (codebooks ride as literals), so
     appended vectors fold into a persisted index at O(delta) with no
     refit. Output: (id_col, codes array<int>)."""
-    from .clustering import _int_dist_expr, quantize_vec
-
     enc = df.select(id_col, quantize_vec(vec_col, grid).alias("__q__"))
-    code_cols = []
-    for s in range(m):
-        sub_expr = f"slice(__q__, {s * sub_dim + 1}, {sub_dim})"
-        pairs = ", ".join(
-            f"struct({_int_dist_expr(sub_expr, cv)} AS d, {cid} AS cid)"
-            for cid, cv in sorted(books[s].items())
-        )
-        code_cols.append(F.expr(f"array_min(array({pairs})).cid"))
-    return enc.select(id_col, F.array(*code_cols).alias("codes"))
+    codes = [F.expr(c) for c in _code_exprs("__q__", books, m, sub_dim)]
+    return enc.select(id_col, F.array(*codes).alias("codes"))
 
 
 def pq_adc_rank(
@@ -413,21 +396,12 @@ def pq_adc_rank(
     (m * k_codes longs), then the scan is m array lookups + a sum per
     row and TakeOrderedAndProject. No distance recomputation, no
     shuffle."""
-    qq = [int(math.floor(float(x) * grid + 0.5)) for x in query_vec]
-    adist = None
-    for s in range(m):
-        qsub = qq[s * sub_dim : (s + 1) * sub_dim]
-        dtab = {
-            cid: sum((a - b) * (a - b) for a, b in zip(qsub, cv))
-            for cid, cv in books[s].items()
-        }
-        lookup = F.element_at(
-            F.expr("array(" + ",".join(f"{dtab[c]}L" for c in sorted(dtab)) + ")"),
-            F.element_at("codes", s + 1) + F.lit(1),
-        )
-        adist = lookup if adist is None else adist + lookup
+    tables = _dist_tables(books, _quantize(query_vec, grid), m, sub_dim)
+    adist = _adc_sum(
+        [F.expr("array(" + ",".join(f"{d}L" for d in t) + ")") for t in tables]
+    )
     return (
-        codes_df.select(id_col, adist.alias("adist"))
+        codes_df.select(id_col, adist)
         .orderBy("adist", id_col)
         .limit(k)
     )
@@ -444,8 +418,6 @@ def ivf_fit_int(
     """Fit IVF coarse centroids on the INTEGER grid (kmeans_quantized) —
     deterministic across engines, so a DuckDB oracle can replay the
     stored model exactly. Returns {cell -> centroid ints}."""
-    from .clustering import kmeans_quantized
-
     _, centroids = kmeans_quantized(
         df, k=n_cells, max_iter=iterations, id_col=id_col,
         vec_col=vec_col, grid=grid,
@@ -464,14 +436,8 @@ def ivf_encode_int(
     the lowest cell id) FROZEN centroid — map-only, the persisted-IVF
     ADD step. Keeps the raw vector for exact re-ranking at query time.
     Output: (id_col, vec_col, cell)."""
-    from .clustering import _int_dist_expr, quantize_vec
-
     q = df.select(id_col, vec_col, quantize_vec(vec_col, grid).alias("__q__"))
-    pairs = ", ".join(
-        f"struct({_int_dist_expr('__q__', cv)} AS d, {cid} AS cid)"
-        for cid, cv in sorted(centroids.items())
-    )
-    cell = F.expr(f"array_min(array({pairs})).cid")
+    cell = F.expr(f"{_nearest_code_expr('__q__', centroids)}.cid")
     return q.select(id_col, vec_col, cell.alias("cell"))
 
 
@@ -484,12 +450,7 @@ def ivf_probe_cells_int(
     """The nprobe cells nearest the query by the SAME integer distance
     the assignment used (ties to the lowest cell id) — driver-side over
     the k x dim model, deterministic."""
-    qq = [int(math.floor(float(x) * grid + 0.5)) for x in query_vec]
-    scored = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qq, cv)), cid)
-        for cid, cv in centroids.items()
-    )
-    return [cid for _, cid in scored[:nprobe]]
+    return _nearest_codes(centroids, _quantize(query_vec, grid), nprobe)
 
 
 # --------------------------------------------------------------------- #
@@ -633,24 +594,6 @@ def sq_rank_batch(
 # centroids, integer residuals), so a relational oracle replays the
 # stored model exactly.
 # --------------------------------------------------------------------- #
-def _centroid_array_literal(centroids: dict[int, list[int]]) -> str:
-    """SQL literal ``array(array(..L), ...)`` over cells 0..k-1 so
-    ``element_at(<lit>, cell + 1)`` resolves the assigned centroid
-    map-side (no join). Requires contiguous cell ids — kmeans init
-    guarantees them (enumerate; empty cells keep the prior centroid)."""
-    cids = sorted(centroids)
-    if cids != list(range(len(cids))):
-        raise ValueError(f"non-contiguous cell ids: {cids}")
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{x}L" for x in centroids[c]) + ")"
-            for c in cids
-        )
-        + ")"
-    )
-
-
 def ivfpq_residuals(
     df: DataFrame,
     centroids: dict[int, list[int]],
@@ -662,16 +605,11 @@ def ivfpq_residuals(
     INTEGER residual (quantized vector minus assigned centroid) — one
     map-only projection; the model rides as literals. Output:
     (id_col, cell, __rv__ array<bigint>)."""
-    from .clustering import _int_dist_expr, quantize_vec
-
     q = df.select(id_col, quantize_vec(vec_col, grid).alias("__q__"))
-    pairs = ", ".join(
-        f"struct({_int_dist_expr('__q__', cv)} AS d, {cid} AS cid)"
-        for cid, cv in sorted(centroids.items())
+    q = q.withColumn(
+        "cell", F.expr(f"{_nearest_code_expr('__q__', centroids)}.cid")
     )
-    q = q.withColumn("cell", F.expr(f"array_min(array({pairs})).cid"))
-    cvs = _centroid_array_literal(centroids)
-    rv = F.expr(f"zip_with(__q__, element_at({cvs}, cell + 1), (a, b) -> a - b)")
+    rv = F.expr(_residual_expr("__q__", centroids))
     return q.select(id_col, "cell", rv.alias("__rv__"))
 
 
@@ -729,19 +667,10 @@ def ivfpq_encode(
     """ADD step against the FROZEN model: assign cell, encode the
     residual as m nearest-codeword ids — map-only, so appends fold into
     a persisted index at O(delta). Output: (id_col, cell, codes)."""
-    from .clustering import _int_dist_expr
-
     res = ivfpq_residuals(df, centroids, id_col=id_col,
                           vec_col=vec_col, grid=grid)
-    code_cols = []
-    for s in range(m):
-        sub_expr = f"slice(__rv__, {s * sub_dim + 1}, {sub_dim})"
-        pairs = ", ".join(
-            f"struct({_int_dist_expr(sub_expr, cv)} AS d, {cid} AS cid)"
-            for cid, cv in sorted(books[s].items())
-        )
-        code_cols.append(F.expr(f"array_min(array({pairs})).cid"))
-    return res.select(id_col, "cell", F.array(*code_cols).alias("codes"))
+    codes = [F.expr(c) for c in _code_exprs("__rv__", books, m, sub_dim)]
+    return res.select(id_col, "cell", F.array(*codes).alias("codes"))
 
 
 def _pq_dtab_cols(
@@ -756,29 +685,10 @@ def _pq_dtab_cols(
     map-side from ``src_vec`` (an integer query vector or residual).
     m x k_codes aggregate(zip_with(...)) expressions per row — the
     codebooks ride as literals, nothing shuffles."""
-    from .clustering import _int_dist_expr
-
-    cols = []
-    for s in range(m):
-        sub_expr = f"slice({src_vec}, {s * sub_dim + 1}, {sub_dim})"
-        entries = ", ".join(
-            _int_dist_expr(sub_expr, cv)
-            for _, cv in sorted(books[s].items())
-        )
-        cols.append(F.expr(f"array({entries})").alias(f"__dt{s}__"))
-    return cols
-
-
-def _adc_sum(m: int):
-    """ADC distance: m array lookups (code -> distance-table entry) + a
-    sum, per (query, candidate) pair."""
-    adist = None
-    for s in range(m):
-        lk = F.element_at(
-            f"__dt{s}__", F.element_at("codes", s + 1) + F.lit(1)
-        )
-        adist = lk if adist is None else adist + lk
-    return adist.alias("adist")
+    return [
+        F.expr(t).alias(f"__dt{s}__")
+        for s, t in enumerate(_dist_table_exprs(src_vec, books, m, sub_dim))
+    ]
 
 
 def pq_adc_batch(
@@ -807,17 +717,15 @@ def pq_adc_batch(
     from .pit import top_k_per_group
 
     qx = queries.select(
-        query_id_col,
-        F.expr(
-            f"transform({query_vec_col}, "
-            f"x -> CAST(floor(double(x) * {grid} + 0.5) AS BIGINT))"
-        ).alias("__qq__"),
+        query_id_col, quantize_vec(query_vec_col, grid).alias("__qq__")
     )
     qx = qx.select(query_id_col, *_pq_dtab_cols(books, m, sub_dim, "__qq__"))
     joined = codes_df.crossJoin(F.broadcast(qx))
     if exclude_self:
         joined = joined.filter(F.col(id_col) != F.col(query_id_col))
-    scored = joined.select(query_id_col, id_col, _adc_sum(m))
+    scored = joined.select(
+        query_id_col, id_col, _adc_sum([f"__dt{s}__" for s in range(m)])
+    )
     return top_k_per_group(
         scored, [query_id_col],
         [F.col("adist").asc(), F.col(id_col).asc()], k,
@@ -850,38 +758,22 @@ def ivfpq_adc_batch(
     from .pit import top_k_per_group
 
     qx = queries.select(
-        query_id_col,
-        F.expr(
-            f"transform({query_vec_col}, "
-            f"x -> CAST(floor(double(x) * {grid} + 0.5) AS BIGINT))"
-        ).alias("__qq__"),
+        query_id_col, quantize_vec(query_vec_col, grid).alias("__qq__")
     )
-    from .clustering import _int_dist_expr
-
-    pairs = ", ".join(
-        f"struct({_int_dist_expr('__qq__', cv)} AS d, {cid} AS cid)"
-        for cid, cv in sorted(centroids.items())
-    )
-    probes = F.expr(
-        f"transform(slice(array_sort(array({pairs})), 1, {nprobe}), "
-        f"s -> s.cid)"
-    )
+    probes = F.expr(_nearest_codes_expr("__qq__", centroids, nprobe))
     qx = qx.select(
         query_id_col, "__qq__", F.explode(probes).alias("cell")
     )
-    cvs = _centroid_array_literal(centroids)
-    qx = qx.withColumn(
-        "__rr__",
-        F.expr(f"zip_with(__qq__, element_at({cvs}, cell + 1), "
-               f"(a, b) -> a - b)"),
-    )
+    qx = qx.withColumn("__rr__", F.expr(_residual_expr("__qq__", centroids)))
     qx = qx.select(
         query_id_col, "cell", *_pq_dtab_cols(books, m, sub_dim, "__rr__")
     )
     joined = codes_df.join(F.broadcast(qx), "cell")
     if exclude_self:
         joined = joined.filter(F.col(id_col) != F.col(query_id_col))
-    scored = joined.select(query_id_col, id_col, _adc_sum(m))
+    scored = joined.select(
+        query_id_col, id_col, _adc_sum([f"__dt{s}__" for s in range(m)])
+    )
     return top_k_per_group(
         scored, [query_id_col],
         [F.col("adist").asc(), F.col(id_col).asc()], k,
@@ -906,21 +798,14 @@ def ivfpq_adc_rank(
     subtlety plain PQ doesn't have). The nprobe x m x k_codes tables are
     driver-built longs shipped as a broadcast dim; the scan reads ONLY
     the probed cells and each row costs m array lookups + a sum."""
-    qq = [int(math.floor(float(x) * grid + 0.5)) for x in query_vec]
-    probes = ivf_probe_cells_int(centroids, query_vec, nprobe, grid)
-    rows = []
-    for c in probes:
-        qres = [a - b for a, b in zip(qq, centroids[c])]
-        dts = []
-        for s in range(m):
-            qsub = qres[s * sub_dim : (s + 1) * sub_dim]
-            dts.append(
-                [
-                    sum((a - b) * (a - b) for a, b in zip(qsub, cv))
-                    for _, cv in sorted(books[s].items())
-                ]
-            )
-        rows.append((c, *dts))
+    qq = _quantize(query_vec, grid)
+    probes = _nearest_codes(centroids, qq, nprobe)
+    rows = [
+        (c, *_dist_tables(
+            books, [a - b for a, b in zip(qq, centroids[c])], m, sub_dim
+        ))
+        for c in probes
+    ]
     schema = "cell INT, " + ", ".join(
         f"dt{s} ARRAY<BIGINT>" for s in range(m)
     )
@@ -928,12 +813,8 @@ def ivfpq_adc_rank(
     joined = codes_df.filter(F.col("cell").isin(probes)).join(
         F.broadcast(dt_df), "cell"
     )
-    adist = None
-    for s in range(m):
-        lk = F.element_at(f"dt{s}", F.element_at("codes", s + 1) + F.lit(1))
-        adist = lk if adist is None else adist + lk
     return (
-        joined.select(id_col, adist.alias("adist"))
+        joined.select(id_col, _adc_sum([f"dt{s}" for s in range(m)]))
         .orderBy("adist", id_col)
         .limit(k)
     )

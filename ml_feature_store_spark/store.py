@@ -372,15 +372,7 @@ class FeatureStore:
                 f"value > 0 (use NO_TTL at read time, not register "
                 f"time), got {ttl_seconds}"
             )
-        if name in self._derived and not self._backend.exists(name):
-            # the mirror of create_derived_view's shadow guard: a table
-            # taking a derived view's name would make every selection of
-            # that name ambiguous
-            raise FeatureValidationError(
-                f"register('{name}'): a derived view with this name "
-                f"already exists — table names must not shadow derived "
-                f"views."
-            )
+        self._refuse_shadowing(name)
         if checks and isinstance(df, DataFrame):
             # a check expression that references a column the caller did
             # not send is a spec bug, not a data violation — surface it
@@ -435,6 +427,29 @@ class FeatureStore:
             self._save_registry()
         return info
 
+    def _refuse_shadowing(self, name: str) -> None:
+        """The mirror of create_derived_view's shadow guard, for every
+        call that creates a table: a table taking a derived view's name
+        would make every selection of that name ambiguous."""
+        if name in self._derived and not self._backend.exists(name):
+            raise FeatureValidationError(
+                f"register('{name}'): a derived view with this name "
+                f"already exists — table names must not shadow derived "
+                f"views."
+            )
+
+    def _register_new(
+        self, name: str, df: DataFrame, description: str, context: str
+    ) -> FeatureTableInfo:
+        """``append`` / ``upsert`` into a table that does not exist yet:
+        ``register``'s publish in its one job — the empty refusal reads
+        the write's row count and names ``context``."""
+        self._validate_dataframe(df, context, check_empty=False)
+        self._refuse_shadowing(name)
+        return self._publish_version(
+            name, df, description, empty=f"DataFrame is empty ({context})"
+        )
+
     def get_view_ttl(self, name: str) -> float | None:
         """The view-level TTL default registered for ``name`` (seconds),
         or None when the view has no TTL."""
@@ -482,8 +497,7 @@ class FeatureStore:
         rebuild.
         """
         if not self._backend.exists(name):
-            self._validate_dataframe(df, context=f"append('{name}')")
-            return self.register(name, df, description)
+            return self._register_new(name, df, description, f"append('{name}')")
         current = self._current(name)
         key_cols = self._entity_key_cols(current)
         if key_cols:
@@ -556,8 +570,9 @@ class FeatureStore:
         duplicates); the version is one anti-join + union, written whole.
         """
         if not self._backend.exists(name):
-            self._validate_dataframe(patch, context=f"upsert('{name}')")
-            return self.register(name, patch, description)
+            return self._register_new(
+                name, patch, description, f"upsert('{name}')"
+            )
         current = self._current(name)
         key_cols = self._entity_key_cols(current)
         if key_cols:
@@ -1980,11 +1995,6 @@ class FeatureStore:
     # persisted vector indexes (versioned ANN: build once, serve many)
     # ------------------------------------------------------------------ #
     _VINDEX_METHODS = ("ivf", "pq", "lsh", "ivfpq", "sq")
-    # methods ranking by exact cosine inside the probed cells/buckets
-    # (the others rank by integer quantized distance: refine applies)
-    _VINDEX_EXACT = ("ivf", "lsh")
-    # methods with a probe key (nprobe applies; pq/sq scan exhaustively)
-    _VINDEX_PROBED = ("ivf", "lsh", "ivfpq")
     # internal columns of the encoded state table + knn output columns;
     # composite natural keys must not shadow them (round-11 ADVICE)
     _VINDEX_RESERVED = ("vec_id", "embedding", "cell", "codes", "bucket",
@@ -2071,11 +2081,10 @@ class FeatureStore:
         number of indexed rows."""
         from .operators.similarity import (
             _random_hyperplanes,
-            ivf_encode_int,
             ivf_fit_int,
-            lsh_bucketize_with_planes,
-            pq_encode,
+            ivfpq_fit,
             pq_fit_codebooks,
+            sq_fit_minmax,
         )
 
         self._require_table(table)
@@ -2147,15 +2156,14 @@ class FeatureStore:
                 "nprobe": int(p.get("nprobe", 2)),
                 "grid": grid,
             }
-            centroids = ivf_fit_int(
+            model = ivf_fit_int(
                 src, n_cells=spec_params["n_cells"],
                 iterations=spec_params["iterations"], grid=grid,
             )
-            model = spark.createDataFrame(
-                [(cid, cv) for cid, cv in sorted(centroids.items())],
+            model_df = spark.createDataFrame(
+                [(cid, cv) for cid, cv in sorted(model.items())],
                 "cell INT, cv ARRAY<BIGINT>",
             )
-            data = ivf_encode_int(src, centroids, grid=grid)
         elif method == "pq":
             spec_params = {
                 "m": m,
@@ -2164,23 +2172,20 @@ class FeatureStore:
                 "iterations": int(p.get("iterations", 1)),
                 "grid": grid,
             }
-            books = pq_fit_codebooks(
+            model = pq_fit_codebooks(
                 src, m=m, sub_dim=sub_dim,
                 k_codes=spec_params["k_codes"],
                 iterations=spec_params["iterations"], grid=grid,
             )
-            model = spark.createDataFrame(
+            model_df = spark.createDataFrame(
                 [
                     (s, cid, cv)
-                    for s in sorted(books)
-                    for cid, cv in sorted(books[s].items())
+                    for s in sorted(model)
+                    for cid, cv in sorted(model[s].items())
                 ],
                 "subspace INT, code INT, cv ARRAY<BIGINT>",
             )
-            data = pq_encode(src, books, m=m, sub_dim=sub_dim, grid=grid)
         elif method == "ivfpq":
-            from .operators.similarity import ivfpq_encode, ivfpq_fit
-
             spec_params = {
                 "n_cells": int(p.get("n_cells", 16)),
                 "iterations": int(p.get("iterations", 1)),
@@ -2190,14 +2195,14 @@ class FeatureStore:
                 "k_codes": int(p.get("k_codes", 16)),
                 "grid": grid,
             }
-            centroids, books = ivfpq_fit(
+            model = centroids, books = ivfpq_fit(
                 src, n_cells=spec_params["n_cells"], m=m, sub_dim=sub_dim,
                 k_codes=spec_params["k_codes"],
                 iterations=spec_params["iterations"], grid=grid,
             )
             # one model table for both parts: coarse centroids
             # (part='ivf') + residual codebooks (part='pq')
-            model = spark.createDataFrame(
+            model_df = spark.createDataFrame(
                 [
                     ("ivf", cid, None, None, cv)
                     for cid, cv in sorted(centroids.items())
@@ -2210,37 +2215,40 @@ class FeatureStore:
                 "part STRING, cell INT, subspace INT, code INT, "
                 "cv ARRAY<BIGINT>",
             )
-            data = ivfpq_encode(
-                src, centroids, books, m=m, sub_dim=sub_dim, grid=grid
-            )
         elif method == "sq":
-            from .operators.similarity import sq_encode, sq_fit_minmax
-
             spec_params = {"levels": 255}
-            mins, maxs = sq_fit_minmax(src, dim)
-            model = spark.createDataFrame(
+            model = mins, maxs = sq_fit_minmax(src, dim)
+            model_df = spark.createDataFrame(
                 [(i, mins[i], maxs[i]) for i in range(dim)],
                 "i INT, vmin DOUBLE, vmax DOUBLE",
             )
-            data = sq_encode(src, mins, maxs)
         else:  # lsh
             spec_params = {
                 "bits": int(p.get("bits", 8)),
                 "seed": int(p.get("seed", 42)),
                 "multiprobe": int(p.get("multiprobe", 2)),
             }
-            planes = _random_hyperplanes(
+            model = _random_hyperplanes(
                 dim, spec_params["bits"], spec_params["seed"]
             )
-            model = spark.createDataFrame(
-                [(i, pl) for i, pl in enumerate(planes)],
+            model_df = spark.createDataFrame(
+                [(i, pl) for i, pl in enumerate(model)],
                 "plane_id INT, plane ARRAY<DOUBLE>",
             )
-            data = lsh_bucketize_with_planes(src, planes)
+        spec = {
+            "src": table,
+            "vec_col": vec_col,
+            "method": method,
+            "params": spec_params,
+            "dim": dim,
+        }
+        data = self._vindex_encode_rows(
+            spec, model, raw, f"create_vector_index('{index}')"
+        )
         mname = index + self._VINDEX_MODEL_SUFFIX
         dname = index + self._VINDEX_DATA_SUFFIX
         mver, _ = self._write_state(
-            mname, model, f"vector index model of '{table}'"
+            mname, model_df, f"vector index model of '{table}'"
         )
         dver, row_count = self._write_state(
             dname, data, f"vector index data of '{table}'"
@@ -2248,11 +2256,7 @@ class FeatureStore:
         self._publish_derived(
             "vector index", index,
             {
-                "src": table,
-                "vec_col": vec_col,
-                "method": method,
-                "params": spec_params,
-                "dim": dim,
+                **spec,
                 "key_cols": list(key_cols) if key_cols else None,
                 "watermark": src_watermark,
                 "src_rows": src_rows,
@@ -2284,7 +2288,8 @@ class FeatureStore:
         return self._fold_derived(
             "vector index", index,
             lambda delta: self._vindex_encode_rows(
-                index, spec, delta, f"refresh_vector_index('{index}')"
+                spec, self._vindex_model(index), delta,
+                f"refresh_vector_index('{index}')",
             ),
         )
 
@@ -2309,7 +2314,8 @@ class FeatureStore:
         dver, _ = self._write_state(
             dname,
             self._vindex_encode_rows(
-                index, spec, raw, f"reencode_vector_index('{index}')"
+                spec, self._vindex_model(index), raw,
+                f"reencode_vector_index('{index}')",
             ),
             f"frozen-model re-encode of vector index '{index}'",
         )
@@ -2383,13 +2389,16 @@ class FeatureStore:
         ``refresh_vector_index`` (append) or ``create_vector_index``
         (rewrite). The check is version metadata only — no data scan."""
         from .operators.similarity import (
+            _sq_level,
             ivf_probe_cells_int,
+            ivfpq_adc_rank,
             knn_brute_force,
             lsh_query_bucket,
             pq_adc_rank,
+            sq_rank,
         )
 
-        spec, data, key_cols, adc_k = self._vindex_serving(
+        spec, data, key_cols, adc_k, probe = self._vindex_serving(
             f"knn('{index}')", index, k, filter_expr, nprobe, refine
         )
         qv = [float(x) for x in query_vec]
@@ -2399,42 +2408,27 @@ class FeatureStore:
                 f"has {spec['dim']}."
             )
         pp = spec["params"]
+        model = self._vindex_model(index)
         if spec["method"] == "ivf":
-            probes = ivf_probe_cells_int(
-                self._vindex_ivf_model(index), qv,
-                int(nprobe) if nprobe is not None else pp["nprobe"],
-                pp["grid"],
-            )
+            probes = ivf_probe_cells_int(model, qv, probe, pp["grid"])
             cand = data.filter(F.col("cell").isin(probes))
             out = knn_brute_force(cand, qv, k=k)
         elif spec["method"] == "pq":
             out = pq_adc_rank(
-                data, self._vindex_pq_model(index), qv, m=pp["m"],
+                data, model, qv, m=pp["m"],
                 sub_dim=pp["sub_dim"], k=adc_k, grid=pp["grid"],
             )
         elif spec["method"] == "ivfpq":
-            from .operators.similarity import ivfpq_adc_rank
-
-            centroids, books = self._vindex_ivfpq_model(index)
             out = ivfpq_adc_rank(
-                data, centroids, books, qv, m=pp["m"],
-                sub_dim=pp["sub_dim"],
-                nprobe=int(nprobe) if nprobe is not None else pp["nprobe"],
-                k=adc_k, grid=pp["grid"],
+                data, *model, qv, m=pp["m"], sub_dim=pp["sub_dim"],
+                nprobe=probe, k=adc_k, grid=pp["grid"],
             )
         elif spec["method"] == "sq":
-            from .operators.similarity import _sq_level, sq_rank
-
-            mins, maxs = self._vindex_sq_model(index)
-            qc = [_sq_level(x, a, b) for x, a, b in zip(qv, mins, maxs)]
+            qc = [_sq_level(x, a, b) for x, a, b in zip(qv, *model)]
             out = sq_rank(data, qc, k=adc_k)
         else:
-            planes = self._vindex_lsh_model(index)
-            qb = lsh_query_bucket(planes, qv)
-            mp = int(nprobe) if nprobe is not None else pp["multiprobe"]
-            probes = [qb] + [
-                qb ^ (1 << i) for i in range(min(mp, pp["bits"]))
-            ]
+            qb = lsh_query_bucket(model, qv)
+            probes = [qb] + [qb ^ (1 << i) for i in range(probe)]
             cand = data.filter(F.col("bucket").isin(probes))
             out = knn_brute_force(cand, qv, k=k)
         if refine is not None:
@@ -2462,7 +2456,7 @@ class FeatureStore:
         filter_expr: str | None,
         nprobe: int | None,
         refine: int | None,
-    ) -> tuple[dict, DataFrame, list[str] | None, int]:
+    ) -> tuple[dict, DataFrame, list[str] | None, int, int | None]:
         """The serving prelude ``knn`` and ``knn_batch`` share: the spec
         behind the staleness gate, the nprobe/refine refusals, and the
         encoded rows — composite-key indexes expose their natural key
@@ -2470,16 +2464,26 @@ class FeatureStore:
         and ``filter_expr`` PRE-filters the rows before any distance
         math (the x33 filtered-ANN shape: post-filtering a global top-k
         would under-fill k). Returns (spec, rows, key columns, the
-        shortlist size ``k * refine``)."""
+        shortlist size ``k * refine``, the probe width): ``nprobe`` or
+        the stored one — cells for ivf/ivfpq, single-bit bucket flips
+        (at most ``bits``) for lsh, None for the exhaustive pq/sq."""
         spec = self._serving_spec("vector index", index)
         method = spec["method"]
-        if nprobe is not None and method not in self._VINDEX_PROBED:
-            raise FeatureValidationError(
-                f"{context}: nprobe does not apply to {method} "
-                f"(exhaustive scan; no probe key)."
-            )
+        pp = spec["params"]
+        probe = pp.get("nprobe", pp.get("multiprobe"))
+        if nprobe is not None:
+            if probe is None:
+                raise FeatureValidationError(
+                    f"{context}: nprobe does not apply to {method} "
+                    f"(exhaustive scan; no probe key)."
+                )
+            probe = int(nprobe)
+        if "bits" in pp:
+            probe = min(probe, pp["bits"])
+        data = self._derived_state("vector index", index)
         if refine is not None:
-            if method in self._VINDEX_EXACT:
+            # quantized methods encode codes; ivf/lsh keep the raw vector
+            if "codes" not in data.columns:
                 raise FeatureValidationError(
                     f"{context}: refine applies to quantized methods "
                     f"(pq/ivfpq/sq) — {method} already re-ranks by exact "
@@ -2489,7 +2493,6 @@ class FeatureStore:
                 raise FeatureValidationError(
                     f"{context}: refine must be >= 1, got {refine}."
                 )
-        data = self._derived_state("vector index", index)
         key_cols = spec.get("key_cols")
         if key_cols:
             data = data.select(
@@ -2497,7 +2500,7 @@ class FeatureStore:
             )
         if filter_expr is not None:
             data = data.filter(filter_expr)
-        return spec, data, key_cols, k * int(refine) if refine else k
+        return spec, data, key_cols, k * int(refine) if refine else k, probe
 
     def _vindex_batch_refine(
         self,
@@ -2585,10 +2588,17 @@ class FeatureStore:
         knn()). Same staleness/rewrite refusals as ``knn``; composite-
         key indexes expand vec_id to the natural key columns. Output:
         (query_id_col, vec_id | key columns, sim | adist)."""
+        from .operators.clustering import _nearest_codes_expr, quantize_vec
         from .operators.pit import top_k_per_group
-        from .operators.similarity import cosine_similarity
+        from .operators.similarity import (
+            cosine_similarity,
+            ivfpq_adc_batch,
+            lsh_bucketize_with_planes,
+            pq_adc_batch,
+            sq_rank_batch,
+        )
 
-        spec, data, key_cols, adc_k = self._vindex_serving(
+        spec, data, key_cols, adc_k, probe = self._vindex_serving(
             f"knn_batch('{index}')", index, k, filter_expr, nprobe, refine
         )
         # the encoded columns (and composite-key columns) of the index
@@ -2619,104 +2629,80 @@ class FeatureStore:
             queries, spec["dim"], f"knn_batch('{index}')",
             vec_col=query_vec_col, id_col=query_id_col,
         )
-        if spec["method"] not in self._VINDEX_EXACT:
-            # quantized ranks (integer distances), exact-cosine refined
-            if spec["method"] == "sq":
-                from .operators.similarity import sq_rank_batch
-
-                mins, maxs = self._vindex_sq_model(index)
-                out = sq_rank_batch(
-                    data, queries, mins, maxs, k=adc_k,
-                    query_id_col=query_id_col, query_vec_col=query_vec_col,
-                    exclude_self=exclude_self,
+        model = self._vindex_model(index)
+        method = spec["method"]
+        # quantized ranks (integer distances), exact-cosine refined
+        if method == "sq":
+            out = sq_rank_batch(
+                data, queries, *model, k=adc_k,
+                query_id_col=query_id_col, query_vec_col=query_vec_col,
+                exclude_self=exclude_self,
+            )
+        elif method == "pq":
+            out = pq_adc_batch(
+                data, model, queries,
+                m=pp["m"], sub_dim=pp["sub_dim"], k=adc_k,
+                query_id_col=query_id_col, query_vec_col=query_vec_col,
+                grid=pp["grid"], exclude_self=exclude_self,
+            )
+        elif method == "ivfpq":
+            out = ivfpq_adc_batch(
+                data, *model, queries,
+                m=pp["m"], sub_dim=pp["sub_dim"], nprobe=probe,
+                k=adc_k, query_id_col=query_id_col,
+                query_vec_col=query_vec_col, grid=pp["grid"],
+                exclude_self=exclude_self,
+            )
+        else:
+            # ivf / lsh: exact cosine over the probed cells' / buckets'
+            # raw vectors
+            if method == "ivf":
+                # nprobe nearest cells per query, in the (distance, cell)
+                # order the driver-side probe and the encode argmin use —
+                # one map-only projection
+                probes = F.expr(_nearest_codes_expr("__qq__", model, probe))
+                qx = (
+                    queries.withColumn(
+                        "__qq__", quantize_vec(query_vec_col, pp["grid"])
+                    )
+                    .select(query_id_col, query_vec_col,
+                            F.explode(probes).alias("cell"))
                 )
-            elif spec["method"] == "pq":
-                from .operators.similarity import pq_adc_batch
-
-                out = pq_adc_batch(
-                    data, self._vindex_pq_model(index), queries,
-                    m=pp["m"], sub_dim=pp["sub_dim"], k=adc_k,
-                    query_id_col=query_id_col, query_vec_col=query_vec_col,
-                    grid=pp["grid"], exclude_self=exclude_self,
+                joined = qx.join(data, "cell")
+            else:
+                bq = lsh_bucketize_with_planes(
+                    queries, model, vec_col=query_vec_col, bucket_col="__b__"
                 )
-            else:  # ivfpq
-                from .operators.similarity import ivfpq_adc_batch
-
-                centroids, books = self._vindex_ivfpq_model(index)
-                out = ivfpq_adc_batch(
-                    data, centroids, books, queries,
-                    m=pp["m"], sub_dim=pp["sub_dim"],
-                    nprobe=int(nprobe) if nprobe is not None else pp["nprobe"],
-                    k=adc_k, query_id_col=query_id_col,
-                    query_vec_col=query_vec_col, grid=pp["grid"],
-                    exclude_self=exclude_self,
+                probe_arr = F.array(
+                    F.col("__b__"),
+                    *[
+                        F.col("__b__").bitwiseXOR(F.lit(1 << i))
+                        for i in range(probe)
+                    ],
                 )
-            if refine:
-                out = self._vindex_batch_refine(
-                    out, queries, spec, k, query_id_col, query_vec_col
+                qx = bq.select(
+                    query_id_col, query_vec_col,
+                    F.explode(probe_arr).alias("bucket"),
                 )
-            return self._vindex_expand_key(out, key_cols)
-        qv = F.col(query_vec_col).cast("array<double>")
-        if spec["method"] == "ivf":
-            from .operators.clustering import _int_dist_expr
-
-            grid = pp["grid"]
-            centroids = self._vindex_ivf_model(index)
-            qq = F.expr(
-                f"transform({query_vec_col}, "
-                f"x -> CAST(floor(double(x) * {grid} + 0.5) AS BIGINT))"
+                joined = qx.join(data, "bucket")
+            if exclude_self:
+                joined = joined.filter(F.col("vec_id") != F.col(query_id_col))
+            scored = joined.select(
+                query_id_col,
+                "vec_id",
+                cosine_similarity(
+                    F.col("embedding").cast("array<double>"),
+                    F.col(query_vec_col).cast("array<double>"),
+                ).alias("sim"),
             )
-            pairs = ", ".join(
-                f"struct({_int_dist_expr('__qq__', cv)} AS d, {cid} AS cid)"
-                for cid, cv in sorted(centroids.items())
+            out = top_k_per_group(
+                scored, [query_id_col],
+                [F.col("sim").desc(), F.col("vec_id").asc()], k,
             )
-            # nprobe nearest cells per query: array_sort on struct(d, cid)
-            # is the lexicographic (distance, cell) order the driver-side
-            # probe and the encode argmin use — one map-only projection
-            eff_nprobe = int(nprobe) if nprobe is not None else pp["nprobe"]
-            probes = F.expr(
-                f"transform(slice(array_sort(array({pairs})), 1, "
-                f"{eff_nprobe}), s -> s.cid)"
+        if refine:
+            out = self._vindex_batch_refine(
+                out, queries, spec, k, query_id_col, query_vec_col
             )
-            qx = (
-                queries.withColumn("__qq__", qq)
-                .select(query_id_col, query_vec_col,
-                        F.explode(probes).alias("cell"))
-            )
-            joined = qx.join(data, "cell")
-        else:  # lsh
-            from .operators.similarity import lsh_bucketize_with_planes
-
-            planes = self._vindex_lsh_model(index)
-            bq = lsh_bucketize_with_planes(
-                queries, planes, vec_col=query_vec_col, bucket_col="__b__"
-            )
-            mp = int(nprobe) if nprobe is not None else pp["multiprobe"]
-            probe_arr = F.array(
-                F.col("__b__"),
-                *[
-                    F.col("__b__").bitwiseXOR(F.lit(1 << i))
-                    for i in range(min(mp, pp["bits"]))
-                ],
-            )
-            qx = bq.select(
-                query_id_col, query_vec_col,
-                F.explode(probe_arr).alias("bucket"),
-            )
-            joined = qx.join(data, "bucket")
-        if exclude_self:
-            joined = joined.filter(F.col("vec_id") != F.col(query_id_col))
-        scored = joined.select(
-            query_id_col,
-            "vec_id",
-            cosine_similarity(
-                F.col("embedding").cast("array<double>"), qv
-            ).alias("sim"),
-        )
-        out = top_k_per_group(
-            scored, [query_id_col],
-            [F.col("sim").desc(), F.col("vec_id").asc()], k,
-        )
         return self._vindex_expand_key(out, key_cols)
 
     def dedup_embedding_batch(
@@ -2752,7 +2738,8 @@ class FeatureStore:
         prunes the encoded scan), so semantic dedup of a nightly batch
         prices like any other retrieval job."""
         spec = self._derived_spec("vector index", index)
-        if spec["method"] not in self._VINDEX_EXACT and refine is None:
+        encoded = self._derived_state("vector index", index)
+        if refine is None and "codes" in encoded.columns:
             raise FeatureValidationError(
                 f"dedup_embedding_batch('{index}'): method "
                 f"'{spec['method']}' ranks by integer quantized "
@@ -2777,16 +2764,19 @@ class FeatureStore:
         return self._derived_lag("vector index", index)[1] is not None
 
     def _vindex_encode_rows(
-        self, index: str, spec: dict, rows: DataFrame, context: str
+        self, spec: dict, model, rows: DataFrame, context: str
     ) -> DataFrame:
-        """Encode source rows against the STORED model — the shared
-        map-only dispatch behind refresh / reencode / the drift probe's
-        pending-delta arm. No fit, no state write; the model rides as
-        literals (k x dim scale, driver-resident)."""
+        """Encode source rows against the decoded ``model`` (see
+        :meth:`_vindex_model`) — the one map-only encode behind create /
+        refresh / reencode / the drift probe's pending-delta arm. No
+        fit, no state write; the model rides as literals (k x dim
+        scale, driver-resident)."""
         from .operators.similarity import (
             ivf_encode_int,
+            ivfpq_encode,
             lsh_bucketize_with_planes,
             pq_encode,
+            sq_encode,
         )
 
         src = self._vindex_guard_dim(
@@ -2800,28 +2790,18 @@ class FeatureStore:
         )
         pp = spec["params"]
         if spec["method"] == "ivf":
-            return ivf_encode_int(
-                src, self._vindex_ivf_model(index), grid=pp["grid"]
-            )
+            return ivf_encode_int(src, model, grid=pp["grid"])
         if spec["method"] == "pq":
             return pq_encode(
-                src, self._vindex_pq_model(index), m=pp["m"],
-                sub_dim=pp["sub_dim"], grid=pp["grid"],
+                src, model, m=pp["m"], sub_dim=pp["sub_dim"], grid=pp["grid"]
             )
         if spec["method"] == "ivfpq":
-            from .operators.similarity import ivfpq_encode
-
-            centroids, books = self._vindex_ivfpq_model(index)
             return ivfpq_encode(
-                src, centroids, books, m=pp["m"],
-                sub_dim=pp["sub_dim"], grid=pp["grid"],
+                src, *model, m=pp["m"], sub_dim=pp["sub_dim"], grid=pp["grid"]
             )
         if spec["method"] == "sq":
-            from .operators.similarity import sq_encode
-
-            mins, maxs = self._vindex_sq_model(index)
-            return sq_encode(src, mins, maxs)
-        return lsh_bucketize_with_planes(src, self._vindex_lsh_model(index))
+            return sq_encode(src, *model)
+        return lsh_bucketize_with_planes(src, model)
 
     @staticmethod
     def _vindex_hist_key(method: str):
@@ -2895,13 +2875,22 @@ class FeatureStore:
             key.alias("cell")
         )
         if include_pending and not spec.get("rewritten"):
-            delta = self._current(spec["src"]).filter(
-                F.col(ROW_ID_COL) > spec["watermark"]
+            # only the source fragments that can hold rows above the
+            # watermark are read, as a refresh would fold them
+            src = spec["src"]
+            self._require_table(src)
+            delta = self._backend.read_delta(
+                src, self._backend.meta(src).version, spec["watermark"]
             )
-            enc = self._vindex_encode_rows(
-                index, spec, delta, f"vector_index_drift('{index}')"
-            )
-            cur_keys = cur_keys.unionByName(enc.select(key.alias("cell")))
+            if delta is not None:
+                enc = self._vindex_encode_rows(
+                    spec, self._vindex_model(index),
+                    delta.filter(F.col(ROW_ID_COL) > spec["watermark"]),
+                    f"vector_index_drift('{index}')",
+                )
+                cur_keys = cur_keys.unionByName(
+                    enc.select(key.alias("cell"))
+                )
         cur = cur_keys.groupBy("cell").agg(
             F.count("*").alias("__n_cur__")
         )
@@ -2998,52 +2987,35 @@ class FeatureStore:
             ),
         )
 
-    def _vindex_model_rows(self, index: str):
+    def _vindex_model(self, index: str):
+        """The stored model of ``index``, decoded for its method — ivf:
+        centroids {cell: ints}; pq: codebooks {subspace: {code: ints}};
+        ivfpq: (centroids, codebooks) from the one combined table
+        (part='ivf' / part='pq' rows); lsh: the hyperplanes; sq: (mins,
+        maxs). One collect of the k x dim-scale model table."""
         spec = self._vector_indexes[index]
         mname = index + self._VINDEX_MODEL_SUFFIX
         ver = spec.get("model_version") or self._backend.versions(mname)[-1]
-        return self._backend.read_version(mname, ver).collect()
-
-    def _vindex_ivf_model(self, index: str) -> dict[int, list[int]]:
-        return {
-            int(r["cell"]): [int(x) for x in r["cv"]]
-            for r in self._vindex_model_rows(index)
-        }
-
-    def _vindex_pq_model(self, index: str) -> dict[int, dict[int, list[int]]]:
-        books: dict[int, dict[int, list[int]]] = {}
-        for r in self._vindex_model_rows(index):
-            books.setdefault(int(r["subspace"]), {})[int(r["code"])] = [
-                int(x) for x in r["cv"]
-            ]
-        return books
-
-    def _vindex_lsh_model(self, index: str) -> list[list[float]]:
-        rows = sorted(
-            self._vindex_model_rows(index), key=lambda r: int(r["plane_id"])
-        )
-        return [[float(x) for x in r["plane"]] for r in rows]
-
-    def _vindex_sq_model(self, index: str) -> tuple[list[float], list[float]]:
-        rows = sorted(self._vindex_model_rows(index), key=lambda r: int(r["i"]))
-        return ([float(r["vmin"]) for r in rows],
-                [float(r["vmax"]) for r in rows])
-
-    def _vindex_ivfpq_model(
-        self, index: str
-    ) -> tuple[dict[int, list[int]], dict[int, dict[int, list[int]]]]:
-        """(coarse centroids, residual codebooks) from the one combined
-        model table (part='ivf' rows / part='pq' rows)."""
+        rows = self._backend.read_version(mname, ver).collect()
+        method = spec["method"]
+        if method == "lsh":
+            rows.sort(key=lambda r: int(r["plane_id"]))
+            return [[float(x) for x in r["plane"]] for r in rows]
+        if method == "sq":
+            rows.sort(key=lambda r: int(r["i"]))
+            return ([float(r["vmin"]) for r in rows],
+                    [float(r["vmax"]) for r in rows])
         centroids: dict[int, list[int]] = {}
         books: dict[int, dict[int, list[int]]] = {}
-        for r in self._vindex_model_rows(index):
-            if r["part"] == "ivf":
-                centroids[int(r["cell"])] = [int(x) for x in r["cv"]]
+        for r in rows:
+            cv = [int(x) for x in r["cv"]]
+            if method == "ivf" or (method == "ivfpq" and r["part"] == "ivf"):
+                centroids[int(r["cell"])] = cv
             else:
-                books.setdefault(int(r["subspace"]), {})[int(r["code"])] = [
-                    int(x) for x in r["cv"]
-                ]
-        return centroids, books
+                books.setdefault(int(r["subspace"]), {})[int(r["code"])] = cv
+        if method == "ivf":
+            return centroids
+        return books if method == "pq" else (centroids, books)
 
     # ------------------------------------------------------------------ #
     # persisted dedup-signature indexes (sign once, dedup every increment)
@@ -5933,8 +5905,8 @@ class FeatureStore:
                 f"DataFrame is missing required columns: {sorted(missing)} ({context})"
             )
         # history writers refuse an empty input from the write's observed
-        # row count instead (_publish_version); spines, and appends and
-        # upserts that create their table, keep this limit-1 pre-check.
+        # row count instead (_publish_version); spines keep this limit-1
+        # pre-check.
         if check_empty and df.isEmpty():
             raise FeatureValidationError(f"DataFrame is empty ({context})")
 

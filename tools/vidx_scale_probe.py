@@ -108,7 +108,7 @@ def cells_probe(args: list[str]) -> None:
             ivf_probe_cells_int,
         )
 
-        probes = ivf_probe_cells_int(fs._vindex_ivf_model("ann"), qvec, 2)
+        probes = ivf_probe_cells_int(fs._vindex_model("ann"), qvec, 2)
         probed = (
             fs._derived_state("vector index", "ann")
             .filter(F.col("cell").isin(probes))

@@ -125,7 +125,7 @@ def batch_probe(spark, skewed, uniform, qvec) -> None:
                 ivf_probe_cells_int as probe_cells,
             )
 
-            probes = probe_cells(fs._vindex_ivf_model("ann"), qvec, 2)
+            probes = probe_cells(fs._vindex_model("ann"), qvec, 2)
             pairs = (
                 fs._derived_state("vector index", "ann")
                 .filter(F.col("cell").isin(probes))
